@@ -8,7 +8,12 @@ import graft.pipeline.Stages
   * the reference driver (App.java:39-156, flags -i/-k/-m/-o collapsed
   * into positional args; one process, no per-stage HDFS round trips).
   *
-  * Usage: PipelineMain <reviews.jsonl> <k> <maxIter> <seed> <outDir> [parquet|avro]
+  * Usage: PipelineMain <reviews.jsonl> <k> <maxIter> <seed> <outDir>
+  *          [parquet|avro] [<stopwords.txt> <adj.txt>]
+  *
+  * The dictionary files hold whitespace-separated words (the reference's
+  * stopwords_en.txt and adj.txt); without them the run uses a 10-word
+  * demo dictionary.
   */
 object PipelineMain {
   def main(args: Array[String]): Unit = {
@@ -26,10 +31,19 @@ object PipelineMain {
 
     // Dictionaries: the reference ships adj.txt/stopwords_en.txt as side
     // files (MapperExtractTransform.java:44-62); here they are params of
-    // the library — literals for the demo run.
-    val stop = Seq("a", "the", "and", "is", "of", "to", "in", "it", "this", "that")
-    val dict = Seq("great", "good", "fast", "slow", "boring", "bad", "wonderful",
-      "small", "big", "nice")
+    // the library — read from the optional files, else demo literals.
+    def words(path: String): Seq[String] = {
+      val src = scala.io.Source.fromFile(path, "UTF-8")
+      try src.mkString.split("\\s+").filter(_.nonEmpty).toSeq finally src.close()
+    }
+    val (stop, dict) = args.drop(6) match {
+      case Array(stopPath, adjPath) => (words(stopPath), words(adjPath))
+      case Array() =>
+        (Seq("a", "the", "and", "is", "of", "to", "in", "it", "this", "that"),
+          Seq("great", "good", "fast", "slow", "boring", "bad", "wonderful",
+            "small", "big", "nice"))
+      case _ => sys.error("dictionaries need both <stopwords.txt> and <adj.txt>")
+    }
 
     def sink(df: org.apache.spark.sql.DataFrame, path: String, name: String): Unit =
       format match {

@@ -45,6 +45,19 @@ private[graft] object BlockPairKernels {
     StructField("id2", LongType, nullable = false),
     StructField("cos", DoubleType, nullable = false)))
 
+  /** Block column type the kernels decode: array<struct<id:long, u:array<double>>>. */
+  private val blockType = ArrayType(StructType(Seq(
+    StructField("id", LongType), StructField("u", ArrayType(DoubleType)))))
+
+  private def isBlock(t: DataType): Boolean = t match {
+    case ArrayType(StructType(fs), _) if fs.length == 2 =>
+      fs(0).dataType == LongType &&
+        (fs(1).dataType match {
+          case ArrayType(DoubleType, _) => true; case _ => false
+        })
+    case _ => false
+  }
+
   private val knnSchema = StructType(Seq(
     StructField("src", LongType, nullable = false),
     StructField("dst", LongType, nullable = false),
@@ -64,25 +77,14 @@ private[graft] object BlockPairKernels {
         newChildren: IndexedSeq[Expression]): Expression =
       copy(newChildren(0), newChildren(1), newChildren(2), newChildren(3))
     override def elementSchema: StructType = pairSchema
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      val vecT = ArrayType(StructType(Seq(
-        StructField("id", LongType), StructField("u", ArrayType(DoubleType)))))
-      def okVec(t: DataType) = t match {
-        case ArrayType(StructType(fs), _) if fs.length == 2 =>
-          fs(0).dataType == LongType &&
-            (fs(1).dataType match {
-              case ArrayType(DoubleType, _) => true; case _ => false
-            })
-        case _ => false
-      }
-      if (okVec(v1.dataType) && okVec(v2.dataType) &&
+    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+      if (isBlock(v1.dataType) && isBlock(v2.dataType) &&
           same.dataType == BooleanType && minCos.dataType == DoubleType)
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       else
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"cos_block_pairs expects ($vecT, $vecT, boolean, double); got " +
+          s"cos_block_pairs expects ($blockType, $blockType, boolean, double); got " +
             s"(${v1.dataType}, ${v2.dataType}, ${same.dataType}, ${minCos.dataType})")
-    }
 
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val a1 = v1.eval(input); val a2 = v2.eval(input)
@@ -142,6 +144,13 @@ private[graft] object BlockPairKernels {
         newChildren: IndexedSeq[Expression]): Expression =
       copy(newChildren(0), newChildren(1), newChildren(2))
     override def elementSchema: StructType = knnSchema
+    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+      if (isBlock(v1.dataType) && isBlock(v2.dataType) && same.dataType == BooleanType)
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      else
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"knn_block_topk expects ($blockType, $blockType, boolean); got " +
+            s"(${v1.dataType}, ${v2.dataType}, ${same.dataType})")
 
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val a1 = v1.eval(input); val a2 = v2.eval(input)

@@ -1,17 +1,20 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Lloyd's K-Means re-expressed Spark-first.
   *
   * Reference: clustering/ — one MapReduce job per iteration with
   * HDFS-materialized centroids (App.java:110-149). Here each iteration
-  * is one declarative plan over a persisted points DataFrame; the k
-  * centroids live as a driver array, shipped inside the serialized plan
-  * as a codegen reference object (k×dim doubles — tiny at any corpus
-  * scale) and resolved map-side with zero shuffle.
+  * is one aggregation over a persisted points DataFrame, collected once
+  * ([[roundStats]]); the k centroids live as a driver array, shipped
+  * inside the serialized plan as a codegen reference object (k×dim
+  * doubles — tiny at any corpus scale) and resolved map-side with zero
+  * shuffle.
   *
   *  - distance: full symmetric Euclidean over array vectors
   *    (reference iterates only the centroid's keys,
@@ -102,7 +105,66 @@ object KMeansOps {
       centroids: Array[(Long, Array[Double])]): DataFrame =
     assign(points, idCol, vecCol, centroids)
 
-  /** Result of a full seeded K-Means run. */
+  /** Per-cluster coordinate sums, member count and Σ dist² of `dim`-wide
+    * vectors in one buffer: `[0, dim)` = Σ xᵢ, `[dim]` = n,
+    * `[dim + 1]` = Σ dist². Sums run in row order within a partition and
+    * partials merge into a zero buffer — the same IEEE additions as
+    * Spark's `avg`/`sum` buffers in [[newCentroids]] and [[sse]].
+    */
+  private final class RoundSums(dim: Int)
+      extends Aggregator[(Array[Double], Double), Array[Double], Array[Double]] {
+    def zero: Array[Double] = new Array[Double](dim + 2)
+    def reduce(b: Array[Double], in: (Array[Double], Double)): Array[Double] = {
+      val v = in._1
+      require(v.length == dim, s"vector length ${v.length} != centroid dim $dim")
+      var i = 0
+      while (i < dim) { b(i) += v(i); i += 1 }
+      b(dim) += 1.0
+      b(dim + 1) += in._2 * in._2
+      b
+    }
+    def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
+      var i = 0
+      while (i < a.length) { a(i) += b(i); i += 1 }
+      a
+    }
+    def finish(b: Array[Double]): Array[Double] = b
+    def bufferEncoder: Encoder[Array[Double]] = ExpressionEncoder[Array[Double]]()
+    def outputEncoder: Encoder[Array[Double]] = ExpressionEncoder[Array[Double]]()
+  }
+
+  /** One Lloyd round's statistics from an [[assign]] output, as ONE
+    * aggregation collected once: per cluster, the new centroid (the
+    * per-dimension mean, HALF_UP-rounded to `scale` dp) and the SSE.
+    * Values equal [[newCentroids]] and [[sse]] over the same assignment
+    * (KMeansSpec asserts it); those two need two plans and two collects,
+    * and the exploded mean shuffles clusters × dim rows per partition
+    * where this shuffles one buffer per cluster.
+    */
+  def roundStats(
+      assigned: DataFrame, vecCol: String, dim: Int,
+      scale: Int = 10): Array[(Long, Array[Double], Double)] = {
+    val sums = udaf(new RoundSums(dim),
+      Encoders.tuple(ExpressionEncoder[Array[Double]](), Encoders.scalaDouble))
+    assigned.groupBy(col("cluster"))
+      .agg(sums(col(vecCol), col("dist")).as("b"))
+      .collect()
+      .map { r =>
+        val b = r.getSeq[Double](1).toArray
+        val n = b(dim)
+        // Spark's round(avg(x), scale): sum / count, then BigDecimal HALF_UP
+        val mean = Array.tabulate(dim)(i =>
+          BigDecimal(b(i) / n).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        (r.getLong(0), mean, b(dim + 1))
+      }
+  }
+
+  /** Result of a full seeded K-Means run. `assignments` is the last
+    * round's [[assign]] plan, lazy over points that [[lloydInit]] has
+    * already unpersisted: each action on it recomputes the points'
+    * lineage once (one narrow pass when that lineage is narrow, as in
+    * the pipeline's stage 3).
+    */
   final case class KMeansResult(
       centroids: Array[(Long, Array[Double])],
       assignments: DataFrame,
@@ -133,7 +195,12 @@ object KMeansOps {
   def lloydInit(
       points: DataFrame, idCol: String, vecCol: String,
       init: Array[(Long, Array[Double])], maxIter: Int, scale: Int = 10): KMeansResult = {
-    val pts = points.select(col(idCol), asDouble(col(vecCol)).as(vecCol)).persist()
+    val vec = points.schema(vecCol).dataType match {
+      case ArrayType(DoubleType, _) => col(vecCol)
+      case _ => asDouble(col(vecCol))
+    }
+    val pts = points.select(col(idCol), vec.as(vecCol)).persist()
+    val dim = init.head._2.length
     try {
       var centroids = init
       def rounded(cs: Array[(Long, Array[Double])]) =
@@ -146,12 +213,9 @@ object KMeansOps {
       var lastAssign: DataFrame = null
       while (it < maxIter && !converged) {
         val assigned = iterate(pts, idCol, vecCol, centroids)
-        val stats = newCentroids(assigned, vecCol, scale)
-          .groupBy("cluster").agg(sort_array(collect_list(struct(col("dim"), col("c")))).as("v"))
-          .collect()
-          .map(r => r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1).map(_.getDouble(1)).toArray)
-        val sseMap = sse(assigned).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        history :+= sseMap
+        val round = roundStats(assigned, vecCol, dim, scale)
+        val stats = round.map { case (cid, c, _) => cid -> c }
+        history :+= round.map { case (cid, _, e) => cid -> e }.toMap
         // Exact full-map equality, as the reference (JobClustering.java:210,
         // 227-232): a vanished cluster keeps maps unequal → keeps iterating.
         converged = rounded(stats) == rounded(centroids)

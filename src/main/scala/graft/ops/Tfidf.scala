@@ -20,7 +20,12 @@ import org.apache.spark.sql.functions._
   * `(id, word, …)` — columnar, shuffle-friendly, O(nnz) instead of the
   * reference's dense O(docs×vocab) maps (its biggest scale bug, see
   * SURVEY.md §7.4). A dense variant is provided for reference fidelity;
-  * it is a cross join against the (small, broadcast) vocabulary.
+  * it is a cross join against the (small, broadcast) vocabulary. The
+  * pipeline builds its dense vectors with the per-row
+  * [[graft.functions.DenseTfidf]] expression instead (no cross join, no
+  * shuffle, one `array<double>` per document); the composed dense form
+  * stays as the registry's q_tfidf plan and as that expression's
+  * differential oracle.
   *
   * All operators are pure column expressions — whole-stage codegen end
   * to end, partial aggregation map-side, no UDFs.
@@ -43,6 +48,12 @@ object Tfidf {
     */
   def withIdf(dfreq: DataFrame, n: Long): DataFrame =
     dfreq.withColumn("idf", log((lit(n) + lit(1.0)) / (col("df") + lit(1.0))) + lit(1.0))
+
+  /** The same smoothed IDF on the driver, bit for bit: Spark's `log` is
+    * `StrictMath.log` (`java.lang.Math.log` may differ in the last ulp),
+    * and the operands are the same doubles. df = 0 gives ln(N+1)+1.
+    */
+  def idfOf(n: Long, df: Long): Double = StrictMath.log((n + 1.0) / (df + 1.0)) + 1.0
 
   /** (id, len, word, cnt): per-document term counts plus doc length.
     * The reference computes this per-row with a Java stream groupingBy
@@ -93,7 +104,9 @@ object Tfidf {
     * `vocabIdf` is a (word, idf) table — typically [[docFreq]]+[[withIdf]]
     * output, or an external dictionary. It is broadcast: vocabularies are
     * small relative to the corpus. `dense=true` reproduces the
-    * reference's dense-over-vocabulary output (zero weights included).
+    * reference's dense-over-vocabulary output (zero weights included)
+    * as docs × vocab rows; [[graft.functions.DenseTfidf]] computes the
+    * same weights as one vector per document.
     */
   def tfidfVectors(
       docs: DataFrame, idCol: String, tokensCol: String,

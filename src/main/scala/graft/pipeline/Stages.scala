@@ -7,11 +7,18 @@ import org.apache.spark.sql.functions._
 import graft.ops._
 
 /** The reference's full 3-stage pipeline (App.java:39-156), wired
-  * end-to-end on Spark. One job per stage instead of five MapReduce
-  * jobs; no HDFS round-trips between stages — DataFrames flow in
-  * memory, with Parquet at the outer boundaries (the environment ships
+  * end-to-end on Spark. The reference runs five MapReduce jobs with an
+  * HDFS round trip after each; here DataFrames flow in memory between
+  * stages, with Parquet at the outer boundaries (the environment ships
   * no spark-avro module; the reference's Avro container I/O maps to
   * `format("avro")` where that module is on the classpath).
+  *
+  * A stage is a few Spark jobs, not one: stage 1 ranges and numbers the
+  * documents, stage 2 counts them, collects the vocabulary-sized df
+  * table and draws the k centroids, and stage 3 runs one aggregation per
+  * Lloyd round. PipelineSpec pins these counts. Each document's TF-IDF
+  * vector is one narrow per-row expression ([[graft.functions.DenseTfidf]]),
+  * so the sinks and every Lloyd round read it without a shuffle.
   */
 object Stages {
 
@@ -54,54 +61,57 @@ object Stages {
       col("adjectiveWord"), col("reviewText"))
   }
 
-  /** Stage-2 output bundle: the dense TF-IDF matrix in exploded form,
-    * the IDF model, and the k seeded initial centroids (side-output
-    * analog of ReducerExtractFeatureTFIDF.java:85-88).
+  /** Stage-2 output bundle: the dense TF-IDF vectors `(id, v)` with
+    * `v` an `array<double>` over `vocab`, the same matrix in exploded
+    * form `(id, word, weight)` (the reference's finalFeature rows), the
+    * IDF model `(word, df, idf)` as a local relation, and the k seeded
+    * initial centroids (side-output analog of
+    * ReducerExtractFeatureTFIDF.java:85-88). `vectors` and `tfidf` are
+    * narrow over the stage-1 frame: each action on them recomputes the
+    * vectors from the tokens, with no shuffle.
     */
-  final case class Stage2Out(tfidf: DataFrame, idf: DataFrame,
+  final case class Stage2Out(vectors: DataFrame, tfidf: DataFrame, idf: DataFrame,
       centroids: Array[(Long, Array[Double])], vocab: Seq[String])
 
   /** Stage 2 — feature extraction (SURVEY §3.2; JobExtractFeature):
     * document frequency → smoothed IDF over the dictionary vocabulary
     * (words never seen get the df=0 smoothing ln(N+1)+1,
     * MapperExtractFeatureTFIDF.java:80-84) → dense L2-normalized TF-IDF
-    * (round 6) → seeded random k docs become centroids 0..k-1.
+    * (round 6) over the sorted vocabulary → seeded random k docs become
+    * centroids 0..k-1.
+    *
+    * The df table is vocabulary-sized, so it is collected once and every
+    * dictionary word's idf comes from [[Tfidf.idfOf]], observed or not.
     */
   def stage2(stage1Out: DataFrame, dict: Seq[String], k: Int, seed: Long): Stage2Out = {
     val spark = stage1Out.sparkSession
     import spark.implicits._
     val docs = stage1Out.select(col("id"), col("adjectiveWord").as("toks"))
     val n = docs.count()
-    // IDF over the *dictionary* vocabulary, not just observed words
-    val observed = Tfidf.withIdf(Tfidf.docFreq(docs, "id", "toks"), n)
-    val idf = dict.toDF("word")
-      .join(observed, Seq("word"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .withColumn("idf", coalesce(col("idf"), lit(math.log(n + 1.0) + 1.0)))
-    val tfidf = Tfidf.tfidfVectors(docs, "id", "toks", idf, scale = 6, dense = true)
+    val vocab = dict.distinct.sorted
+    val observed = Tfidf.docFreq(docs, "id", "toks").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val df = vocab.map(w => observed.getOrElse(w, 0L))
+    val idfs = df.map(Tfidf.idfOf(n, _))
+    val idf = vocab.lazyZip(df).lazyZip(idfs).toSeq.toDF("word", "df", "idf")
+    val vectors = docs.select(col("id"),
+      graft.functions.DenseTfidf.dense_tfidf(col("toks"), vocab, idfs).as("v"))
+    val tfidf = vectors
+      .select(col("id"), posexplode(col("v")).as(Seq("pos", "weight")))
+      .select(col("id"), lit(vocab.toArray)(col("pos")).as("word"), col("weight"))
     // centroid side-output: k seeded docs, re-keyed 0..k-1
-    val sampled = IdOps.sampleK(tfidf.select(col("id")).distinct(), k, seed, "cidx")
-    val vocab = dict.sorted
-    val centroidRows = tfidf.join(sampled, Seq("id"))
-      .groupBy(col("cidx"))
-      .agg(map_from_entries(collect_list(struct(col("word"), col("weight")))).as("m"))
+    val sampled = IdOps.sampleK(vectors.select(col("id")), k, seed, "cidx")
+    val centroidRows = vectors.join(broadcast(sampled), Seq("id"))
+      .select(col("cidx").cast("long"), col("v"))
       .collect()
-      .map { r =>
-        val m = r.getMap[String, Double](1)
-        r.getInt(0).toLong -> vocab.map(w => m.getOrElse(w, 0.0)).toArray
-      }
-    Stage2Out(tfidf, idf, centroidRows, vocab)
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+    Stage2Out(vectors, tfidf, idf, centroidRows, vocab)
   }
 
   /** Stage 3 — K-Means (SURVEY §3.3; JobClustering): Lloyd loop from
-    * the stage-2 centroids over the dense TF-IDF vectors (as arrays in
-    * vocab order), converging on exact round-10 equality.
+    * the stage-2 centroids over the dense TF-IDF vectors, converging on
+    * exact round-10 equality; one aggregation per round.
     */
-  def stage3(s2: Stage2Out, maxIter: Int): KMeansOps.KMeansResult = {
-    val asArray = s2.tfidf
-      .groupBy(col("id"))
-      .agg(array_sort(collect_list(struct(col("word"), col("weight")))).as("wv"))
-      .select(col("id"), transform(col("wv"), _.getField("weight")).as("v"))
-    KMeansOps.lloydInit(asArray, "id", "v", s2.centroids, maxIter)
-  }
+  def stage3(s2: Stage2Out, maxIter: Int): KMeansOps.KMeansResult =
+    KMeansOps.lloydInit(s2.vectors, "id", "v", s2.centroids, maxIter)
 }

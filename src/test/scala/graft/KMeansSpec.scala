@@ -52,4 +52,37 @@ class KMeansSpec extends AnyFunSuite {
     assert(norms.nonEmpty)
     norms.foreach(n2 => assert(math.abs(n2 - 1.0) < 1e-3, s"norm² = $n2"))
   }
+
+  test("folded Lloyd round == newCentroids + sse: same centroids, SSE and iteration count") {
+    val init = points.filter($"vec_id" < 5).orderBy("vec_id").collect()
+      .zipWithIndex.map { case (r, i) => i.toLong -> r.getSeq[Double](1).toArray }
+    def bits(v: Array[Double]) = v.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    def rounded(cs: Array[(Long, Array[Double])]) =
+      cs.map { case (id, v) => id -> v.map(x => BigDecimal(x)
+        .setScale(10, BigDecimal.RoundingMode.HALF_UP).toDouble).toSeq }.toMap
+    // the two-plan round: exploded per-dimension means, then a separate SSE
+    var cs = init
+    var it = 0
+    var converged = false
+    var history = Vector.empty[Map[Long, Double]]
+    while (it < 10 && !converged) {
+      val a = KMeansOps.assign(points, "vec_id", "v", cs)
+      val next = KMeansOps.newCentroids(a, "v").as[(Long, Int, Double)].collect()
+        .groupBy(_._1).map { case (c, rs) => c -> rs.sortBy(_._2).map(_._3) }.toArray
+      val sse = KMeansOps.sse(a).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      // the folded round over the same assignment
+      val folded = KMeansOps.roundStats(a, "v", dim = init.head._2.length)
+      assert(folded.map(f => f._1 -> bits(f._2)).toMap == next.map(n => n._1 -> bits(n._2)).toMap)
+      assert(folded.map(f => f._1 -> f._3).toMap == sse)
+      history :+= sse
+      converged = rounded(next) == rounded(cs)
+      cs = next
+      it += 1
+    }
+    val res = KMeansOps.lloydInit(points, "vec_id", "v", init, maxIter = 10)
+    assert(res.iterations == it && res.converged == converged)
+    assert(it > 1, "the fixture should take more than one round")
+    assert(res.sseHistory == history)
+    assert(res.centroids.map(c => c._1 -> bits(c._2)).toMap == cs.map(c => c._1 -> bits(c._2)).toMap)
+  }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ops.Tfidf
 import graft.pipeline.Stages
 
 /** Golden mini-corpus test (FIXTURES.md §1): hand-computed expected
@@ -18,7 +19,33 @@ class PipelineSpec extends AnyFunSuite {
 
   val Dict = Seq("great", "fast", "slow", "boring")
   val Stop = Seq("a", "the", "and")
+  // Spark jobs pinned by the job-count test
+  val Stage2Jobs = 6
+  val JobsPerRound = 2
   lazy val jsonl = getClass.getResource("/reviews.jsonl").getPath
+
+  /** Runs `body` and counts the Spark jobs it started, scoped by job
+    * group so concurrent work in the session is not counted. */
+  def countJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"count-jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, group)
+    try {
+      val r = body
+      org.apache.spark.TestBus.drain(sc)
+      (r, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
   lazy val s1 = Stages.stage1(spark, jsonl, Stop, Dict).persist()
 
   test("stage1: header + presence filters, asin sort, sequential ids, token goldens") {
@@ -76,5 +103,58 @@ class PipelineSpec extends AnyFunSuite {
     assert(res.centroids.length <= 2)
     val totalSse = res.sseHistory.map(_.values.sum)
     totalSse.sliding(2).foreach { case Seq(a, b) => assert(b <= a + 1e-9) }
+  }
+
+  test("stage2: every dictionary word's idf is one formula; df=0 equals Spark's ln(N+1)+1") {
+    // "zesty" is in the dictionary but in no document: the df=0 backfill
+    val dict = Dict :+ "zesty"
+    val s2 = Stages.stage2(s1, dict, k = 2, seed = 7L)
+    val got = s2.idf.select($"word", $"df", $"idf").as[(String, Long, Double)].collect()
+    assert(got.map(_._1).sorted.toSeq == dict.sorted)
+    val zesty = got.find(_._1 == "zesty").get
+    assert(zesty._2 == 0L)
+    // the same doubles Spark's log computes for every observed word
+    val viaSpark = Tfidf.withIdf(got.map(r => (r._1, r._2)).toSeq.toDF("word", "df"), 4)
+      .as[(String, Long, Double)].collect().map(r => r._1 -> r._3).toMap
+    got.foreach { case (w, df, idf) =>
+      assert(java.lang.Double.doubleToRawLongBits(idf) ==
+        java.lang.Double.doubleToRawLongBits(viaSpark(w)), s"idf($w)")
+      assert(idf == Tfidf.idfOf(4, df))
+    }
+    assert(zesty._3 == StrictMath.log(4 + 1.0) + 1.0)
+    // the unobserved word is a zero column of the dense vectors
+    val j = s2.vocab.indexOf("zesty")
+    assert(s2.vectors.as[(Long, Seq[Double])].collect().forall(_._2(j) == 0.0))
+  }
+
+  test("stage2 vectors: one array per doc over the sorted vocab == the exploded tfidf rows") {
+    val s2 = Stages.stage2(s1, Dict, k = 2, seed = 7L)
+    assert(s2.vocab == Dict.sorted)
+    val vecs = s2.vectors.as[(Long, Seq[Double])].collect().toMap
+    val rows = s2.tfidf.as[(Long, String, Double)].collect()
+      .groupBy(_._1).map { case (id, rs) => id -> rs.sortBy(_._2).map(_._3).toSeq }
+    assert(vecs == rows)
+    // centroids are drawn from the vectors, deterministically
+    val again = Stages.stage2(s1, Dict, k = 2, seed = 7L).centroids
+    assert(s2.centroids.map(c => c._1 -> c._2.toSeq).toMap == again.map(c => c._1 -> c._2.toSeq).toMap)
+    s2.centroids.foreach { case (_, v) => assert(vecs.values.exists(_ == v.toSeq)) }
+  }
+
+  test("job counts: stage 2 and each Lloyd round run a pinned number of Spark jobs") {
+    s1.count()
+    val (s2, stage2Jobs) = countJobs(Stages.stage2(s1, Dict, k = 2, seed = 7L))
+    // the doc count, the df table's map stage and collect, and the
+    // centroid draw (seeded top-k sample, numbering, broadcast join)
+    assert(stage2Jobs == Stage2Jobs, s"stage 2 ran $stage2Jobs jobs")
+    val (res, stage3Jobs) = countJobs(Stages.stage3(s2, maxIter = 10))
+    // one job caches the points, then one aggregation per round: its map
+    // stage and its collect
+    assert(stage3Jobs == 1 + JobsPerRound * res.iterations,
+      s"stage 3 ran $stage3Jobs jobs over ${res.iterations} rounds")
+    // the sinks read the vectors narrowly: one job each
+    val (_, sinkJobs) = countJobs {
+      s2.tfidf.collect(); s2.idf.collect(); res.assignments.collect()
+    }
+    assert(sinkJobs == 2, s"sinks ran $sinkJobs jobs")
   }
 }

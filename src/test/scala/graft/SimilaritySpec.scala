@@ -771,4 +771,17 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got.map(_._2).sum == 4L, "every routed vector homes exactly once")
     assert(got.map(_._3).sum == 8L, "every routed vector probes exactly nprobe cells")
   }
+
+  test("knn_block_topk rejects a wrong input schema at analysis time") {
+    import graft.functions.BlockPairKernels.knn_block_topk
+    val df = Seq((Seq(1.0, 2.0), Seq(3.0, 4.0))).toDF("a", "b")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      df.select(knn_block_topk($"a", $"b", lit(true), 3, 6)))
+    assert(e.getMessage.contains("knn_block_topk expects"), e.getMessage)
+    val blocks = Seq(Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)))).toDF("vs")
+      .select($"vs".cast("array<struct<id:bigint,u:array<double>>>").as("vs"))
+    assert(intercept[org.apache.spark.sql.AnalysisException](
+      blocks.select(knn_block_topk($"vs", $"vs", lit(1), 3, 6))).getMessage.contains("knn_block_topk"))
+    assert(blocks.select(knn_block_topk($"vs", $"vs", lit(true), 1, 6)).count() == 2)
+  }
 }
