@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
 
@@ -10,14 +9,7 @@ import graft.ops.Dedup
 object MicroBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", Bench.scratchDir())
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(4))
     import graft.ops.TextOps
     def docsTokens = Tables.table(spark, sfDir, "documents")
       .select(col("doc_id"),

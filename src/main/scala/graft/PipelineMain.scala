@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.Stages
 
 /** CLI entrypoint for the full 3-stage pipeline — the Spark rebuild of
@@ -20,14 +18,7 @@ object PipelineMain {
     val Array(input, kS, mS, seedS, outDir) = args.take(5)
     val format = args.lift(5).getOrElse("parquet")
     val (k, maxIter, seed) = (kS.toInt, mS.toInt, seedS.toLong)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(4))
 
     // Dictionaries: the reference ships adj.txt/stopwords_en.txt as side
     // files (MapperExtractTransform.java:44-62); here they are params of

@@ -24,7 +24,7 @@ object SparkEntry {
     * loop (driver-convergence peels, fixed-round EM/Newton solves,
     * multi-micro-batch streaming state) — declared HERE, next to the
     * query, so a rename or a new iterative entry cannot silently
-    * desynchronize from the bench's sacrifice exemption (review r17);
+    * desynchronize from the bench's single-pass exemption;
     * Bench derives its DeclaredIterative set from this flag.
     */
   final case class Q(

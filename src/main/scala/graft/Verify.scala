@@ -14,27 +14,16 @@ import java.nio.file.{Files, Paths}
   */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (debug aid)
+    // optional 3rd arg: comma-separated query-name filter — the fast
+    // inner loop when adding one query
     val (sfDirOrig, outDir, only) = args match {
       case Array(sf, out)    => (sf, out, None)
       case Array(sf, out, f) => (sf, out, Some(f.split(",").toSet))
     }
     // tmpfs input copy — one slow disk pass, RAM-speed scans after (Scratch)
     val sfDir = Scratch.localize(sfDirOrig)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // RAM-backed shuffle scratch — see Scratch
-      .config("spark.local.dir", Bench.scratchDir())
-      // bucketed-table queries (q_bucket_join) need a catalog location
-      .config("spark.sql.warehouse.dir", Scratch.dir("graft-wh"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(
+      GraftSession.cpus(math.min(32, Runtime.getRuntime.availableProcessors())))
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

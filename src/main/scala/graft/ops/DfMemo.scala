@@ -95,6 +95,18 @@ private[graft] object DfMemo {
     protectedIds.asScala.toSet
   }
 
+  /** The per-query cache release: unpersist every RDD `sc` has pinned
+    * since the `before` snapshot of `sc.getPersistentRDDs.keySet`,
+    * except [[protectedRddIds]]. Snapshot-scoped so it never touches
+    * pins that predate the query. */
+  def releaseSince(
+      sc: org.apache.spark.SparkContext, before: collection.Set[Int]): Unit = {
+    val prot = protectedRddIds
+    sc.getPersistentRDDs
+      .filterNot { case (id, _) => before(id) || prot(id) }
+      .values.foreach(_.unpersist(blocking = false))
+  }
+
   /** Stable stamp of a frame's backing files, or None for in-memory
     * frames (which must never be memoized — no files, no identity). */
   private[graft] def stampedFiles(df: DataFrame): Option[String] = {

@@ -66,32 +66,14 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("vec_id"), col("cos"))
   }
 
-  /** All corpus pairs with cosine ≥ minCos, optionally equality-blocked
-    * (e.g. by a class/label/shard column). Output: (id1, id2, cos).
-    */
-  def cosinePairs(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      minCos: Double, blockCol: Option[String] = None): DataFrame = {
-    val c = withUnitVec(
-      corpus.select(col(idCol).as("id") +: blockCol.map(col).toSeq: _*)
-        .join(corpus.select(col(idCol).as("id"),
-          KMeansOps.asDouble(col(vecCol)).as("v")), Seq("id")),
-      "v", "u").drop("v")
-    val cond = blockCol.map(b => col(s"a.$b") === col(s"b.$b"))
-      .foldLeft(col("a.id") < col("b.id"))(_ && _)
-    c.as("a").join(c.as("b"), cond)
-      .withColumn("cos", dot(col("a.u"), col("b.u")))
-      .filter(col("cos") >= minCos)
-      .select(col("a.id").as("id1"), col("b.id").as("id2"), col("cos"))
-  }
-
   /** All-pairs cosine ≥ minCos via broadcast matrix + per-partition
     * primitive-array loops — the O(n²·d) inner product is ~100× faster
     * in tight JVM loops than per-pair Catalyst array allocation, and the
-    * broadcast side is only n·d doubles. Same output contract as
-    * [[cosinePairs]]; identical IEEE arithmetic order (sequential over
-    * dims) so round-6 results agree with the oracle. This is the
-    * mapPartitions escape hatch used deliberately: an all-pairs kernel
+    * broadcast side is only n·d doubles. Output: (id1, id2, cos) for
+    * every pair id1 < id2 with cos ≥ minCos — the contract every
+    * kernel [[cosinePairsAuto]] routes to shares; identical IEEE
+    * arithmetic order (sequential over dims) so round-6 results agree
+    * with the oracle. This is the mapPartitions escape hatch used deliberately: an all-pairs kernel
     * is genuine per-partition imperative logic (SURVEY §1.1).
     *
     * SMALL-CORPUS KERNEL ONLY: it collects the n×d matrix to the driver.
@@ -1426,10 +1408,6 @@ object Similarity {
   private val basisCache = new java.util.concurrent.ConcurrentHashMap[
     (String, String, String, Int, Int, Boolean),
     (Int, Map[Int, Double], Seq[(Double, Array[Double])])]()
-
-  /** Test/maintenance hook: drop every memoized [[topPBasis]] result
-    * (e.g. after overwriting a parquet table in place mid-JVM). */
-  private[graft] def clearBasisCache(): Unit = basisCache.clear()
 
   private def computeTopPBasis(
       emb: DataFrame, vecCol: String, p: Int, iters: Int, pinU: Boolean):

@@ -216,19 +216,6 @@ object Sinks {
       })
   }
 
-  /** [[zOrderLayoutQuantile]] with the N-D Hilbert key: quantile
-    * bucket-encode each layout column, range-partition + sort on the
-    * Skilling index of the buckets, write the original columns. */
-  def hilbertLayoutQuantile(
-      df: DataFrame, hCols: Seq[String], files: Int, bits: Int = 8): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val h = hilbertValueN(quantileBuckets(df, hCols, bits), bits)
-    df.withColumn("__h", h)
-      .repartitionByRange(files, col("__h"))
-      .sortWithinPartitions("__h")
-      .drop("__h")
-  }
-
   /** Quantile bucket-encoding of arbitrary numeric columns into the
     * [0, 2^bits) integer domain [[zOrderValue]] needs — the upstream
     * encode step for Z-ordering skewed or unbounded columns (raw

@@ -301,22 +301,6 @@ object StreamOps {
         ((col("prior9") + col("slo9")) / lit(1e9)).as("nb_logit"))
   }
 
-  /** Streaming multiclass language classification against a FIXED
-    * trained model (r17 — the trained-language-ID rung above
-    * [[nbScoreBatch]]'s binary scorer): per micro-batch, delegate to
-    * the batch kernel [[graft.ops.TextStats.nbClassifyMulticlass]]
-    * with the (cls, w, lp9) model and (cls, prior9) priors arriving
-    * as broadcast RELATIONS (never plan literals). Scores are exact
-    * 1e-9 fixed-point integers and classification is per-doc
-    * independent, so the union of per-batch outputs IS the batch run
-    * over the union of the batches — the q_lang_clf oracle grades the
-    * stream sink directly.
-    */
-  def langClassifyBatch(
-      docs: DataFrame, idCol: String, featsCol: String,
-      model: DataFrame, priors: DataFrame): DataFrame =
-    graft.ops.TextStats.nbClassifyMulticlass(docs, idCol, featsCol, model, priors)
-
   /** Streaming count-min accumulation — the incremental twin of
     * [[graft.ops.CountMin.sketch]] as a `foreachBatch` kernel (r16):
     * the sketch is CELL-WISE ADDITIVE, so streaming maintenance is a

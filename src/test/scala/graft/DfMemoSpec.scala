@@ -114,10 +114,8 @@ class DfMemoSpec extends AnyFunSuite {
     assert(DfMemo.protectedRddIds.nonEmpty,
       "the CC loop's localCheckpoint pins must be recorded")
     // Bench's sweep: unpersist everything this 'query' pinned, EXCEPT
-    // the protected ids — exactly the production cleanup predicate
-    sc.getPersistentRDDs
-      .filterNot { case (id, _) => before(id) || DfMemo.protectedRddIds(id) }
-      .values.foreach(_.unpersist(blocking = false))
+    // the protected ids
+    DfMemo.releaseSince(sc, before)
     // the memoized frame must still be computable afterwards
     val again = DfMemo.cached(docs, "spec:sweep") {
       fail("second call must be a cache hit"); docs

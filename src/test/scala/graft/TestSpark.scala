@@ -2,20 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites. */
+/** One shared local session for all suites, built by the same factory
+  * as the mains. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(4)
   val Sf = "/root/testdata/sf0.001"
 }

@@ -1,14 +1,14 @@
 #!/usr/bin/env python3
-"""Derive tools/bench_medians.json (the Bench budget-priority record)
-from a merged median artifact produced by tools/bench_median.py.
+"""Derive tools/bench_medians.json (Bench's run order, hard-wall and
+stall-flag reference, and tools/make_demote.py's input) from a merged
+median artifact produced by tools/bench_median.py.
 
 Usage: tools/make_medians.py out/bench_r9.json > tools/bench_medians.json
 
 Bench orders its suite by: queries ABSENT from this file first (no
 clean evidence yet — typically everything added since the last sweep),
-then ascending recorded warm median, so the driver's budget buys warm
-two-pass coverage where evidence is thinnest and single-pass
-degradation lands on the expensive, already-characterized tail.
+then ascending recorded warm median, so a run cut by the hard wall
+loses the expensive, already-characterized tail.
 """
 import json
 import sys
