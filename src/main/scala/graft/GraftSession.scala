@@ -19,6 +19,11 @@ import org.apache.spark.sql.SparkSession
   *   - shuffle/spill scratch and the warehouse under [[Scratch]]
   *     (tmpfs when present, deleted at exit); bucketed `saveAsTable`
   *     needs the warehouse;
+  *   - a 1000-entry codegen class cache (Spark's default is 100): one
+  *     pass of the pair kernels and their consumers compiles about 200
+  *     distinct classes cold, so at 100 every warm pass recompiled them
+  *     as LRU capacity misses (none at 1000: the generated source is
+  *     stable);
   *   - log level ERROR, so nothing but the mains' own output follows
   *     Bench's final JSON line.
   *
@@ -38,6 +43,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", 1000L)
       .config("spark.local.dir", Scratch.dir("graft-local"))
       .config("spark.sql.warehouse.dir", Scratch.dir("graft-wh"))
       .getOrCreate()

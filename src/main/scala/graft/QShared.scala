@@ -109,7 +109,7 @@ private[graft] object QShared {
   }
 
   /** Near-dup cluster map (id → rep) over the 3-shingle Jaccard ≥ 0.5
-    * pair graph, prefix-filtered + star-contracted — the derivation
+    * pair graph, prefix-filtered + union-find clustered — the derivation
     * q_dedup_clusters, q_dedup_canonical and q_dedup_best all consume.
     * Run-scoped [[graft.ops.DfMemo]] memo keyed on the documents table:
     * the pair-gen + CC funnel (the suite's most expensive substrate)

@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Deduplication suite for large-scale training-data pipelines:
   * exact (normalized fingerprint), exact n-gram Jaccard, MinHash+LSH,
@@ -14,11 +17,20 @@ import org.apache.spark.sql.functions._
   *  - exact dedup = one hash-partitioned groupBy on a 32-byte
   *    fingerprint — the cheapest possible full-corpus pass.
   *  - exact Jaccard self-joins explode on hot shingles; it is the
-  *    small-data oracle. The scale path is [[minhashSignatures]] +
-  *    [[lshCandidates]]: O(docs·hashes) then bucket-local joins.
+  *    small-data oracle. The scale paths are prefix filtering
+  *    ([[jaccardPairsPrefix]]: one per-document aggregate, candidates
+  *    from the rare-first prefixes only, exact verify) and MinHash
+  *    ([[minhashFromArrays]] — one narrow pass over per-doc hash
+  *    arrays, no shuffle — + [[lshCandidates]]: bucket-local pairs).
   *  - LSH hot buckets (boilerplate docs) go quadratic — cap bucket
   *    size with `maxBucket` (drops only pathological buckets,
   *    logged by count in the result).
+  *  - clustering ([[dedupClusters]]) streams the near-dup EDGES — orders
+  *    of magnitude fewer than documents — through one union-find task;
+  *    its memory is one parent entry per clustered id. Past what one
+  *    task's heap holds, swap in a distributed connected-components
+  *    (large-star/small-star, Kiveris et al. SoCC'14) at the cost of
+  *    O(log n) shuffle rounds.
   */
 object Dedup {
 
@@ -192,42 +204,57 @@ object Dedup {
     * count, so results are EXACT — identical to
     * [[jaccardPairsFromHashes]] (parity-tested).
     *
+    * Shape: ONE aggregate per document builds its canonically sorted
+    * element list `sort_array(collect_list(struct([block,] df, h)))`;
+    * the size, the prefix (a slice) and the verify array all come from
+    * that one row, so there is no per-document window, no separate
+    * sizes aggregate or join, and no regroup inside the verify. The
+    * per-document frame is localCheckpointed: the candidate self-join
+    * reads it twice and the verify twice more. Sizes and verify arrays
+    * are per id even when an id spans several blocks; prefixes are per
+    * (id, block).
+    *
     * Same input/output contract as [[jaccardPairsFromHashes]]. The
-    * input is localCheckpointed by default: it is referenced four times
-    * (df rank, sizes, candidate prefixes, verify) and its lineage is
-    * usually an expensive shingling.
+    * input is localCheckpointed by default: it is read twice (df
+    * table, per-document aggregate) and its lineage is usually an
+    * expensive shingling.
     */
   def jaccardPairsPrefix(
       e0: DataFrame, minJ: Double, blockCol: Option[String] = None,
       materialize: Boolean = true): DataFrame = {
     val e = if (materialize) e0.localCheckpoint() else e0
     val blockCols = blockCol.toSeq
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(("id" +: blockCols).map(col): _*)
-      .orderBy(col("__df"), col("h"))
     val dfreq = e.groupBy(col("h")).agg(count(lit(1)).as("__df"))
-    val sizes = e.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val pref = e.join(dfreq, "h")
-      .withColumn("__r", row_number().over(w))
-      .join(sizes, "id")
-      // ε guards double noise: ceil(0.9·30) must be 27, not
-      // ceil(27.000000000000004)=28 — a too-short prefix loses recall,
-      // a too-long one only adds candidates, so err long
-      .filter(col("__r") <= col("sz") - ceil(lit(minJ) * col("sz") - lit(1e-9)) + 1)
-      .select(("id" +: blockCols :+ "h").map(col): _*)
-      // localCheckpoint (r17): the candidate step self-joins this
-      // derivation, and unpinned the dfreq join + per-doc rank window +
-      // sizes join chain was planned and executed TWICE (no
-      // ReusedExchange across a self-join's sides). The pinned frame is
-      // the PREFIX rows only — the θ-filtered fraction of the element
-      // frame, the same order of magnitude a single side shuffles anyway.
+    // sorted by (block, df, h): one contiguous, rare-first run per block
+    val docs = e.join(dfreq, "h")
+      .groupBy(col("id"))
+      .agg(sort_array(collect_list(
+        struct((blockCols :+ "__df" :+ "h").map(col): _*))).as("__s"))
+      .select(col("id"), col("__s"), size(col("__s")).as("__sz"),
+        array_distinct(col("__s.h")).as("hs"))
       .localCheckpoint()
+    // ε guards double noise: ceil(0.9·30) must be 27, not
+    // ceil(27.000000000000004)=28 — a too-short prefix loses recall,
+    // a too-long one only adds candidates, so err long
+    val plen = greatest(
+      col("__sz") - ceil(lit(minJ) * col("__sz") - lit(1e-9)) + 1, lit(0)).cast("int")
+    val prefix = blockCol match {
+      case None => slice(col("__s"), lit(1), plen)
+      // element i is among its block's first plen iff the element plen
+      // places earlier is absent or in another block (the list is
+      // block-sorted, so each block is one contiguous run)
+      case Some(b) => filter(col("__s"), (x, i) =>
+        when(i < plen, lit(true))
+          .otherwise(!(element_at(col("__s"), i - plen + 1).getField(b) <=> x.getField(b))))
+    }
+    val pref = docs.select(col("id"), explode(prefix).as("__p"))
+      .select(("id" +: (blockCols :+ "h").map(c => s"__p.$c")).map(col): _*)
     val joinCond = blockCol.map(b => col(s"a.$b") === col(s"b.$b"))
       .foldLeft(col("a.h") === col("b.h") && col("a.id") < col("b.id"))(_ && _)
     val cand = pref.as("a").join(pref.as("b"), joinCond)
       .select(col("a.id").as("id1"), col("b.id").as("id2"))
       .distinct()
-    verifyJaccard(cand, e, minJ)
+    verifyArrays(cand, docs.select(col("id"), col("hs")), minJ)
   }
 
   /** EXACT Jaccard verification of candidate pairs: join each
@@ -241,19 +268,19 @@ object Dedup {
     * per-pair cost is one hash-join probe per shared element.
     * Output: (id1, id2, jaccard).
     */
-  def verifyJaccard(cand: DataFrame, e: DataFrame, minJ: Double): DataFrame = {
-    // array-attach verify (r17): the old form joined every candidate
-    // to ALL of id1's element rows (|pair|·|doc| intermediate rows —
-    // 22M for 447k candidates at sf0.1, measured 8-11 s), shuffled
-    // them twice and re-aggregated. Packing each doc's element set
-    // into ONE array row (collect_set of the distinct element frame —
-    // the documented input contract) turns the verify into two
-    // candidate-sized hash joins plus a map-side array_intersect:
-    // per-pair cost is the same O(|x|+|y|) set intersection, but it
-    // runs inside one task instead of across two exchanges. The
-    // inter ≥ 1 guard preserves the old groupBy semantics (a
-    // zero-overlap pair produced no row, even at minJ ≤ 0).
-    val docs = e.groupBy(col("id")).agg(collect_set(col("h")).as("hs"))
+  def verifyJaccard(cand: DataFrame, e: DataFrame, minJ: Double): DataFrame =
+    verifyArrays(cand, e.groupBy(col("id")).agg(collect_set(col("h")).as("hs")), minJ)
+
+  /** [[verifyJaccard]] over per-document distinct element arrays
+    * `docs` (id, hs). Packing each doc's set into ONE row (r17) turns
+    * the verify into two candidate-sized hash joins plus a map-side
+    * array_intersect — the earlier form joined every candidate to all
+    * of id1's element rows (22M rows for 447k candidates at sf0.1,
+    * 8-11 s) and shuffled them twice. The inter ≥ 1 guard keeps the
+    * groupBy semantics: a zero-overlap pair produces no row, even at
+    * minJ ≤ 0.
+    */
+  private def verifyArrays(cand: DataFrame, docs: DataFrame, minJ: Double): DataFrame =
     cand.select(col("id1"), col("id2"))
       .join(docs.select(col("id").as("id1"), col("hs").as("h1")), Seq("id1"))
       .join(docs.select(col("id").as("id2"), col("hs").as("h2")), Seq("id2"))
@@ -264,7 +291,6 @@ object Dedup {
       .withColumn("jaccard", col("inter") / (col("s1") + col("s2") - col("inter")))
       .filter(col("inter") >= 1 && col("jaccard") >= minJ)
       .select(col("id1"), col("id2"), col("jaccard"))
-  }
 
   /** EDIT-DISTANCE-verified near-dup pairs — the character-level dedup
     * modality the shingle family is blind INSIDE of: token-level
@@ -648,6 +674,19 @@ object Dedup {
     graft.functions.MinHashSigs.minhash_sigs(hashes, ps.map(_._1), ps.map(_._2), MinhashPrime)
   }
 
+  /** MinHash signatures (id, sig) from a per-doc hash-ARRAY frame
+    * (id, hs) — the [[minhashSigsCol]] form of [[minhashFromHashes]]
+    * (bit-identical signatures): one narrow pass, no shuffle. Docs
+    * with no element are dropped, as the exploded form has no row for
+    * them; the filter tests the array, not the signature — a filter on
+    * `sig IS NOT NULL` is pushed below the projection and evaluates the
+    * O(|hs|·numHashes) expression a second time per row.
+    */
+  def minhashFromArrays(
+      arrays: DataFrame, numHashes: Int = 128, seed: Long = 42L): DataFrame =
+    arrays.filter(size(col("hs")) > 0)
+      .select(col("id"), minhashSigsCol(col("hs"), numHashes, seed).as("sig"))
+
   /** LSH banding: split the signature into `bands` bands of
     * numHashes/bands rows, hash each band ([[graft.functions.BandHashes]]
     * — one fused codegen pass; the earlier interpreted
@@ -728,101 +767,67 @@ object Dedup {
   }
 
   /** Duplicate-cluster resolution: connected components over near-dup
-    * pairs via alternating large-star/small-star rounds (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond", SoCC'14).
-    * `pairs` is any pair generator's output ((id1, id2) + anything
-    * else); returns (id, rep) for every id that appears in a pair,
-    * where `rep` is the smallest id in its component — the canonical
-    * member [[dropClusterDuplicates]] keeps. Transitivity matters:
-    * A≈B and B≈C must collapse to ONE survivor even when A≉C
-    * directly, which pair-level dedup gets wrong.
+    * pairs. `pairs` is any pair generator's output ((id1, id2) +
+    * anything else); returns (id, rep) — same type as the input ids —
+    * once for every id that appears in a pair, where `rep` is the
+    * smallest id in its component: the canonical member
+    * [[dropClusterDuplicates]] keeps. Transitivity matters: A≈B and
+    * B≈C must collapse to ONE survivor even when A≉C directly, which
+    * pair-level dedup gets wrong. Rows with a null id and self-loops
+    * contribute nothing; duplicate and reversed edges are harmless.
     *
-    * Scale: each round shuffles only the EDGE set — near-dup pairs are
-    * orders of magnitude smaller than the corpus — and the star
-    * operations contract components in O(log n) rounds even on
-    * pathological topologies (a length-L chain needs ~log L rounds,
-    * where plain min-label propagation needs L). Edges are
-    * localCheckpoint'd per round to cut the growing lineage; `maxIter`
-    * is a safety valve far above the log₂ of any real component.
+    * One pass: the edges move onto one task (`repartition(1)`, not
+    * `coalesce(1)` — coalesce would pull the upstream pair generator
+    * into that single task too; the shuffle keeps it parallel) and
+    * stream once through a union-find that always keeps the smaller
+    * root, so every root is its component's minimum id. Edges are
+    * never collected to the driver and never pinned; the task's memory
+    * is one parent entry per clustered id. Near-dup edges are orders
+    * of magnitude fewer than documents; past what one task's heap
+    * holds, a distributed large-star/small-star loop (Kiveris et al.,
+    * SoCC'14) is the fallback, at O(log n) shuffle rounds.
     */
-  def dedupClusters(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    // Large-star: per node u, hook every strictly-larger neighbor onto
-    // m = min(Γ(u) ∪ {u}). Operates on the symmetric edge list.
-    def largeStar(edges: DataFrame): DataFrame = {
-      val sym = edges.unionByName(
-        edges.select(col("v").as("u"), col("u").as("v")))
-      val m = sym.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      sym.join(m, Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-    }
-    // Small-star: edges arrive larger→smaller (u > v, large-star's
-    // postcondition); hook u and all its smaller neighbors onto the min.
-    def smallStar(edges: DataFrame): DataFrame = {
-      val m = edges.groupBy("u").agg(min("v").as("m"))
-      edges.join(m, Seq("u"))
-        .select(col("v").as("x"), col("m"))
-        .unionByName(m.select(col("u").as("x"), col("m")))
-        .filter(col("x") =!= col("m"))
-        .select(col("x").as("u"), col("m").as("v"))
-        .distinct()
-    }
-    // lazy checkpoint: the fingerprint's single aggregation job both
-    // materializes the cut lineage AND returns the convergence hash —
-    // an eager checkpoint would pay a separate materialization job per
-    // round (2-3 jobs/round → 1; job launch latency dominates the loop
-    // on small edge sets)
-    var edges = pairs
+  def dedupClusters(pairs: DataFrame): DataFrame = {
+    val edges = pairs
+      .filter(col("id1").isNotNull && col("id2").isNotNull && col("id1") =!= col("id2"))
+      // greatest/least only widen mixed id types to one
       .select(greatest(col("id1"), col("id2")).as("u"),
         least(col("id1"), col("id2")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(false)
-    // one-job set fingerprint (count + order-free xor of edge hashes);
-    // equality is CONFIRMED with an exceptAll pass, so the hash only
-    // decides when to pay for that check, never correctness
-    def fingerprint(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    val dt = edges.schema("u").dataType
+    val out = StructType(Seq(StructField("id", dt, nullable = false),
+      StructField("rep", dt, nullable = false)))
+    edges.repartition(1).mapPartitions(unionFind(dt))(Encoders.row(out))
+  }
+
+  /** Streams (u, v) edges through a union-find whose roots are always
+    * the smaller id (Spark's ordering for `dt`, path halving on find);
+    * emits (x, root of x) for every id seen. */
+  private def unionFind(dt: DataType)(edges: Iterator[Row]): Iterator[Row] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var a = x
+      var p = parent.get(a)
+      while (p != a) {
+        val g = parent.get(p)
+        parent.put(a, g)
+        a = g
+        p = parent.get(a)
+      }
+      a
     }
-    var fp = fingerprint(edges)
-    var it = 0
-    var converged = fp._1 == 0L
-    while (it < maxIter && !converged) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
-      val nfp = fingerprint(next)
-      // fixed point: same count + same xor, confirmed by an empty diff
-      // (equal counts over distinct sets make one direction sufficient)
-      converged = nfp == fp && next.exceptAll(edges).isEmpty
-      // the superseded round's checkpoint blocks are DEAD the moment
-      // the fingerprint + diff jobs above have read them — `next` is
-      // materialized as its own checkpoint by those same jobs, and
-      // nothing downstream references the old round. Release now
-      // (VERDICT r13 #6): on a long CC run the per-iteration pins are
-      // the block manager's largest idle tenant, and releasing at the
-      // source is the only safe point — an after-the-fact reachability
-      // sweep cannot see broadcast-side subtrees and killed live pins
-      // when tried (r14).
-      org.apache.spark.sql.GraftSqlBridge.checkpointRdd(edges)
-        .foreach(_.unpersist(blocking = false))
-      edges = next
-      fp = nfp
-      it += 1
+    edges.foreach { r =>
+      val (u, v) = (r.get(0), r.get(1))
+      parent.putIfAbsent(u, u)
+      parent.putIfAbsent(v, v)
+      val (ru, rv) = (find(u), find(v))
+      if (ru != rv) {
+        if (ord.lt(toCatalyst(ru), toCatalyst(rv))) parent.put(rv, ru)
+        else parent.put(ru, rv)
+      }
     }
-    // a non-star edge set is not a labeling — multiple conflicting
-    // (id, rep) rows per id and reps that aren't component minima.
-    // Surfacing beats silently returning corrupted cluster labels;
-    // maxIter=50 is far above log₂ of any real component diameter.
-    if (!converged)
-      throw new IllegalStateException(
-        s"dedupClusters did not converge in $maxIter large-star/small-star rounds; " +
-          "the edge set is not a star — raise maxIter")
-    // at the fixed point every node points directly at its component min
-    edges.select(col("u").as("id"), col("v").as("rep"))
-      .unionByName(edges.select(col("v").as("id"), col("v").as("rep")).distinct())
+    parent.keySet.toArray.iterator.map(x => Row(x, find(x)))
   }
 
   /** Keep one document per duplicate cluster (the representative) plus

@@ -67,9 +67,9 @@ private[graft] object DfMemo {
   /** RDD-level pins created while computing AND materializing a
     * memoized derivation. Two kinds, both load-bearing:
     *
-    *   - localCheckpoint blocks registered during the compute (the
-    *     dedupClusters CC loop, cosinePairsBlocked's exploded
-    *     postings): a lazily-localCheckpointed RDD's blocks are its
+    *   - localCheckpoint blocks registered during the compute
+    *     (jaccardPairsPrefix's per-document frame, cosinePairsBlocked's
+    *     exploded postings): a lazily-localCheckpointed RDD's blocks are its
     *     ONLY copy once materialized — an external "release what this
     *     query pinned" sweep (graft.Bench's per-query cleanup) that
     *     unpersists them kills every cached frame built on top,
@@ -153,9 +153,9 @@ private[graft] object DfMemo {
             // = dead" released live checkpoint pins and every later
             // consumer died with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
             // The dead-intermediate problem (ADVICE r12 / VERDICT r13
-            // #6) is instead solved at the SOURCE: the dedupClusters
-            // CC loop unpersists each superseded round's checkpoint
-            // the moment the convergence check has read it, so dead
+            // #6) is instead solved at the SOURCE: a derivation that
+            // loops releases each superseded round's checkpoint the
+            // moment it has been read (GraphOps' k-core peel), so dead
             // blocks never reach this window at all. A stale pin here
             // costs idle storage; a wrongly released one is data loss.
             val sc = input.sparkSession.sparkContext
@@ -205,7 +205,7 @@ private[graft] object DfMemo {
   private[graft] def clear(): Unit = {
     import scala.jdk.CollectionConverters._
     // release the TRACKED pins too, not just the memo frames: the
-    // protected delta also holds checkpoint-lineage RDDs (the CC loop's
+    // protected delta also holds checkpoint-lineage RDDs (the pair kernels'
     // localCheckpoint blocks) that nothing else will ever unpersist —
     // clearing only the id SET would orphan them as permanently cached
     // dead blocks for the JVM lifetime (review r13)

@@ -858,7 +858,7 @@ object TextStats {
       it += 1
     }
     // the score frame fed its last job — release the checkpoint at the
-    // source (the CC-loop device): (a, b) are plain doubles, nothing
+    // source (the k-core peel's device): (a, b) are plain doubles, nothing
     // downstream references sc, and without this the pinned copy lives
     // for the session in library/spec callers
     org.apache.spark.sql.GraftSqlBridge.checkpointRdd(sc)

@@ -982,13 +982,12 @@ private[graft] object QDedup2 {
       (s, dir) => {
         // 3-shingles, not unigrams: the synthetic corpus shares one small
         // vocabulary, so unigram MinHash buckets nearly every pair.
-        // Explode + partial-agg min is the measured winner here: a fused
-        // tokenShingles→xxhash64→MinHashSigs per-doc form is signature-
-        // identical (DedupSpec parity test) but ~2× slower — interpreted
-        // per-window slice/concat costs more than the map-side-combined
-        // shuffle it avoids.
-        val sigs = Dedup.minhashFromHashes(
-          shingles3(s, dir),  // shared memoized shingle substrate (r18)
+        // Signatures come straight from the memoized per-doc hash arrays
+        // through the fused MinHashSigs expression: no explode, no
+        // 128-column aggregate, no shuffle (DedupSpec asserts both the
+        // parity with the explode + min form and the Exchange-free plan).
+        val sigs = Dedup.minhashFromArrays(
+          shingles3Arrays(s, dir),  // shared memoized shingle substrate (r18)
           numHashes = 128, seed = 42L)
         Dedup.lshCandidates(sigs, bands = 32).orderBy("id1", "id2")
       },

@@ -14,10 +14,10 @@ object GraftSqlBridge {
 
   /** The pinned RDD behind a `Dataset.localCheckpoint` result (its
     * analyzed plan is a `LogicalRDD` leaf — `private[sql]`, hence this
-    * shim). graft's dedupClusters CC loop uses it to unpersist each
-    * superseded round's checkpoint blocks as soon as the convergence
-    * check has read them (r14 — dead intermediates no longer idle in
-    * the block manager until DfMemo.clear()). */
+    * shim). graft's iterative loops use it to unpersist each
+    * superseded round's checkpoint blocks as soon as the next round
+    * has read them (r14 — dead intermediates no longer idle in the
+    * block manager until DfMemo.clear()). */
   def checkpointRdd(df: Dataset[_]): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collectFirst {
       case lr: execution.LogicalRDD => lr.rdd

@@ -68,5 +68,6 @@ class BenchSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
     assert(spark.sparkContext.uiWebUrl.isEmpty)
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
   }
 }

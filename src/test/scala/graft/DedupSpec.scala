@@ -8,6 +8,8 @@ import graft.ops.{Dedup, TextOps}
 class DedupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  // jobs of dedupClusters over a materialized pair frame
+  val ClusterJobs = 2
 
   lazy val docs = Tables.table(spark, TestSpark.Sf, "documents")
     .select($"doc_id",
@@ -68,6 +70,40 @@ class DedupSpec extends AnyFunSuite {
       assert(canon(Dedup.jaccardPairsPrefix(e3, theta))
         == canon(Dedup.jaccardPairsFromHashes(e3, theta)), s"3gram theta=$theta")
     }
+  }
+
+  test("jaccardPairsPrefix: ids spanning several blocks keep per-id sizes and verify sets (window-form reference)") {
+    // the per-(id, block) row_number prefix over per-id sizes, verified
+    // against per-id element sets: the formulation the one-aggregate
+    // form replaced, kept here as its reference
+    def reference(e: org.apache.spark.sql.DataFrame, minJ: Double) = {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy($"id", $"blk").orderBy($"__df", $"h")
+      val dfreq = e.groupBy($"h").agg(count(lit(1)).as("__df"))
+      val sizes = e.groupBy($"id").agg(count(lit(1)).as("sz"))
+      val pref = e.join(dfreq, "h").withColumn("__r", row_number().over(w)).join(sizes, "id")
+        .filter($"__r" <= $"sz" - ceil(lit(minJ) * $"sz" - lit(1e-9)) + 1)
+        .select($"id", $"blk", $"h")
+      val cand = pref.as("a").join(pref.as("b"),
+          $"a.h" === $"b.h" && $"a.id" < $"b.id" && $"a.blk" === $"b.blk")
+        .select($"a.id".as("id1"), $"b.id".as("id2")).distinct()
+      Dedup.verifyJaccard(cand, e, minJ)
+    }
+    val rnd = new scala.util.Random(5)
+    val rows = for {
+      id <- 0L until 40L
+      blk <- rnd.shuffle(Seq("x", "y", "z")).take(1 + rnd.nextInt(3))
+      h <- Seq.fill(3 + rnd.nextInt(10))(rnd.nextInt(30).toLong).distinct
+    } yield (id, blk, h)
+    val e = rows.toDF("id", "blk", "h").persist()
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("jaccard", round($"jaccard", 9)).as[(Long, Long, Double)].collect().toSet
+    for (theta <- Seq(0.2, 0.35, 0.5)) {
+      val want = canon(reference(e, theta))
+      assert(want.nonEmpty, s"fixture should hold pairs at theta=$theta")
+      assert(canon(Dedup.jaccardPairsPrefix(e, theta, Some("blk"))) == want, s"theta=$theta")
+    }
+    e.unpersist()
   }
 
   test("LSH funnel: verified candidates ⊆ exact pairs; full-recall settings reproduce exact clusters") {
@@ -191,9 +227,9 @@ class DedupSpec extends AnyFunSuite {
       .count() == 10)
   }
 
-  test("dedupClusters: a 200-node path graph converges (star contraction, not diameter-bound propagation)") {
-    // chain 0-1-2-...-200: diameter 200 ≫ the default maxIter=50 — plain
-    // min-label propagation cannot finish; large/small-star needs ~log₂ rounds
+  test("dedupClusters: a 200-node path graph resolves to one rep in one pass") {
+    // chain 0-1-2-...-200: diameter 200 — plain min-label propagation
+    // would need 200 rounds; the union-find pass needs one
     val chain = (0L until 200L).map(i => (i, i + 1)).toDF("id1", "id2")
     val cl = Dedup.dedupClusters(chain).as[(Long, Long)].collect().toMap
     assert(cl.size == 201 && cl.values.forall(_ == 0L),
@@ -204,6 +240,103 @@ class DedupSpec extends AnyFunSuite {
       .toSeq.toDF("id1", "id2")
     val cl2 = Dedup.dedupClusters(chain2).as[(Long, Long)].collect().toMap
     assert(cl2.size == 100 && cl2.values.forall(_ == 1000L))
+  }
+
+  /** Connected components by BFS over the non-null, non-loop edges:
+    * id → smallest id of its component, for every id in some edge. */
+  def bfsClusters[T](edges: Seq[(Option[T], Option[T])])(implicit ord: Ordering[T]): Map[T, T] = {
+    val adj = edges.collect { case (Some(a), Some(b)) if a != b => Seq(a -> b, b -> a) }
+      .flatten.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
+    val seen = scala.collection.mutable.Map.empty[T, T]
+    for (start <- adj.keys if !seen.contains(start)) {
+      val comp = scala.collection.mutable.Set(start)
+      val queue = scala.collection.mutable.Queue(start)
+      while (queue.nonEmpty)
+        for (n <- adj(queue.dequeue()) if comp.add(n)) queue += n
+      val rep = comp.min
+      comp.foreach(seen(_) = rep)
+    }
+    seen.toMap
+  }
+
+  test("dedupClusters == BFS oracle on seeded random graphs: Int/Long ids, nulls, self-loops, duplicate and reversed edges") {
+    for (seed <- 1 to 6) {
+      val rnd = new scala.util.Random(seed)
+      val n = 20 + rnd.nextInt(200)
+      def id(): Option[Int] = if (rnd.nextInt(25) == 0) None else Some(rnd.nextInt(n))
+      val base = Seq.fill(n / 2 + rnd.nextInt(n))((id(), id()))
+      // duplicate and reversed copies of a third of the edges, plus self-loops
+      val edges = rnd.shuffle(base ++ base.take(base.size / 3) ++
+        base.take(base.size / 3).map(_.swap) ++ Seq.fill(5)(id()).map(x => (x, x)))
+      val want = bfsClusters(edges)
+
+      val ints = edges.toDF("id1", "id2")
+      val gotInt = Dedup.dedupClusters(ints)
+      assert(gotInt.schema.map(f => f.name -> f.dataType) ==
+        Seq("id" -> org.apache.spark.sql.types.IntegerType, "rep" -> org.apache.spark.sql.types.IntegerType))
+      val rowsInt = gotInt.as[(Int, Int)].collect()
+      assert(rowsInt.length == want.size, s"seed $seed: one row per clustered id")
+      assert(rowsInt.toMap == want, s"seed $seed: Int labelling")
+
+      // Long ids above the Int range keep the same labelling, shifted
+      val off = 1L << 40
+      val longs = edges.map { case (a, b) => (a.map(_ + off), b.map(_ + off)) }.toDF("id1", "id2")
+      val gotLong = Dedup.dedupClusters(longs)
+      assert(gotLong.schema.map(_.dataType).distinct ==
+        Seq(org.apache.spark.sql.types.LongType))
+      assert(gotLong.as[(Long, Long)].collect().toMap ==
+        want.map { case (k, v) => (k + off) -> (v + off) }, s"seed $seed: Long labelling")
+    }
+  }
+
+  test("dedupClusters: empty and all-degenerate inputs give empty output with the input's id type") {
+    val empty = Seq.empty[(Int, Int)].toDF("id1", "id2")
+    val e = Dedup.dedupClusters(empty)
+    assert(e.columns.toSeq == Seq("id", "rep"))
+    assert(e.schema.map(_.dataType).distinct == Seq(org.apache.spark.sql.types.IntegerType))
+    assert(e.count() == 0)
+    // only self-loops and null ids: nothing to cluster
+    val degenerate = Seq((Some(1L), Some(1L)), (None, Some(2L)), (Some(3L), None), (None, None))
+      .toDF("id1", "id2")
+    assert(Dedup.dedupClusters(degenerate).count() == 0)
+  }
+
+  test("dedupClusters: a 10 000-node shuffled path is one component rooted at its minimum") {
+    val perm = new scala.util.Random(11).shuffle((0 until 10000).map(_.toLong + 500L).toList)
+    val path = perm.sliding(2).map(p => if (p(0) % 2 == 0) (p(0), p(1)) else (p(1), p(0)))
+      .toSeq.toDF("id1", "id2").repartition(4)
+    val cl = Dedup.dedupClusters(path).as[(Long, Long)].collect()
+    assert(cl.length == 10000)
+    assert(cl.forall(_._2 == 500L))
+  }
+
+  test("dedupClusters over a cached pair frame runs a pinned number of jobs") {
+    val pairs = Seq((2L, 1L), (2L, 3L), (10L, 11L), (21L, 20L), (22L, 21L))
+      .toDF("id1", "id2").repartition(4).persist()
+    try {
+      pairs.count()
+      val (rows, jobs) = TestSpark.countJobs(Dedup.dedupClusters(pairs).collect())
+      assert(rows.length == 8)
+      // one shuffle map stage (the move onto one task) + the result stage
+      assert(jobs == ClusterJobs, s"dedupClusters ran $jobs jobs")
+    } finally pairs.unpersist()
+  }
+
+  test("q_minhash_pairs' signature step: memo arrays → fused MinHash, no Exchange, == explode + min") {
+    val arrays = QShared.shingles3Arrays(spark, TestSpark.Sf)
+    val sigs = Dedup.minhashFromArrays(arrays, 128, 42L)
+    val fused = sigs.as[(Long, Seq[Long])].collect().toMap
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val exchanges = Plans.collect(sigs.queryExecution.executedPlan) {
+      case x: org.apache.spark.sql.execution.exchange.Exchange => x
+    }
+    assert(exchanges.isEmpty, s"the signature step must not shuffle:\n${sigs.queryExecution.executedPlan}")
+    val agg = Dedup.minhashFromHashes(QShared.shingles3(spark, TestSpark.Sf), 128, 42L)
+      .as[(Long, Seq[Long])].collect().toMap
+    assert(fused.nonEmpty && fused == agg)
+    // a doc without a 3-shingle has no signature row, as in the exploded form
+    val fixture = Seq((1L, Seq(5L, 9L)), (2L, Seq.empty[Long])).toDF("id", "hs")
+    assert(Dedup.minhashFromArrays(fixture).select($"id").as[Long].collect().toSeq == Seq(1L))
   }
 
   test("winnowFingerprints: shared token runs >= w+k-1 guarantee a shared fingerprint; short docs covered") {

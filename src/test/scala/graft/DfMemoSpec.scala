@@ -93,7 +93,7 @@ class DfMemoSpec extends AnyFunSuite {
   test("checkpoint lineage survives a Bench-style per-query cache sweep") {
     // Bench releases every RDD a query pinned after the query finishes;
     // DfMemo frames whose lineage contains localCheckpoint blocks (the
-    // dedupClusters CC loop) die permanently under that sweep unless
+    // prefix-filter pair kernel's) die permanently under that sweep unless
     // their pins are exempted — the r12 CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
     // regression this spec locks down.
     DfMemo.clear()
@@ -112,7 +112,7 @@ class DfMemoSpec extends AnyFunSuite {
     val first = clusters.count()
     // the derivation's checkpoint pins must be registered as protected
     assert(DfMemo.protectedRddIds.nonEmpty,
-      "the CC loop's localCheckpoint pins must be recorded")
+      "the pair kernel's localCheckpoint pins must be recorded")
     // Bench's sweep: unpersist everything this 'query' pinned, EXCEPT
     // the protected ids
     DfMemo.releaseSince(sc, before)
@@ -151,17 +151,11 @@ class DfMemoSpec extends AnyFunSuite {
     DfMemo.clear()
   }
 
-  test("dead CC-loop checkpoint pins are released at build; live tail survives (r14)") {
+  test("dedupClusters pins no checkpoint blocks at build; memo hit stays stable") {
     DfMemo.clear()
     val sc = spark.sparkContext
-    // file-backed chain fixture: a 16-node path needs several
-    // large-star/small-star rounds, each leaving a localCheckpoint —
-    // all but the final one dead once the loop converges. The CC loop
-    // releases each superseded round's blocks AT THE SOURCE (the only
-    // safe point — an after-the-fact reachability sweep cannot see
-    // broadcast-side subtrees and killed live pins when tried in r14),
-    // so by the time the memo window closes only the live tail is
-    // pinned.
+    // file-backed 16-node path: the union-find pass streams the edges
+    // once and pins nothing but the memo frame's own cache buffer
     val tmp = java.nio.file.Files.createTempDirectory("graft-deadpins").toString
     (0L until 15L).map(i => (i, i + 1)).toDF("id1", "id2")
       .write.mode("overwrite").parquet(tmp)
@@ -175,11 +169,8 @@ class DfMemoSpec extends AnyFunSuite {
     val fresh = sc.getPersistentRDDs.filterNot { case (id, _) => before(id) }
     val ckpts = fresh.values
       .filter(org.apache.spark.rdd.GraftRddBridge.isLocallyCheckpointed).toSeq
-    assert(ckpts.nonEmpty, "the live tail checkpoint must stay pinned")
-    assert(ckpts.size == 1,
-      s"dead per-iteration checkpoint pins must be released at build; " +
-        s"${ckpts.size} still persisted")
-    // the release must not hurt later consumers: memo hit, stable result
+    assert(ckpts.isEmpty, s"${ckpts.size} checkpoint pins left by the build")
+    // later consumers: memo hit, stable result
     val again = DfMemo.cached(pairs, "spec:deadpins") {
       fail("second call must be a cache hit"); pairs
     }

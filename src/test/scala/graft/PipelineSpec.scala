@@ -16,6 +16,7 @@ import graft.pipeline.Stages
 class PipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.countJobs
 
   val Dict = Seq("great", "fast", "slow", "boring")
   val Stop = Seq("a", "the", "and")
@@ -24,28 +25,6 @@ class PipelineSpec extends AnyFunSuite {
   val JobsPerRound = 2
   lazy val jsonl = getClass.getResource("/reviews.jsonl").getPath
 
-  /** Runs `body` and counts the Spark jobs it started, scoped by job
-    * group so concurrent work in the session is not counted. */
-  def countJobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"count-jobs-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, group)
-    try {
-      val r = body
-      org.apache.spark.TestBus.drain(sc)
-      (r, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-  }
   lazy val s1 = Stages.stage1(spark, jsonl, Stop, Dict).persist()
 
   test("stage1: header + presence filters, asin sort, sequential ids, token goldens") {

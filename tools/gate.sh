@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # Pre-snapshot gate: refuse to bless a tree that hasn't passed
-# compile -> test -> Verify -> DuckDB oracle check on the EXACT diff.
+# compile -> test -> benchmark smoke test -> Verify -> DuckDB oracle
+# check on the EXACT diff.
 # Round 3 shipped a commit last compiled 3 minutes before the snapshot
 # and zeroed the official gate; this script makes that impossible.
 #
@@ -18,6 +19,12 @@ tools/warm_jars.sh || true
 
 echo "== gate: sbt compile + test =="
 sbt -batch "Test/compile" test
+
+# the benchmark harness calls into the library (Substrates.all,
+# QDedup1.qs, DfMemo.protectedRddIds, Stages): an API change that
+# breaks it fails here, not at the next benchmark run
+echo "== gate: benchmark smoke test =="
+python3 perfbench/smoke_test.py
 
 echo "== gate: Verify @ $SF -> $OUT =="
 rm -rf "$OUT"
