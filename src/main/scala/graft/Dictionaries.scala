@@ -4,8 +4,7 @@ package graft
   * files (adj.txt / stopwords_en.txt, read at
   * MapperExtractTransform.java:52-61). The testdata `documents.text`
   * vocabulary is synthetic; these are its adjective-ish subset and
-  * article stopwords. At scale these ship as broadcast tables
-  * (TextOps.filterByDictDf), not literals.
+  * article stopwords.
   */
 object Dictionaries {
   val Stopwords: Seq[String] = Seq("the", "a")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place a graft SparkSession is configured. Bench, Verify,
-  * Lab, PipelineMain, MicroBench and the test suites' shared session
+  * Lab, PipelineMain and the test suites' shared session
   * all build through [[apply]], so the confs below cannot drift apart
   * between the harness that times a query and the one that grades it:
   *

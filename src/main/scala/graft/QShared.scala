@@ -73,9 +73,7 @@ private[graft] object QShared {
     * q_containment_pairs, q_novelty, q_minhash_pairs, q_cross_dedup)
     * plus the dedupPairs3 substrate below — each previously paying its
     * own localCheckpoint of the same rows. Billed as
-    * `substrate:shingles3`. Same columns/values as the former
-    * per-query `Dedup.shingleHashesViaArrays(docsTokens, k = 3)`
-    * (identical expressions), so every consumer's output is unchanged.
+    * `substrate:shingles3`.
     */
   private[graft] def shingles3Arrays(s: SparkSession, dir: String): DataFrame = {
     val toks = docsTokens(s, dir)
@@ -104,7 +102,9 @@ private[graft] object QShared {
     // dedupClusters3 device below)
     val e = shingles3(s, dir)
     DfMemo.cached(toks, "dedupPairs3:k=3:thr=0.5") {
-      Dedup.jaccardPairsPrefix(e, 0.5)
+      // e is a map-side explode of the persisted shingles3Arrays memo:
+      // a second pinned copy of its rows would buy nothing
+      Dedup.jaccardPairsPrefix(e, 0.5, materialize = false)
     }
   }
 

@@ -103,31 +103,6 @@ object Dedup {
     }
   }
 
-  /** Exploded distinct k-shingle hashes via per-doc ARRAY construction
-    * instead of [[shingleHashes]]'s posexplode+window: one narrow
-    * select builds `array_distinct(xxhash64 ∘ shingle)` per doc, a
-    * localCheckpoint materializes it (WITHOUT the barrier Catalyst
-    * collapses the projection into the explode and re-evaluates the
-    * whole array expression per output row), then a plain explode.
-    * No per-doc window sort, no (id, pos, token) shuffle — measured at
-    * sf0.1 on the 3-shingle Jaccard pair oracle: cold 2.9 s vs 5.7 s,
-    * warm 1.9 s vs 2.2 s. Same hash values as [[shingleHashes]]
-    * (identical concat_ws construction), parity-asserted in tests.
-    * Trade-off: the checkpoint truncates lineage (executor loss ⇒ job
-    * retry, not partition recompute) — at 100 TB swap for a reliable
-    * checkpoint dir or accept stage retry; the data volume is the same
-    * hash set the window form would have shuffled anyway.
-    */
-  def shingleHashesViaArrays(
-      docs: DataFrame, idCol: String, tokensCol: String, k: Int): DataFrame = {
-    require(k >= 1, s"shingle size must be >= 1, got $k")
-    val sh = if (k == 1) col(tokensCol) else tokenShingles(col(tokensCol), k)
-    docs.select(col(idCol).as("id"),
-        array_distinct(transform(sh, s => xxhash64(s))).as("hs"))
-      .localCheckpoint()
-      .select(col("id"), explode(col("hs")).as("h"))
-  }
-
   /** Winnowing fingerprints (Schleimer, Wilkerson & Aiken, SIGMOD'03 —
     * the MOSS algorithm): hash every k-token shingle, then keep the
     * MINIMUM hash of each w-wide sliding window of consecutive shingle
@@ -137,21 +112,16 @@ object Dedup {
     * fewer than w shingles contribute their single global-min hash.
     * Base hash is the first 8 hex digits of md5 (portable SQL, like
     * [[minhashPairsPortable]]) so the whole operator value-oracles
-    * cross-engine (q_winnow); swap xxhash64 in at scale the same way
-    * the MinHash path does. Output: (id, fp) distinct, one row per
+    * cross-engine (q_winnow). Output: (id, fp) distinct, one row per
     * selected fingerprint. Pure column expressions — map-side, no
     * shuffle until the consumer joins fingerprints.
     */
   def winnowFingerprints(
       docs: DataFrame, idCol: String, tokensCol: String,
-      k: Int = 3, w: Int = 4, portable: Boolean = true): DataFrame = {
+      k: Int = 3, w: Int = 4): DataFrame = {
     require(k >= 1 && w >= 1)
-    // portable=true → md5-derived base hash (cross-engine oracle
-    // witness, ~10× cost); portable=false → xxhash64 (the scale path,
-    // same selection structure — run THIS on real corpora)
     val hs = transform(tokenShingles(col(tokensCol), k),
-      s => if (portable) conv(substring(md5(s), 1, 8), 16, 10).cast("long")
-           else xxhash64(s))
+      s => conv(substring(md5(s), 1, 8), 16, 10).cast("long"))
     val n = size(col("__hs"))
     val nWin = n - (w - 1)
     // sequence(1, x) with x<1 DESCENDS in Spark — the <w branch never
@@ -292,17 +262,20 @@ object Dedup {
       .filter(col("inter") >= 1 && col("jaccard") >= minJ)
       .select(col("id1"), col("id2"), col("jaccard"))
 
-  /** EDIT-DISTANCE-verified near-dup pairs — the character-level dedup
+  /** EDIT-DISTANCE verify of an EXTERNAL candidate pair frame (id1,
+    * id2) — any full-recall candidate generator composes here, same
+    * contract as [[verifyJaccard]]; the gated query rides the memoized
+    * prefix-filtered 3-shingle pair substrate (QShared.dedupPairs3)
+    * instead of re-running pair generation. The character-level dedup
     * modality the shingle family is blind INSIDE of: token-level
     * Jaccard treats re-spellings ("colour"→"color"), OCR confusions
     * and small in-word edits as wholly different tokens (every
     * k-shingle containing the edited word breaks), while Levenshtein
     * prices them as the few character operations they are — the
     * near-dup detector for short/templated text where a handful of
-    * character edits IS the difference. Candidates come from the
-    * prefix-filtered 3-shingle kernel at a LOOSE `candJ` (lossless at
-    * that threshold, hot-shingle-safe; near-identical texts keep most
-    * shingles, so real edit-pairs survive a low bar easily), a
+    * character edits IS the difference. Candidates come from a
+    * Jaccard kernel at a LOOSE threshold (near-identical texts keep
+    * most shingles, so real edit-pairs survive a low bar easily); a
     * length-difference pre-filter drops pairs that cannot pass
     * (dist ≥ |L1−L2|, so |L1−L2| > maxNed·max ⇒ raw ned > maxNed)
     * BEFORE any O(L²) work, and exact Levenshtein verifies the
@@ -334,24 +307,6 @@ object Dedup {
     * identical integer distances.
     * Output: (id1, id2, dist, ned), ned ≤ maxNed.
     */
-  def editPairs(
-      docs: DataFrame, idCol: String, textCol: String, toksCol: String,
-      candJ: Double = 0.3, maxNed: Double = 0.5): DataFrame =
-    editVerify(
-      jaccardPairsPrefix(
-        shingleHashesViaArrays(
-          docs.select(col(idCol), col(toksCol)), idCol, toksCol, k = 3),
-        candJ),
-      docs, idCol, textCol, maxNed)
-
-  /** The Levenshtein verify tail of [[editPairs]], over an EXTERNAL
-    * candidate pair frame (id1, id2) — the composition point that lets
-    * the gated query ride an already-memoized pair substrate
-    * (QShared.dedupPairs3) instead of re-running pair generation: any
-    * full-recall candidate generator composes here, same contract as
-    * [[verifyJaccard]]. Length-diff pre-filter, exact levenshtein,
-    * rounded-ned boundary — see [[editPairs]].
-    */
   def editVerify(
       cand: DataFrame, docs: DataFrame, idCol: String, textCol: String,
       maxNed: Double): DataFrame = {
@@ -363,7 +318,7 @@ object Dedup {
         length(col(textCol)).as("l2")), Seq("id2"))
       .withColumn("mx", greatest(col("l1"), col("l2")))
       .filter(abs(col("l1") - col("l2")) <= col("mx") * lit(maxNed))
-      // banded k-limited DP, k per pair (see editPairs scaladoc): the
+      // banded k-limited DP, k per pair (see the scaladoc): the
       // +5e-7 carries the 6-dp rounding half-ulp so the band is exact
       // at any text length, and -1 = distance provably > k = provably
       // over maxNed → dropped
@@ -536,20 +491,17 @@ object Dedup {
     * its size table both broadcast: the corpus stream is probed
     * map-side and only MATCHING (cid, eid) rows shuffle into the
     * intersection count (a vanishing fraction). The corpus size table
-    * joins the aggregate, never the stream. A large reference side
-    * flips `broadcastRef` off for plain shuffled joins.
+    * joins the aggregate, never the stream.
     */
   def crossJaccardPairs(
-      corpusE: DataFrame, refE: DataFrame, minJ: Double,
-      broadcastRef: Boolean = true): DataFrame = {
-    val bc: DataFrame => DataFrame = if (broadcastRef) broadcast else identity
+      corpusE: DataFrame, refE: DataFrame, minJ: Double): DataFrame = {
     val cSizes = corpusE.groupBy(col("id")).agg(count(lit(1)).as("c_sz"))
     val eSizes = refE.groupBy(col("id")).agg(count(lit(1)).as("e_sz"))
     corpusE.select(col("id").as("cid"), col("h"))
-      .join(bc(refE.select(col("id").as("eid"), col("h"))), Seq("h"))
+      .join(broadcast(refE.select(col("id").as("eid"), col("h"))), Seq("h"))
       .groupBy(col("cid"), col("eid")).agg(count(lit(1)).as("inter"))
       .join(cSizes.withColumnRenamed("id", "cid"), "cid")
-      .join(bc(eSizes.withColumnRenamed("id", "eid")), "eid")
+      .join(broadcast(eSizes.withColumnRenamed("id", "eid")), "eid")
       .withColumn("jaccard",
         col("inter") / (col("c_sz") + col("e_sz") - col("inter")))
       .filter(col("jaccard") >= minJ)
@@ -615,16 +567,6 @@ object Dedup {
       .select(col("id1"), col("id2"), col("containment"))
   }
 
-  /** Exact pairwise Jaccard over distinct shingle sets: all pairs
-    * sharing ≥1 shingle (plus optional equality blocking column) with
-    * jaccard ≥ minJ. Output: (id1, id2, jaccard).
-    */
-  def jaccardPairs(
-      docs: DataFrame, idCol: String, shinglesCol: String,
-      minJ: Double, blockCol: Option[String] = None): DataFrame =
-    jaccardPairsFromHashes(
-      shingleHashes(docs, idCol, shinglesCol, k = 1, blockCol), minJ, blockCol)
-
   /** Seeded universal-hash parameters for MinHash: (a, b) pairs mod a
     * Mersenne prime. Deterministic for a seed.
     */
@@ -634,16 +576,6 @@ object Dedup {
       rnd.nextInt(MinhashPrime.toInt).toLong))
   }
   val MinhashPrime: Long = (1L << 31) - 1  // 2^31-1, Mersenne
-
-  /** MinHash signatures: (id, sig array<long> of length numHashes).
-    * Base shingle hash is Spark's murmur3 `hash()` (sign-normalized);
-    * h_j = (a_j·x + b_j) mod p, minimized per doc. One explode + one
-    * wide groupBy — map-side partial min, fully codegen'd.
-    */
-  def minhashSignatures(
-      docs: DataFrame, idCol: String, shinglesCol: String,
-      numHashes: Int = 128, seed: Long = 42L): DataFrame =
-    minhashFromHashes(shingleHashes(docs, idCol, shinglesCol, k = 1), numHashes, seed)
 
   /** MinHash from pre-exploded shingle hashes (the [[shingleHashes]]
     * form): h_j = (a_j·x + b_j) mod p minimized per doc, one wide
@@ -723,7 +655,7 @@ object Dedup {
   }
 
   /** Cross-engine-verifiable MinHash+LSH candidates: the same
-    * signature→band→bucket-join pipeline as [[minhashSignatures]] +
+    * signature→band→bucket-join pipeline as [[minhashFromHashes]] +
     * [[lshCandidates]], but every step is portable SQL — base hash =
     * the first 8 hex digits of md5(shingle) (not Spark-private
     * murmur3/xxhash64), band keys = joined decimal strings (not
@@ -866,6 +798,24 @@ object Dedup {
       .drop("__rk", "rep")
   }
 
+  /** The (id, s, h) k-gram position stream every span-dedup operator
+    * starts from: one row per 1-based window start `s` with the md5 of
+    * the k tokens at [s, s+k) (32-hex string — the cross-engine oracle
+    * witness, like [[minhashPairsPortable]]; a gram collision would
+    * only over-scrub one span).
+    */
+  private def gramStream(
+      docs: DataFrame, idCol: String, toksCol: String, k: Int): DataFrame = {
+    val gramArr =
+      s"""CASE WHEN size($toksCol) >= $k
+         | THEN transform(sequence(1, size($toksCol) - ${k - 1}),
+         |        i -> md5(array_join(slice($toksCol, i, $k), ' ')))
+         | ELSE array() END""".stripMargin
+    docs
+      .select(col(idCol), posexplode(expr(gramArr)).as(Seq("p0", "h")))
+      .select(col(idCol), (col("p0") + 1).as("s"), col("h"))
+  }
+
   /** Duplicated-span scrubbing — ExactSubstr-lite (Lee et al.,
     * "Deduplicating Training Data Makes Language Models Better",
     * arXiv:2107.06499; the substring-level counterpart to document
@@ -881,31 +831,6 @@ object Dedup {
     * hot-start list. Two shuffles total (gram count, per-doc start
     * lists) at any corpus size — never a self-join.
     */
-  /** The (id, s, h) k-gram position stream every span-dedup operator
-    * starts from: one row per 1-based window start `s` with a hash of
-    * the k tokens at [s, s+k). `portable=true` hashes with md5 (32-hex
-    * string — the cross-engine oracle witness, like
-    * [[minhashPairsPortable]]); `portable=false` with xxhash64 (8-byte
-    * long — the scale path: 4× narrower shuffle rows and ~10× cheaper
-    * hashing; run THIS on real corpora). Only the hash constants
-    * differ — the duplicated-position set, and therefore every
-    * downstream scrub/span result, is identical (parity-asserted in
-    * DedupSpec; a 2⁻⁶⁴ gram collision would only over-scrub one span).
-    */
-  private def gramStream(
-      docs: DataFrame, idCol: String, toksCol: String, k: Int,
-      portable: Boolean = true): DataFrame = {
-    val hashFn = if (portable) "md5" else "xxhash64"
-    val gramArr =
-      s"""CASE WHEN size($toksCol) >= $k
-         | THEN transform(sequence(1, size($toksCol) - ${k - 1}),
-         |        i -> $hashFn(array_join(slice($toksCol, i, $k), ' ')))
-         | ELSE array() END""".stripMargin
-    docs
-      .select(col(idCol), posexplode(expr(gramArr)).as(Seq("p0", "h")))
-      .select(col(idCol), (col("p0") + 1).as("s"), col("h"))
-  }
-
   def scrubHotSpans(
       docs: DataFrame, idCol: String, toksCol: String,
       k: Int, minDocs: Long): DataFrame = {
@@ -1001,8 +926,8 @@ object Dedup {
     */
   def scrubDupSpans(
       docs: DataFrame, idCol: String, toksCol: String,
-      minLen: Int, minOcc: Long = 2L, portable: Boolean = true): DataFrame = {
-    val grams = gramStream(docs, idCol, toksCol, minLen, portable)
+      minLen: Int, minOcc: Long = 2L): DataFrame = {
+    val grams = gramStream(docs, idCol, toksCol, minLen)
     val dup = grams.groupBy("h").agg(count(lit(1)).as("n"))
       .filter(col("n") >= minOcc).select("h")
     val dupStarts = grams.join(dup, "h")
@@ -1037,8 +962,8 @@ object Dedup {
     */
   def dupSpans(
       docs: DataFrame, idCol: String, toksCol: String,
-      minLen: Int, minOcc: Long = 2L, portable: Boolean = true): DataFrame = {
-    val grams = gramStream(docs, idCol, toksCol, minLen, portable)
+      minLen: Int, minOcc: Long = 2L): DataFrame = {
+    val grams = gramStream(docs, idCol, toksCol, minLen)
     val dup = grams.groupBy("h").agg(count(lit(1)).as("n"))
       .filter(col("n") >= minOcc).select("h")
     val perDoc = grams.join(dup, "h")
@@ -1095,9 +1020,9 @@ object Dedup {
     */
   def substringDups(
       docs: DataFrame, idCol: String, toksCol: String,
-      k: Int, minDocs: Long, portable: Boolean = true): DataFrame = {
+      k: Int, minDocs: Long): DataFrame = {
     require(k >= 1 && minDocs >= 2)
-    val grams = gramStream(docs, idCol, toksCol, k, portable)
+    val grams = gramStream(docs, idCol, toksCol, k)
     val dup = grams.groupBy("h").agg(countDistinct(idCol).as("nd"))
       .filter(col("nd") >= minDocs)
     val perDoc = grams.join(dup, "h")
@@ -1200,23 +1125,20 @@ object Dedup {
     * shares ≥1 length-n token shingle with any benchmark/eval document.
     * Both gram columns must be ARRAY columns — [[tokenShingles]] string
     * arrays for the portable/oracled form, or per-doc hash arrays (the
-    * [[shingleHashesViaArrays]] pre-explode shape) for the scale form;
+    * QShared.shingles3Arrays shape) for the scale form;
     * pre-exploded (id, h) row inputs are not accepted. Returns
     * (id, n_hits): contaminated corpus ids with their DISTINCT
     * overlapping-gram counts; [[decontaminate]] anti-joins them away.
     *
     * Scale: eval sets are tiny next to a 100 TB corpus, so the gram
-    * join broadcasts the benchmark side (`broadcastBench`) — the corpus
-    * is filtered map-side, nothing shuffles but the hits (rows that
-    * matched, a vanishing fraction). A huge benchmark side flips to a
-    * plain shuffled join.
+    * join broadcasts the benchmark side — the corpus is filtered
+    * map-side, nothing shuffles but the hits (rows that matched, a
+    * vanishing fraction).
     */
   def contaminationHits(
       corpus: DataFrame, idCol: String, gramsCol: String,
-      bench: DataFrame, benchGramsCol: String,
-      broadcastBench: Boolean = true): DataFrame = {
-    val bg0 = bench.select(explode(col(benchGramsCol)).as("g")).distinct()
-    val bg = if (broadcastBench) broadcast(bg0) else bg0
+      bench: DataFrame, benchGramsCol: String): DataFrame = {
+    val bg = broadcast(bench.select(explode(col(benchGramsCol)).as("g")).distinct())
     corpus
       .select(col(idCol).as("id"), explode(array_distinct(col(gramsCol))).as("g"))
       .join(bg, Seq("g"))

@@ -16,16 +16,10 @@ import org.apache.spark.sql.types.LongType
   */
 object IdOps {
 
-  /** 1..N ids in `orderCols` order via a global window — exact reference
-    * semantics. The single-partition window IS the reference's
-    * single-reducer bottleneck; fine for oracle-checked runs, use
-    * [[sequentialIdsAtScale]] on big data.
-    */
-  def sequentialIds(df: DataFrame, orderCols: Seq[String], idCol: String): DataFrame =
-    df.withColumn(idCol, row_number().over(Window.orderBy(orderCols.map(col): _*)).cast(LongType))
-
-  /** Same contract (1..N dense ids in `orderCols` order) without a
-    * single-partition stage: range-repartition + in-partition sort, then
+  /** 1..N dense ids in `orderCols` order — the reference semantics —
+    * without the reference's single-reducer stage (a global window
+    * would funnel the table through one task): range-repartition +
+    * in-partition sort, then
     * per-partition counts → cumulative offsets (k-row driver reduction)
     * → offset + local index per partition. Two jobs, no global shuffle
     * to one task — survives 100 TB inputs.

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-scan column profiler — the data-quality summary every ingest
@@ -14,10 +14,7 @@ import org.apache.spark.sql.functions._
   * ones in a single agg makes Spark evaluate every plain buffer on
   * each of the Expand's k+1 row copies (17 s at sf0.1 for the gated
   * column set), while the two separate apps run the same data in
-  * ~0.4 s total. `exactNdv = false` swaps the exact NDVs for HLL++
-  * and collapses everything back into the single plain pass — the
-  * right default at 100 TB; the gated query keeps it exact so the
-  * oracle can replay it.
+  * ~0.4 s total. NDVs are exact so the oracle can replay them.
   *
   * The mean is the engine's 1e-6 fixed-point device (terms quantized
   * to exact longs, one division at the end) so it value-oracles;
@@ -26,8 +23,7 @@ import org.apache.spark.sql.functions._
   */
 object Profile {
 
-  def profile(df: DataFrame, numCols: Seq[String], strCols: Seq[String],
-      exactNdv: Boolean = true): DataFrame = {
+  def profile(df: DataFrame, numCols: Seq[String], strCols: Seq[String]): DataFrame = {
     require(numCols.nonEmpty || strCols.nonEmpty)
     val all = numCols ++ strCols
     val plainAggs = Seq(count(lit(1)).as("__n")) ++
@@ -40,16 +36,10 @@ object Profile {
       strCols.flatMap(c => Seq(
         sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__${c}_nulls"),
         min(col(c)).as(s"__${c}_min"),
-        max(col(c)).as(s"__${c}_max"))) ++
-      (if (exactNdv) Nil
-       else all.map(c => approx_count_distinct(col(c)).as(s"__${c}_ndv")))
-    val plain = df.agg(plainAggs.head, plainAggs.tail: _*)
-    val stats =
-      if (!exactNdv) plain
-      else {
-        val ndvAggs = all.map(c => countDistinct(col(c)).as(s"__${c}_ndv"))
-        plain.crossJoin(df.agg(ndvAggs.head, ndvAggs.tail: _*))
-      }
+        max(col(c)).as(s"__${c}_max")))
+    val ndvAggs = all.map(c => countDistinct(col(c)).as(s"__${c}_ndv"))
+    val stats = df.agg(plainAggs.head, plainAggs.tail: _*)
+      .crossJoin(df.agg(ndvAggs.head, ndvAggs.tail: _*))
     // the stats frame is ONE row; checkpoint so the per-column
     // projections below don't re-run the table scan(s) per branch
     val row = stats.localCheckpoint()

@@ -27,12 +27,6 @@ object Similarity {
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity; 0 when either side has zero norm. */
-  def cosine(a: Column, b: Column): Column = {
-    val d = dot(a, b) / (l2norm(a) * l2norm(b))
-    when(l2norm(a) === 0 || l2norm(b) === 0, lit(0.0)).otherwise(d)
-  }
-
   /** Pre-normalize vectors so downstream cosine = plain dot product —
     * normalize once, not once per pair.
     */
@@ -66,46 +60,10 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("vec_id"), col("cos"))
   }
 
-  /** All-pairs cosine ≥ minCos via broadcast matrix + per-partition
-    * primitive-array loops — the O(n²·d) inner product is ~100× faster
-    * in tight JVM loops than per-pair Catalyst array allocation, and the
-    * broadcast side is only n·d doubles. Output: (id1, id2, cos) for
-    * every pair id1 < id2 with cos ≥ minCos — the contract every
-    * kernel [[cosinePairsAuto]] routes to shares; identical IEEE
-    * arithmetic order (sequential over dims) so round-6 results agree
-    * with the oracle. This is the mapPartitions escape hatch used deliberately: an all-pairs kernel
-    * is genuine per-partition imperative logic (SURVEY §1.1).
-    *
-    * SMALL-CORPUS KERNEL ONLY: it collects the n×d matrix to the driver.
-    * The scale paths are [[cosinePairsBlocked]] (exact, distributed) and
-    * [[cosinePairsLsh]] (high-threshold near-dup); [[cosinePairsAuto]]
-    * routes.
-    */
-  def cosinePairsFast(
-      corpus: DataFrame, idCol: String, vecCol: String, minCos: Double): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val unit = withUnitVec(
-      corpus.select(col(idCol).cast("long").as("id"),
-        KMeansOps.asDouble(col(vecCol)).as("v")), "v", "u")
-      .select(col("id"), col("u"))
-    val all = unit.as[(Long, Array[Double])].collect().sortBy(_._1)
-    val bcast = spark.sparkContext.broadcast(all)
-    unit.as[(Long, Array[Double])].mapPartitions { it =>
-      val mat = bcast.value
-      it.flatMap { case (id1, u1) =>
-        mat.iterator.filter(_._1 > id1).flatMap { case (id2, u2) =>
-          var s = 0.0
-          var i = 0
-          while (i < u1.length) { s += u1(i) * u2(i); i += 1 }
-          if (s >= minCos) Iterator.single((id1, id2, s)) else Iterator.empty
-        }
-      }
-    }.toDF("id1", "id2", "cos")
-  }
-
-  /** Exact all-pairs cosine ≥ minCos with NO driver-side collect — the
-    * 100 TB form of [[cosinePairsFast]]. Vectors are hashed into
+  /** Exact all-pairs cosine ≥ minCos with NO driver-side collect.
+    * Output: (id1, id2, cos) for every pair id1 < id2 with
+    * cos ≥ minCos; each dot product sums sequentially over dims, so
+    * round-6 results agree with the oracle. Vectors are hashed into
     * `blocks` groups; each of the blocks·(blocks+1)/2 block pairs
     * becomes one task that runs the same tight primitive-array kernel
     * over its two blocks. Work is still O(n²·d) — exact all-pairs is
@@ -219,24 +177,6 @@ object Similarity {
   private[graft] def hyperplanes(bands: Int, bits: Int, dim: Int, seed: Long): Seq[Double] = {
     val rnd = new scala.util.Random(seed)
     Seq.fill(bands * bits * dim)(rnd.nextGaussian())
-  }
-
-  /** Routing wrapper for cosine pairs: small corpora take the
-    * broadcast-matrix kernel ([[cosinePairsFast]] — fastest when the
-    * n×d matrix fits the driver); large corpora take [[cosinePairsLsh]]
-    * when the threshold is high enough for strong recall (≥ lshMinCos),
-    * else the exact distributed [[cosinePairsBlocked]] — a low
-    * similarity threshold genuinely requires quadratic work, LSH cannot
-    * prune cos 0.4 from the cos 0 background (p = 0.63 vs 0.5 per bit).
-    */
-  def cosinePairsAuto(
-      corpus: DataFrame, idCol: String, vecCol: String, minCos: Double,
-      collectLimit: Long = 100000, lshMinCos: Double = 0.85): DataFrame = {
-    val n = corpus.count()
-    if (n <= collectLimit) cosinePairsFast(corpus, idCol, vecCol, minCos)
-    else if (minCos >= lshMinCos) cosinePairsLsh(corpus, idCol, vecCol, minCos)
-    else cosinePairsBlocked(corpus, idCol, vecCol, minCos,
-      blocks = math.max(16, (n / 4096L).toInt))
   }
 
   /** Symmetric per-vector int8 quantization — 4× smaller embeddings for
@@ -353,13 +293,12 @@ object Similarity {
     * w·mw tail contributions) from the index, collapsing the
     * Σ_t df(t)² hot-term fan-out exactly where it explodes; the
     * verify shuffles only candidate ids and their sparse rows. The
-    * input is localCheckpointed by default — it feeds term stats,
-    * prefixes, and the two verify probes.
+    * input is localCheckpointed — it feeds term stats, prefixes, and
+    * the two verify probes.
     * Output: (id1, id2, cos) with id1 < id2, cos ≥ minCos, unrounded.
     */
-  def cosinePairsSparse(
-      e0: DataFrame, minCos: Double, materialize: Boolean = true): DataFrame = {
-    val e = if (materialize) e0.localCheckpoint() else e0
+  def cosinePairsSparse(e0: DataFrame, minCos: Double): DataFrame = {
+    val e = e0.localCheckpoint()
     val stats = e.groupBy(col("word"))
       .agg(max(col("w")).as("__mw"), count(lit(1)).as("__df"))
     val ord = Window.partitionBy(col("id")).orderBy(col("__df"), col("word"))
@@ -765,8 +704,7 @@ object Similarity {
     * prototypicality is its cosine to its assigned (nearest-Euclid)
     * cluster centroid — high cos = prototypical/easy, low cos = the
     * cluster's hard margin — and the paper's abundant-data regime
-    * keeps the HARDEST fraction per cluster (`keepHardest = true`;
-    * false keeps the most prototypical, the scarce-data regime). The
+    * keeps the HARDEST fraction per cluster (the lowest cos). The
     * keep quota is per-cell and exact-rational: quota =
     * ⌈n_c · keepNum / keepDen⌉ in integer arithmetic, rank on
     * (ROUNDED proto, id) — both engine-independent, so the keep
@@ -788,8 +726,7 @@ object Similarity {
   def protoPrune(
       emb: DataFrame, idCol: String, vecCol: String,
       cells: Array[(Long, Array[Double])],
-      keepNum: Int, keepDen: Int,
-      keepHardest: Boolean = true, scale: Int = 4): DataFrame = {
+      keepNum: Int, keepDen: Int, scale: Int = 4): DataFrame = {
     require(cells.nonEmpty && keepNum >= 0 && keepDen > 0 && keepNum <= keepDen)
     val pts = emb.select(col(idCol), KMeansOps.asDouble(col(vecCol)).as("v"))
       // norm hoisted to an attribute so the C structs share ONE 64-term
@@ -808,12 +745,10 @@ object Similarity {
     val best = pts
       .withColumn("__s", element_at(sort_array(scored), 1))
       .select(col(idCol), col("__s.c").as("cell"), col("__s.p").as("proto"))
-    val ord =
-      if (keepHardest) Seq(col("proto").asc_nulls_last, col(idCol).asc)
-      else Seq(col("proto").desc_nulls_last, col(idCol).asc)
     val w = Window.partitionBy(col("cell"))
     best
-      .withColumn("rank", row_number().over(w.orderBy(ord: _*)).cast("int"))
+      .withColumn("rank", row_number()
+        .over(w.orderBy(col("proto").asc_nulls_last, col(idCol).asc)).cast("int"))
       .withColumn("n_c", count(lit(1)).over(w))
       .withColumn("kept",
         col("rank") <= expr(s"(n_c * $keepNum + ${keepDen - 1}) DIV $keepDen"))
@@ -1206,59 +1141,31 @@ object Similarity {
         (round(col("cov"), scale) + lit(0.0)).as("cov"))
   }
 
-  /** Driver-side dominant eigenpair of a small dense symmetric matrix
-    * (e.g. a collected d×d [[embedCovariance]] — d doubles², a k-row
-    * scalar reduction in the documented sense) via power iteration
-    * with deterministic start vector (1,1,…,1)/√d. Sign convention:
-    * first nonzero component positive. Returns (eigenvalue,
-    * eigenvector). Pure math, no Spark — the PCA rotation this yields
-    * is then a broadcast-able d×p matrix applied map-side.
+  /** The power-iteration loop behind [[topPBasis]]/[[pcaProject]]:
+    * `iters` raw (un-normalized) steps from the deterministic start
+    * (1,…,1)/√d, so the axis stays a closed-form polynomial of the
+    * rounded matrix (the oracle recipe), with an out-of-[1e-100,1e100]
+    * rescale guard that is bit-for-bit inert at oracle iteration
+    * counts. Returns the un-normalized v.
     */
-  def topEigen(m: Array[Array[Double]], iters: Int = 200): (Double, Array[Double]) = {
-    val (v, lambda) = powerLoop(m, iters, normalizeEachStep = true)
-    if (lambda == 0.0) return (0.0, v)
-    val flip = v.find(_ != 0.0).exists(_ < 0)
-    (lambda, if (flip) v.map(-_) else v)
-  }
-
-  /** THE power-iteration loop — the single implementation behind
-    * [[topEigen]] (converged: normalize every step, λ = last step's
-    * norm) and [[topPBasis]]/[[pcaProject]] (oracle recipe: raw steps
-    * so the axis stays a closed-form polynomial of the rounded matrix,
-    * with the documented out-of-[1e-100,1e100] rescale guard that is
-    * bit-for-bit inert at oracle iteration counts). Two copies of this
-    * loop is how the r8 signed-zero class of bug ships in only one
-    * (ADVICE r9 #2). Returns (v, λ); λ is 0.0 until a normalized step
-    * ran, and the loop bails early (v as-is) on an exactly-zero image.
-    */
-  private def powerLoop(m: Array[Array[Double]], iters: Int,
-      normalizeEachStep: Boolean): (Array[Double], Double) = {
+  private def powerLoop(m: Array[Array[Double]], iters: Int): Array[Double] = {
     val d = m.length
     var v = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
-    var lambda = 0.0
     var it = 0
     while (it < iters) {
-      val nv = Array.tabulate(d)(i => {
+      v = Array.tabulate(d)(i => {
         var s = 0.0; var j = 0
         while (j < d) { s += m(i)(j) * v(j); j += 1 }
         s
       })
-      if (normalizeEachStep) {
-        val nrm = math.sqrt(nv.map(x => x * x).sum)
-        if (nrm == 0.0) return (v, 0.0)
-        v = nv.map(_ / nrm)
-        lambda = nrm
-      } else {
-        v = nv
-        val mx = v.map(math.abs).max
-        if (mx > 0 && (mx < 1e-100 || mx > 1e100)) {
-          val inv = 1.0 / mx
-          v = v.map(_ * inv)
-        }
+      val mx = v.map(math.abs).max
+      if (mx > 0 && (mx < 1e-100 || mx > 1e100)) {
+        val inv = 1.0 / mx
+        v = v.map(_ * inv)
       }
       it += 1
     }
-    (v, lambda)
+    v
   }
 
   /** Asymmetric-distance (ADC) top-k search over PQ codes (Jégou, Douze
@@ -1336,8 +1243,7 @@ object Similarity {
     * like centroids), run `iters` UN-normalized power-method steps from
     * the deterministic start (1,…,1)/√d (fixed iteration count and no
     * per-step normalization keep the axis a closed-form polynomial of
-    * the rounded matrix — the value-oracle contract; [[topEigen]] is
-    * the converged production variant), normalize once, orient the
+    * the rounded matrix — the value-oracle contract), normalize once, orient the
     * first nonzero component positive, and project every CENTERED
     * vector: proj = v·u − μ·u (the mean term is one constant, so
     * centering never touches the data). μ is rounded (9 dp) before the
@@ -1424,7 +1330,7 @@ object Similarity {
       BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
     val basis = Seq.newBuilder[(Double, Array[Double])]
     (0 until p).foreach { c =>
-      val (v, _) = powerLoop(m, iters, normalizeEachStep = false)
+      val v = powerLoop(m, iters)
       val nrm = math.sqrt(v.map(x => x * x).sum)
       require(nrm > 0,
         s"degenerate covariance: zero direction at component ${c + 1} — reduce p")

@@ -12,9 +12,7 @@ import org.apache.spark.sql.functions._
   * preserving duplicates and order.
   *
   * Everything here is pure Catalyst column expressions (codegen'd,
-  * no UDFs). Dictionaries are inlined as literal arrays when small;
-  * [[filterByDictDf]] gives the broadcast-join scale path for
-  * dictionaries too large to ship as literals.
+  * no UDFs). Dictionaries are inlined as literal arrays.
   */
 object TextOps {
 
@@ -25,11 +23,6 @@ object TextOps {
     * oracle (RE2), so parity holds.
     */
   val TokenPattern = "(?u)\\b\\w\\w+\\b"
-
-  /** Same pattern without the `(?u)` flag — RE2 (DuckDB) rejects the
-    * flag but has identical `\b\w\w+\b` semantics for ASCII text.
-    */
-  val TokenPatternRe2 = "\\b\\w\\w+\\b"
 
   /** Lowercase + regex tokenize (reference: MapperExtractTransform.java:74-75). */
   def tokenize(text: Column): Column =
@@ -70,37 +63,6 @@ object TextOps {
   def tokenizeFiltered(text: Column, stopwords: Seq[String], dict: Seq[String]): Column = {
     val noStop = removeStopwords(tokenize(text), stopwords)
     if (dict.isEmpty) noStop else keepDictionary(noStop, dict)
-  }
-
-  /** Scale path for big dictionaries: explode tokens, semi-join against
-    * the dictionary table, re-assemble in original order. Equivalent to
-    * [[keepDictionary]] but the dictionary is a table, not a literal
-    * list. Dictionaries at or under `maxBroadcast` rows are broadcast
-    * (hash lookup, no shuffle of the exploded tokens); larger ones go
-    * through a shuffle left-semi join — force-broadcasting a
-    * billion-row dictionary would OOM every executor. The size probe is
-    * a `limit(maxBroadcast+1).count()`, which stops scanning at the
-    * threshold.
-    *
-    * @param dictDf single-column DataFrame of dictionary words ("word")
-    * @param maxBroadcast largest dictionary row count to broadcast
-    */
-  def filterByDictDf(
-      docs: DataFrame, idCol: String, tokensCol: String, dictDf: DataFrame,
-      maxBroadcast: Long = 1000000L): DataFrame = {
-    val dict = dictDf.withColumnRenamed(dictDf.columns.head, "token")
-    val small = dict.limit((maxBroadcast + 1).min(Int.MaxValue).toInt).count() <= maxBroadcast
-    val exploded = docs
-      .select(col(idCol), posexplode(col(tokensCol)).as(Seq("pos", "token")))
-    val kept = exploded.join(
-      if (small) broadcast(dict) else dict,
-      Seq("token"), "left_semi")
-    val reassembled = kept
-      .groupBy(idCol)
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("token")))),
-        s => s.getField("token")).as(tokensCol))
-    docs.drop(tokensCol).join(reassembled, Seq(idCol), "left")
-      .withColumn(tokensCol, coalesce(col(tokensCol), array()))
   }
 
   /** Email/phone patterns for [[redactPii]] — deliberately built from
@@ -316,20 +278,11 @@ object TextOps {
     * (an intentional "Ã©" mention, digraph soup) would be
     * rewritten here and not in DuckDB. Any future non-ASCII fixture
     * routed through normalizeText must be mojibake-STABLE in both
-    * engines — or use [[normalizeTextNoRepair]], the identical chain
-    * without the repair, and hash the raw form.
+    * engines.
     */
   def normalizeText(text: Column): Column =
     trim(regexp_replace(lower(graft.functions.UnicodeNorm.nfc(
       graft.functions.Mojibake.fixEncoding(text))),
-      "[^a-z0-9]+", " "))
-
-  /** [[normalizeText]] WITHOUT the mojibake repair — for
-    * oracle-sensitive paths whose fixtures must survive byte-for-byte
-    * even when they look like a cp1252 double-encoding (see the
-    * oracle constraint on [[normalizeText]]). */
-  def normalizeTextNoRepair(text: Column): Column =
-    trim(regexp_replace(lower(graft.functions.UnicodeNorm.nfc(text)),
       "[^a-z0-9]+", " "))
 
   /** Deterministic T5-style span corruption (Raffel et al., JMLR 2020
@@ -405,30 +358,12 @@ object TextOps {
   /** GPT-style sequence packing: concatenate all docs in `orderCol`
     * order and cut fixed `budget`-token sequences — each doc gets its
     * global token offset (exclusive running sum) and the sequence ids
-    * its span covers. One global-window pass — the oracle-parity form;
-    * [[packSequencesAtScale]] is the same contract without the
-    * single-partition stage. Output columns added: `tok_offset`,
-    * `seq_first`, `seq_last`.
-    */
-  def packSequences(
-      docs: DataFrame, orderCol: String, nTokensCol: String, budget: Long): DataFrame = {
-    require(budget > 0)
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col(orderCol))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    docs
-      .withColumn("tok_offset", coalesce(sum(col(nTokensCol)).over(w), lit(0L)))
-      // integer division: double division of large offsets loses ulps
-      .withColumn("seq_first", expr(s"tok_offset div $budget"))
-      .withColumn("seq_last",
-        when(col(nTokensCol) === 0, col("seq_first"))
-          .otherwise(expr(s"(tok_offset + $nTokensCol - 1) div $budget")))
-  }
-
-  /** [[packSequences]] without the single-partition window: range
-    * repartition on `orderCol`, per-partition token totals → cumulative
-    * offsets (a partition-count-row driver reduction, cheap at any
-    * scale), then a local running sum per partition — the same
-    * construction as IdOps.sequentialIdsAtScale. Identical output
+    * its span covers. Output columns added: `tok_offset`, `seq_first`,
+    * `seq_last`. No single-partition window: range repartition on
+    * `orderCol`, per-partition token totals → cumulative offsets (a
+    * partition-count-row driver reduction, cheap at any scale), then a
+    * local running sum per partition — the same construction as
+    * IdOps.sequentialIdsAtScale. Equal to the global-window form
     * (parity-tested).
     */
   def packSequencesAtScale(
@@ -504,8 +439,7 @@ object TextOps {
     * including 4-label plain rules (`pvt.k12.ma.us`) and 4-label
     * wildcard bases (`*.compute.amazonaws.com.cn`). This is the
     * DEFAULT rule set of [[urlApexPsl]]/[[pslPSql]]/[[pslApexSql]]
-    * since r14 (VERDICT r13 #3 — the curated [[PslRules]] snapshot
-    * remains for shape-focused specs). Unicode rules are IDNA-
+    * since r14 (VERDICT r13 #3). Unicode rules are IDNA-
     * normalized to punycode at parse time by [[parsePsl]] so they meet
     * the [[urlHost]]-normalized hosts in one canonical ASCII space.
     */
@@ -515,93 +449,6 @@ object TextOps {
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
     finally in.close()
   }
-
-  /** Public Suffix List rule SNAPSHOT in the list's own rule syntax
-    * (publicsuffix.org/list — plain rules, `*.` wildcard rules, `!`
-    * exception rules), curated from the public Mozilla PSL's ICANN
-    * section: the ccTLD second-level registry families plus every rule
-    * SHAPE the full list uses — single-label wildcards (`*.ck`), the
-    * jp city wildcard blocks (`*.kobe.jp`), their exceptions
-    * (`!www.ck`, `!city.kobe.jp`), and three-label US locality
-    * registries (`k12.ca.us`). Kept for the shape-focused specs and as
-    * a small worked example; production (and the gated q_url_apex)
-    * runs on [[PslRulesFull]].
-    */
-  val PslRules: Seq[String] = Seq(
-    // single-label wildcards + their exceptions
-    "*.ck", "!www.ck", "*.bd", "*.er", "*.fk", "*.jm", "*.kh", "*.mm",
-    "*.np", "*.pg", "*.ye",
-    // jp second-level + city wildcard blocks with exceptions
-    "co.jp", "or.jp", "ne.jp", "ac.jp", "go.jp", "ad.jp", "ed.jp",
-    "gr.jp", "lg.jp",
-    "*.kawasaki.jp", "*.kitakyushu.jp", "*.kobe.jp", "*.nagoya.jp",
-    "*.sapporo.jp", "*.sendai.jp", "*.yokohama.jp",
-    "!city.kawasaki.jp", "!city.kitakyushu.jp", "!city.kobe.jp",
-    "!city.nagoya.jp", "!city.sapporo.jp", "!city.sendai.jp",
-    "!city.yokohama.jp",
-    // uk
-    "co.uk", "org.uk", "ac.uk", "gov.uk", "me.uk", "net.uk", "ltd.uk",
-    "plc.uk", "sch.uk", "nhs.uk", "police.uk",
-    // au / nz
-    "com.au", "net.au", "org.au", "edu.au", "gov.au", "asn.au", "id.au",
-    "co.nz", "net.nz", "org.nz", "govt.nz", "ac.nz", "geek.nz", "gen.nz",
-    "kiwi.nz", "maori.nz", "school.nz", "cri.nz", "iwi.nz",
-    // americas
-    "com.br", "net.br", "org.br", "gov.br", "edu.br", "mil.br", "art.br",
-    "com.mx", "org.mx", "net.mx", "gob.mx", "edu.mx",
-    "com.ar", "edu.ar", "gob.ar", "int.ar", "mil.ar", "net.ar", "org.ar",
-    "tur.ar", "com.co", "edu.co", "gov.co", "mil.co", "net.co", "org.co",
-    "nom.co", "com.pe", "edu.pe", "gob.pe", "mil.pe", "net.pe", "nom.pe",
-    "org.pe", "com.ve", "co.ve", "gob.ve", "net.ve", "org.ve", "edu.ve",
-    "info.ve", "web.ve", "com.ec", "edu.ec", "fin.ec", "gob.ec", "gov.ec",
-    "info.ec", "k12.ec", "med.ec", "mil.ec", "net.ec", "org.ec", "pro.ec",
-    "com.uy", "edu.uy", "gub.uy", "mil.uy", "net.uy", "org.uy",
-    "com.do", "com.gt", "com.py", "com.bo", "com.ni", "com.sv", "com.hn",
-    "com.pa", "gob.cl", "gov.cl", "mil.cl",
-    // asia
-    "co.in", "net.in", "org.in", "gen.in", "firm.in", "ind.in", "ac.in",
-    "edu.in", "res.in", "gov.in", "mil.in", "nic.in",
-    "com.cn", "net.cn", "org.cn", "gov.cn", "edu.cn", "ac.cn", "mil.cn",
-    "co.kr", "or.kr", "go.kr", "re.kr", "ne.kr", "pe.kr", "ac.kr",
-    "mil.kr", "hs.kr", "ms.kr", "es.kr", "sc.kr", "kg.kr",
-    "com.sg", "edu.sg", "gov.sg", "net.sg", "org.sg", "per.sg",
-    "com.hk", "edu.hk", "gov.hk", "net.hk", "org.hk", "idv.hk",
-    "com.tw", "edu.tw", "gov.tw", "net.tw", "org.tw", "idv.tw",
-    "game.tw", "ebiz.tw", "club.tw",
-    "co.th", "in.th", "ac.th", "go.th", "net.th", "or.th", "mi.th",
-    "com.my", "edu.my", "gov.my", "net.my", "org.my", "mil.my", "name.my",
-    "com.id", "co.id", "ac.id", "go.id", "mil.id", "net.id", "or.id",
-    "sch.id", "web.id", "my.id", "biz.id",
-    "com.ph", "edu.ph", "gov.ph", "net.ph", "org.ph", "mil.ph", "ngo.ph",
-    "i.ph", "com.vn", "edu.vn", "gov.vn", "net.vn", "org.vn", "int.vn",
-    "ac.vn", "biz.vn", "info.vn", "name.vn", "pro.vn", "health.vn",
-    "com.pk", "edu.pk", "gov.pk", "net.pk", "org.pk", "fam.pk", "biz.pk",
-    "web.pk",
-    // middle east / africa
-    "co.il", "org.il", "ac.il", "gov.il", "idf.il", "k12.il", "muni.il",
-    "net.il", "com.tr", "gen.tr", "web.tr", "org.tr", "net.tr", "gov.tr",
-    "edu.tr", "av.tr", "bbs.tr", "com.sa", "edu.sa", "gov.sa", "med.sa",
-    "net.sa", "org.sa", "pub.sa", "sch.sa",
-    "com.eg", "edu.eg", "gov.eg", "net.eg", "org.eg", "sci.eg",
-    "com.ng", "edu.ng", "gov.ng", "net.ng", "org.ng", "i.ng",
-    "co.za", "org.za", "net.za", "ac.za", "gov.za", "edu.za", "web.za",
-    // europe
-    "com.ua", "edu.ua", "gov.ua", "net.ua", "org.ua", "in.ua",
-    "com.pl", "net.pl", "org.pl", "edu.pl", "info.pl", "biz.pl", "waw.pl",
-    "com.ru", "net.ru", "org.ru", "int.ru", "ac.ru", "msk.ru", "spb.ru",
-    "com.gr", "edu.gr", "net.gr", "org.gr", "gov.gr",
-    "com.pt", "edu.pt", "gov.pt", "int.pt", "net.pt", "org.pt", "publ.pt",
-    "com.ro", "org.ro", "info.ro", "arts.ro", "firm.ro", "store.ro",
-    "tm.ro", "co.hu", "org.hu", "info.hu",
-    // three-label US locality registries (k12/cc/lib per state)
-    "k12.ca.us", "k12.ny.us", "k12.tx.us", "k12.il.us", "k12.ma.us",
-    "k12.wa.us", "k12.or.us", "k12.fl.us", "k12.oh.us", "k12.mi.us",
-    "k12.pa.us", "k12.va.us", "k12.nc.us", "k12.ga.us", "k12.nj.us",
-    "k12.mn.us", "k12.az.us", "k12.co.us", "k12.in.us", "k12.mo.us",
-    "cc.ca.us", "cc.ny.us", "cc.tx.us", "cc.il.us", "cc.ma.us",
-    "cc.wa.us", "cc.or.us", "cc.fl.us", "cc.oh.us", "cc.mi.us",
-    "lib.ca.us", "lib.ny.us", "lib.tx.us", "lib.il.us", "lib.ma.us",
-    "lib.wa.us", "lib.or.us", "lib.fl.us", "lib.oh.us", "lib.mi.us")
 
   /** PSL rule set parsed into per-label-count probe sets: `plain(n)` =
     * n-label plain rules, `wild(n)` = n-label BASES of `*.base`
@@ -641,7 +488,7 @@ object TextOps {
 
   /** PSL-aware registrable-domain apex — [[urlApex]] upgraded to the
     * COMPLETE Public Suffix List semantics over an arbitrary rule list
-    * (default [[PslRules]]): among all matching rules the one with the
+    * (default [[PslRulesFull]]): among all matching rules the one with the
     * most labels prevails, `*.base` wildcards match exactly one extra
     * label, `!rule` exceptions prevail over everything (public suffix
     * = the exception minus its leftmost label), and the implicit `*`

@@ -42,16 +42,11 @@ object Tfidf {
     docs.select(explode(array_distinct(col(tokensCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("df"))
 
-  /** Attach smoothed IDF — `ln((N+1)/(df+1)) + 1`
-    * (ReducerExtractFeatureDocument.java:56). `n` may be a literal or a
-    * 1-row aggregate joined in by the caller.
-    */
-  def withIdf(dfreq: DataFrame, n: Long): DataFrame =
-    dfreq.withColumn("idf", log((lit(n) + lit(1.0)) / (col("df") + lit(1.0))) + lit(1.0))
-
-  /** The same smoothed IDF on the driver, bit for bit: Spark's `log` is
-    * `StrictMath.log` (`java.lang.Math.log` may differ in the last ulp),
-    * and the operands are the same doubles. df = 0 gives ln(N+1)+1.
+  /** Smoothed IDF `ln((N+1)/(df+1)) + 1`
+    * (ReducerExtractFeatureDocument.java:56), on the driver. It equals
+    * Spark's `log` over the same doubles bit for bit: Spark's `log` is
+    * `StrictMath.log` (`java.lang.Math.log` may differ in the last
+    * ulp). df = 0 gives ln(N+1)+1.
     */
   def idfOf(n: Long, df: Long): Double = StrictMath.log((n + 1.0) / (df + 1.0)) + 1.0
 
@@ -101,8 +96,9 @@ object Tfidf {
     * parity with the reference's BigDecimal rounding,
     * ReducerExtractFeatureTFIDF.java:77-78).
     *
-    * `vocabIdf` is a (word, idf) table — typically [[docFreq]]+[[withIdf]]
-    * output, or an external dictionary. It is broadcast: vocabularies are
+    * `vocabIdf` is a (word, idf) table — typically [[docFreq]] output
+    * with the smoothed IDF `ln((N+1)/(df+1)) + 1` ([[idfOf]]) attached,
+    * or an external dictionary. It is broadcast: vocabularies are
     * small relative to the corpus. `dense=true` reproduces the
     * reference's dense-over-vocabulary output (zero weights included)
     * as docs × vocab rows; [[graft.functions.DenseTfidf]] computes the
@@ -142,20 +138,16 @@ object Tfidf {
     * are the accepted trade (two words may share a bucket); m controls
     * the rate.
     *
-    * `portable = true` buckets by the first 8 md5 hex digits (the
+    * Buckets by the first 8 md5 hex digits (the
     * [[Sketches]]/decontamination device — bit-identical in any
-    * engine, value-oracle-able); `false` uses xxhash64 (one 8-byte
-    * hash per token, the production path). Returns the sparse exploded
+    * engine, value-oracle-able). Returns the sparse exploded
     * relation (idCol, bucket, tf) — only one doc-keyed shuffle with
     * map-side partial aggregation; nothing is collected or broadcast.
     */
   def hashingTf(
-      docs: DataFrame, idCol: String, toksCol: String, m: Int,
-      portable: Boolean = true): DataFrame = {
+      docs: DataFrame, idCol: String, toksCol: String, m: Int): DataFrame = {
     val tok = docs.select(col(idCol), explode(col(toksCol)).as("w"))
-    val h =
-      if (portable) conv(substring(md5(col("w")), 1, 8), 16, 10).cast("long")
-      else abs(xxhash64(col("w")))
+    val h = conv(substring(md5(col("w")), 1, 8), 16, 10).cast("long")
     tok.withColumn("bucket", (h % m).cast("int")).drop("w")
       .groupBy(col(idCol), col("bucket")).agg(count(lit(1)).as("tf"))
   }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops._
@@ -12,7 +12,7 @@ import graft.ops._
   *   tokenize → quality/language annotate → threshold filter →
   *   exact dedup (normalized fingerprint, keep min id) →
   *   near-dup removal (shingle Jaccard ≥ threshold, drop the higher id
-  *   of each verified pair) → survivors + per-stage report.
+  *   of each verified pair) → survivors.
   *
   * Near-dup candidates come from the exact Jaccard join at test scale;
   * swap [[Dedup.jaccardPairsFromHashes]] for MinHash+LSH candidates +
@@ -60,23 +60,5 @@ object Curation {
     keptExact.join(pairs.select(col("id2").as(idCol)).distinct(),
         Seq(idCol), "left_anti")
       .select(col(idCol))
-  }
-
-  /** Per-stage funnel report: one row per stage with surviving count. */
-  def report(docs: DataFrame, idCol: String, textCol: String, cfg: Config): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val ann = annotate(docs, textCol, cfg).persist()
-    try {
-      val total = ann.count()
-      val q = ann.filter(col("quality") >= cfg.minQuality).count()
-      val exact = ann.filter(col("quality") >= cfg.minQuality)
-        .select(col("fp")).distinct().count()
-      val fin = curate(docs, idCol, textCol, cfg).count()
-      Seq(
-        ("0_input", total), ("1_quality", q),
-        ("2_exact_dedup", exact), ("3_near_dedup", fin))
-        .toDF("stage", "n_docs")
-    } finally ann.unpersist()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops._
@@ -881,7 +881,7 @@ private[graft] object QCorpus {
       Some(plattOracleSql(8)), iterative = true),
 
     Q("q_zorder_value",  // the Morton key under the r15 Z-ordered
-      // layout write (Sinks.zOrderValue/zOrderLayout), value-oracled:
+      // layout (Sinks.zOrderValue), value-oracled:
       // bit-interleaving is pure integer arithmetic, so DuckDB
       // replays the identical shift/mask terms (generated from the
       // same (cols, bits) by zOrderSqlExpr — single-sourced like the

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops._
-import graft.multimodal.Multimodal
-import graft.sources.Sinks
 
 import graft.SparkEntry.Q
 import graft.QShared._
@@ -374,9 +372,8 @@ private[graft] object QDedup1 {
       // the word, but Levenshtein prices them as the few character
       // operations they are. Candidates = the run-scoped dedupPairs3
       // memo (the SAME verified Jaccard ≥ 0.5 pair substrate the
-      // dedup funnel runs on — one kernel per JVM, not two; the
-      // looser-candJ standalone form stays in the Dedup.editPairs
-      // API for recall-generous runs), a length-diff pre-filter
+      // dedup funnel runs on — one kernel per JVM, not two; any
+      // looser candidate frame composes the same way), a length-diff pre-filter
       // (dist ≥ |L1−L2|) skips impossible pairs before any DP work,
       // and the Ukkonen-banded k-limited levenshtein verifies
       // (O(k·L) per pair, k = ⌈maxNed·mx⌉+1 — BoundedLevenshtein;
@@ -1218,7 +1215,8 @@ private[graft] object QDedup1 {
       (s, dir) => {
         // distinct grams as ROWS, not arrays: explode + hash + row-level
         // distinct is 4-5× faster here than array_distinct over an
-        // unmaterialized transform (measured in MicroBench), and grams
+        // unmaterialized transform (measured; `Lab time` re-times the
+        // entry), and grams
         // join as 8-byte longs (xxhash64 collisions ~1e-11 at this
         // cardinality — the distinct-count contract is unchanged, the
         // q_ngram3 device). repartition first: the gate parquet is one

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops._
-import graft.multimodal.Multimodal
-import graft.sources.Sinks
 
 import graft.SparkEntry.Q
 import graft.QShared._
@@ -828,7 +826,7 @@ private[graft] object QDedup2 {
       // window over 3-shingle hashes — substring-robust dedup keys at
       // ~1/4 shingle density; md5 base hash makes it value-oracled.
       // Witness capped at the 500-doc gate corpus (md5 is the oracle
-      // twin — the xxhash64 portable=false form is the scale path)
+      // twin)
       (s, dir) => Dedup.winnowFingerprints(
           docsTokens(s, dir).filter(col("doc_id") < 500),
           "doc_id", "toks", k = 3, w = 4)

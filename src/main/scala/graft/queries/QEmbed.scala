@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops._
-import graft.multimodal.Multimodal
-import graft.sources.Sinks
 
 import graft.SparkEntry.Q
 import graft.QShared._
@@ -15,7 +12,6 @@ import graft.QShared._
   * driver contract that concatenates the registries.
   */
 private[graft] object QEmbed {
-  import Dictionaries.{Stopwords => Stop}
 
   def qs: Seq[Q] = Seq(
 
@@ -72,7 +68,7 @@ private[graft] object QEmbed {
       // m=32-dim space — no vocabulary table, no fit pass, no word-keyed
       // shuffle; the vectorizer that survives an unbounded vocabulary.
       // One doc-keyed partial-agg'd shuffle; md5 buckets = the portable
-      // device, xxhash64 = the production path (hashingTf(portable=false)).
+      // device, bit-identical in the oracle.
       (s, dir) => Tfidf.hashingTf(docsTokens(s, dir), "doc_id", "toks", m = 32)
         .orderBy("doc_id", "bucket"),
       Some(s"""WITH t AS ($SqlToks),
@@ -550,8 +546,8 @@ private[graft] object QEmbed {
       // eigenvector — whitening/drift rotation: 3 UN-normalized
       // power-method steps from (1,…,1)/√d on the ROUNDED q_embed_cov
       // matrix (fixed iters + no per-step normalization = closed-form
-      // polynomial of the matrix, so DuckDB unrolls the same 3 steps;
-      // topEigen is the converged production twin), one normalize +
+      // polynomial of the matrix, so DuckDB unrolls the same 3 steps),
+      // one normalize +
       // first-nonzero-positive orientation, then ONE map-side codegen
       // dot against the broadcast axis; centering is the constant μ·u.
       (s, dir) => Similarity.pcaProject(

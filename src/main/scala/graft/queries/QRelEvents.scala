@@ -1,21 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops._
-import graft.multimodal.Multimodal
-import graft.sources.Sinks
 
 import graft.SparkEntry.Q
-import graft.QShared._
 
 /** Query registry — extended relational surface (skew/cube/set ops/HLL) + event-sequence operators.
   * Split out of SparkEntry (VERDICT r9 #6); see SparkEntry for the
   * driver contract that concatenates the registries.
   */
 private[graft] object QRelEvents {
-  import Dictionaries.{Stopwords => Stop}
 
   def qs: Seq[Q] = Seq(
 
@@ -223,10 +218,10 @@ private[graft] object QRelEvents {
       // the ingest-time data-quality summary: row count, per-column
       // nulls, EXACT distinct count, numeric min/max and a 1e-6
       // fixed-point mean, string min/max, one output row per column.
-      // Every statistic comes from ONE aggregate over the table
-      // (partial aggs; the 1-row result is checkpointed and unpivoted
-      // from there, so the per-column projections never re-scan);
-      // exactNdv=false swaps in HLL++ at 100 TB. The oracle replays
+      // The statistics come from two 1-row aggregates over the table
+      // (plain and distinct; the joined row is checkpointed and unpivoted
+      // from there, so the per-column projections never re-scan).
+      // The oracle replays
       // each column as a scalar-aggregate UNION ALL branch.
       (s, dir) => Profile.profile(Tables.table(s, dir, "lineitem"),
         numCols = Seq("l_extendedprice", "l_orderkey", "l_partkey", "l_quantity"),

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.ops._
 import graft.multimodal.Multimodal
-import graft.sources.Sinks
 
 import graft.SparkEntry.Q
 import graft.QShared._

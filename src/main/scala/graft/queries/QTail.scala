@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops._
-import graft.multimodal.Multimodal
-import graft.sources.Sinks
 
 import graft.SparkEntry.Q
 import graft.QShared._
@@ -15,7 +12,6 @@ import graft.QShared._
   * driver contract that concatenates the registries.
   */
 private[graft] object QTail {
-  import Dictionaries.{Stopwords => Stop}
 
   def qs: Seq[Q] = Seq(
 

@@ -22,15 +22,6 @@ object Sinks {
     (if (format == "csv") w.option("header", "true") else w).save(path)
   }
 
-  /** Hive-style partitioned write: one directory per distinct value of
-    * `partCols`. Downstream filters on those columns become partition
-    * pruning (no data read at all for excluded values) — the coarse
-    * analog of parquet row-group pushdown.
-    */
-  def writePartitioned(df: DataFrame, path: String, partCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partCols: _*)
-      .option("compression", "snappy").parquet(path)
-
   /** Bucketed table write: pre-hash-partitioned and sorted on the join
     * key, so equi-joins and aggregations on `bucketCols` plan with NO
     * shuffle on this side. Requires a table catalog (`saveAsTable`) —
@@ -65,34 +56,6 @@ object Sinks {
       }.reduce(_ bitwiseOR _)
     }.reduce(_ bitwiseOR _)
   }
-
-  /** Z-ordered layout: range-repartition into `files` partitions on
-    * the [[zOrderValue]] of `zCols` and sort within each — after a
-    * parquet write, every file covers a compact z-range, so its
-    * min/max statistics form a tight box over ALL z-columns and a
-    * reader's multi-column predicate skips most files (the
-    * data-skipping layout tool for 100 TB fact tables that
-    * [[writePartitioned]]'s coarse directories and [[writeBucketed]]'s
-    * single-key hash can't provide; SinksSpec measures the skip rate
-    * against a hash layout). One range exchange (sampled boundaries)
-    * + partition-local sort — exactly a global-sort's cost, amortized
-    * over every selective read thereafter. The z column is internal
-    * and dropped before the write.
-    */
-  def zOrderLayout(
-      df: DataFrame, zCols: Seq[String], files: Int, bits: Int = 16): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    df.withColumn("__z", zOrderValue(zCols.map(col), bits))
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-  }
-
-  /** [[zOrderLayout]] + snappy parquet write. */
-  def writeZOrdered(
-      df: DataFrame, path: String, zCols: Seq[String], files: Int,
-      bits: Int = 16): Unit =
-    writeColumnar(zOrderLayout(df, zCols, files, bits), path)
 
   /** Hilbert-curve index of a 2-D point — the stronger-locality
     * sibling of [[zOrderValue]] (a Hilbert traversal never makes the
@@ -134,17 +97,6 @@ object Sinks {
     }).getField("d")
   }
 
-  /** [[zOrderLayout]] with the Hilbert key instead of Morton. */
-  def hilbertLayout(
-      df: DataFrame, xCol: String, yCol: String, files: Int,
-      bits: Int = 8): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    df.withColumn("__h", hilbertValue(col(xCol), col(yCol), bits))
-      .repartitionByRange(files, col("__h"))
-      .sortWithinPartitions("__h")
-      .drop("__h")
-  }
-
   /** N-dimensional Hilbert index via Skilling's transform ("Programming
     * the Hilbert curve", AIP Conf. Proc. 707, 2004) — the 3-plus-column
     * generalization of [[hilbertValue]] (VERDICT r15 #5: zOrderValue is
@@ -165,7 +117,7 @@ object Sinks {
     * post-loop steps run inside the fold's `finish` lambda, where the
     * final struct and the parity term bind ONCE as lambda variables
     * instead of re-evaluating per reference. Inputs must be
-    * non-negative integers below 2^bits ([[quantileBuckets]]-encode
+    * non-negative integers below 2^bits (rank- or bucket-encode
     * upstream); the index spans [0, 2^(n*bits)), so n*bits <= 63.
     */
   def hilbertValueN(
@@ -214,227 +166,6 @@ object Sinks {
             shiftleft(shiftright(g(i).bitwiseXOR(t), k).bitwiseAND(lit(1L)),
               k * n + (n - 1 - i))).foldLeft(acc)(_ bitwiseOR _))
       })
-  }
-
-  /** Quantile bucket-encoding of arbitrary numeric columns into the
-    * [0, 2^bits) integer domain [[zOrderValue]] needs — the upstream
-    * encode step for Z-ordering skewed or unbounded columns (raw
-    * values would waste most of the bit budget on empty range).
-    * Boundaries come from ONE driver-side `approxQuantile` pass
-    * (Greenwald–Khanna; 2^bits − 1 cut points per column — a bounded,
-    * k-row driver artifact like the K-Means centroids), compiled into
-    * a map-side sum-of-indicators expression (codegen'd; 2^bits − 1
-    * comparisons per row, fine for the 6–8 bit encodings a z-layout
-    * uses). Equal values share a bucket, so the encoding is
-    * deterministic given the boundaries; the boundaries themselves
-    * are engine-specific (approximate sketch) — layout tooling, not
-    * an oracle surface (spec-verified balance + monotonicity). NULL
-    * values satisfy no indicator and land in bucket 0 — acceptable
-    * for a layout key (nulls cluster together); filter first if they
-    * should not.
-    */
-  def quantileBucket(
-      df: DataFrame, colName: String, bits: Int,
-      relErr: Double = 0.001): org.apache.spark.sql.Column =
-    quantileBuckets(df, Seq(colName), bits, relErr).head
-
-  /** Multi-column form of [[quantileBucket]]: ALL boundary sets come
-    * from ONE `approxQuantile` pass over the dataset (the API takes
-    * multiple columns natively), not one full scan per column — on
-    * the 100 TB tables this layout tooling targets, k z-columns would
-    * otherwise pay k−1 redundant full-table reads (review r15).
-    * Returns one bucket expression per input column, in order.
-    */
-  def quantileBuckets(
-      df: DataFrame, colNames: Seq[String], bits: Int,
-      relErr: Double = 0.001): Seq[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{col, lit, when}
-    val n = 1 << bits
-    val probes = (1 until n).map(_.toDouble / n).toArray
-    val allBounds = df.stat.approxQuantile(colNames.toArray, probes, relErr)
-    colNames.zip(allBounds).map { case (c, bs) =>
-      bs.distinct.map(b => when(col(c) >= b, 1L).otherwise(0L))
-        .reduceOption(_ + _).getOrElse(lit(0L))
-    }
-  }
-
-  /** [[zOrderLayout]] over quantile-bucket-encoded columns: encode
-    * each z-column with [[quantileBucket]], range-partition + sort on
-    * the Morton key of the BUCKETS, write the ORIGINAL columns. This
-    * is the general-input form of [[writeZOrdered]] — skew-robust
-    * because every bucket holds ~1/2^bits of the rows regardless of
-    * the value distribution.
-    */
-  def zOrderLayoutQuantile(
-      df: DataFrame, zCols: Seq[String], files: Int, bits: Int = 8): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val z = zOrderValue(quantileBuckets(df, zCols, bits), bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-  }
-
-  /** Result of a [[compact]] pass. */
-  final case class CompactStats(
-      filesBefore: Int, filesAfter: Int,
-      bytesBefore: Long, bytesAfter: Long,
-      binsRewritten: Int)
-
-  /** Greedy consecutive bin-packing shared by [[compact]] and
-    * [[compactSnapshot]]: a bin closes when adding the next file
-    * would cross `targetBytes`; oversized singletons pass through.
-    * Input order (name order / manifest order = key order) is
-    * preserved inside and across bins.
-    */
-  private def packBins[T](
-      files: Seq[T], len: T => Long, targetBytes: Long): List[Vector[T]] = {
-    val bins = scala.collection.mutable.ListBuffer.empty[Vector[T]]
-    files.foreach { f =>
-      if (bins.nonEmpty && bins.last.map(len).sum + len(f) <= targetBytes)
-        bins(bins.size - 1) = bins.last :+ f
-      else bins += Vector(f)
-    }
-    bins.toList
-  }
-
-  /** Merge each bin's source files (in order) into `tmp/bin<idx>` as
-    * one parquet file — the concurrent rewrite stage shared by both
-    * compaction paths. unionAll keeps parent-partition order and
-    * coalesce(1) concatenates parents in order: rows land
-    * first-file-first, original order inside each file.
-    */
-  private def mergeBins(
-      spark: org.apache.spark.sql.SparkSession,
-      bins: Seq[(Int, Seq[String])], tmp: String, parallelism: Int): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, bins.size))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try {
-      import scala.concurrent.{Await, Future}
-      val jobs = bins.map { case (i, srcs) => Future {
-        srcs.map(spark.read.parquet(_)).reduce(_ unionAll _).coalesce(1)
-          .write.mode("overwrite").parquet(s"$tmp/bin$i")
-      }}
-      Await.result(Future.sequence(jobs.toList),
-        scala.concurrent.duration.Duration.Inf)
-    } finally pool.shutdown()
-  }
-
-  /** The staged single parquet part file of `tmp/bin<idx>`. */
-  private def stagedPart(
-      fs: org.apache.hadoop.fs.FileSystem, tmp: String,
-      idx: Int): org.apache.hadoop.fs.Path =
-    fs.listStatus(new org.apache.hadoop.fs.Path(s"$tmp/bin$idx"))
-      .map(_.getPath).find(_.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no part file for bin $idx"))
-
-  /** Small-file compaction that PRESERVES a z/Hilbert layout's order
-    * (VERDICT r15 #7 — the day-2 operation every 100 TB table needs:
-    * streaming appends and over-parallel writes leave directories of
-    * kilobyte files whose per-file overhead dominates scans, but a
-    * naive `repartition + rewrite` destroys the range layout the
-    * table was built for). Contract: the directory was written by
-    * this module's layout writers — range-partitioned part files
-    * whose NAME order is key order and whose rows are sorted within
-    * each file. Compaction then never needs to recompute the layout
-    * key: it greedily packs CONSECUTIVE files into bins of up to
-    * `targetBytes` and concatenates each bin in name order (per-file
-    * row order preserved by the single-partition coalesce), so the
-    * output is the same global key order in fewer files, and each
-    * merged file's min/max stats stay tight — consecutive ranges
-    * union to one range, no overlap is introduced (SinksSpec measures
-    * both). Single-file bins are left byte-identical in place; each
-    * merged bin takes its FIRST member's file name, keeping the
-    * name-order contract for the next compaction pass.
-    *
-    * Scale: the driver work is one file listing (already
-    * driver-sized on any FS) and the greedy scan; each bin rewrite is
-    * an independent small job — submitted concurrently (`parallelism`
-    * in-flight) so a wide cluster fills, and each job reads only its
-    * own bin's bytes. Atomicity (r17): on a snapshot-managed table
-    * (see [[initSnapshot]]) this method dispatches to
-    * [[compactSnapshot]] — staged files + ONE manifest rename, so a
-    * [[readTable]] reader sees exactly the old or the new snapshot at
-    * every crash point (SinksSpec injects a crash between every pair
-    * of FS ops to prove it). On a plain directory the swap-in is
-    * rename-only until every copy is safe — stage, hide sources,
-    * commit, delete — with every FileSystem rename/delete return code
-    * CHECKED, so a failure aborts loudly and both crash directions
-    * recover by rename; but plain-directory readers can still observe
-    * the brief hide→commit gap, which is why 100 TB tables should be
-    * snapshot-managed.
-    */
-  def compact(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      targetBytes: Long, parallelism: Int = 4): CompactStats = {
-    require(targetBytes > 0 && parallelism >= 1)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(hconf)
-    // a snapshot-managed table compacts through the atomic manifest
-    // swap (r17) — readers via readTable never see a half-swapped
-    // state; the in-place path below remains for plain directories
-    if (latestManifest(fs, dir).isDefined)
-      return compactSnapshot(spark, path, targetBytes, parallelism)
-    val files = fs.listStatus(dir).toSeq
-      .filter(st => st.isFile && isDataFile(st.getPath.getName))
-      .sortBy(_.getPath.getName)
-    val bytesBefore = files.map(_.getLen).sum
-    val toMerge = packBins[org.apache.hadoop.fs.FileStatus](
-      files, _.getLen, targetBytes).filter(_.size >= 2)
-    if (toMerge.nonEmpty) {
-      val tmp = new org.apache.hadoop.fs.Path(dir, ".compact-tmp")
-      fs.mkdirs(tmp)
-      mergeBins(spark, toMerge.zipWithIndex.map { case (bin, i) =>
-        (i, bin.map(_.getPath.toString))
-      }, tmp.toString, parallelism)
-      // swap in — rename-only until every copy is safe (review r17;
-      // the r16 order deleted sources BEFORE the staged file took the
-      // final name, so a crash there left the only copy hidden):
-      //   1. stage the merged file into the table dir under a
-      //      dot-name (parquet readers skip dot-files — live view
-      //      still serves the sources);
-      //   2. HIDE each source by renaming it to `.retired-<name>`
-      //      (reversible — nothing is destroyed yet);
-      //   3. COMMIT: rename staged -> the first member's name (name
-      //      order — and thus key order — survives);
-      //   4. only then DELETE the hidden sources.
-      // Both crash directions now recover by rename alone: before
-      // step 3 the sources exist intact under `.retired-*` (rename
-      // back); after step 3 the merged file is live and the hidden
-      // sources are redundant copies. Every rename/delete result is
-      // CHECKED: Hadoop FileSystems signal failure by RETURNING
-      // FALSE, not throwing, and an unchecked false would silently
-      // destroy the only copy of a bin (review r16). For readers
-      // that must never see even the brief hide->commit gap, use the
-      // manifest snapshot protocol ([[initSnapshot]]/[[readTable]]) —
-      // [[compact]] detects a manifest and switches to one atomic
-      // manifest swap instead.
-      def mustRename(from: org.apache.hadoop.fs.Path, to: org.apache.hadoop.fs.Path): Unit =
-        require(fs.rename(from, to), s"compact: rename $from -> $to failed")
-      def mustDelete(pth: org.apache.hadoop.fs.Path): Unit =
-        require(fs.delete(pth, false), s"compact: delete $pth failed")
-      toMerge.zipWithIndex.foreach { case (bin, i) =>
-        val part = stagedPart(fs, tmp.toString, i)
-        val finalName = bin.head.getPath.getName
-        val staged = new org.apache.hadoop.fs.Path(dir, s".compacting-$finalName")
-        mustRename(part, staged)
-        val hidden = bin.map { f =>
-          val h = new org.apache.hadoop.fs.Path(dir, s".retired-${f.getPath.getName}")
-          mustRename(f.getPath, h)
-          h
-        }
-        mustRename(staged, new org.apache.hadoop.fs.Path(dir, finalName))
-        hidden.foreach(mustDelete)
-      }
-      fs.delete(tmp, true)
-    }
-    val after = fs.listStatus(dir).toSeq
-      .filter(st => st.isFile && isDataFile(st.getPath.getName))
-    CompactStats(files.size, after.size, bytesBefore,
-      after.map(_.getLen).sum, toMerge.size)
   }
 
   // --------------------------------------------------------------
@@ -514,24 +245,6 @@ object Sinks {
       case other => throw new IllegalArgumentException(
         s"numeric bound expected, got $other (${other.getClass.getName})")
     }
-    private def cmp(a: String, b: String): Int = kind match {
-      case 'L' => java.lang.Long.compare(a.toLong, b.toLong)
-      case 'D' => java.lang.Double.compare(a.toDouble, b.toDouble)
-      case 'S' => utf8Cmp(a, b)
-      case other =>
-        throw new IllegalStateException(s"unknown stat kind '$other'")
-    }
-
-    /** The smallest range covering both inputs — what a compaction
-      * records for a merged file WITHOUT rescanning it (a merge
-      * permutes no values, so the union of the sources' ranges is
-      * exact). None when the kinds disagree (schema drift between
-      * files — drop the stat, stay conservative). */
-    def union(that: ColRange): Option[ColRange] =
-      if (kind != that.kind) None
-      else Some(ColRange(kind,
-        if (cmp(min, that.min) <= 0) min else that.min,
-        if (cmp(max, that.max) >= 0) max else that.max))
 
     /** Conservative intersection test of this file's range with the
       * inclusive query interval [lo, hi] — false ONLY when the file
@@ -552,8 +265,7 @@ object Sinks {
     * of [[ColRange]] stats (a range prunes nothing for `key = v` on a
     * column the layout isn't sorted by; the bloom answers "provably
     * absent from this file" in m/8 bytes read driver-side). Sidecars
-    * are referenced BY the manifest like data files — retention GC
-    * keeps them alive exactly as long as some manifest lists them. */
+    * are referenced BY the manifest like data files. */
   final case class BloomRef(file: String, mBits: Int, k: Int)
 
   /** Bloom-sidecar build request for the snapshot writers: one filter
@@ -651,35 +363,24 @@ object Sinks {
     manifestLines(fs, dir, version)
       .find(_.startsWith("#kind=")).map(_.stripPrefix("#kind="))
 
-  /** The file names (relative to `dir`, one per line, KEY ORDER — the
-    * manifest carries the layout's name-order contract once
-    * compaction renames files) listed by manifest `version`. */
+  /** The file names (relative to `dir`, one per line, in manifest
+    * order) listed by manifest `version`. */
   def manifestFiles(
       fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path, version: Long): Seq[String] =
     manifestEntries(fs, dir, version).map(_.name)
 
   /** Atomically publish manifest `expectedVersion + 1` listing
-    * `files` (names relative to `dir`, in key order). The commit
-    * point is ONE same-directory rename of a fully-written dot-file —
-    * atomic on HDFS and POSIX local FS — so a crash at any earlier
-    * step leaves the previous manifest authoritative and a crash
-    * after it leaves the new one fully published; there is no state
-    * in between. Optimistic concurrency: if `expectedVersion + 1`
+    * `entries` (file names relative to `dir`, with optional per-file
+    * column ranges and Bloom refs) under a commit-kind header — the
+    * manifest form [[initSnapshot]]/[[appendSnapshot]] publish. The
+    * commit point is ONE same-directory rename of a fully-written
+    * dot-file — atomic on HDFS and POSIX local FS — so a crash at any
+    * earlier step leaves the previous manifest authoritative and a
+    * crash after it leaves the new one fully published; there is no
+    * state in between. Optimistic concurrency: if `expectedVersion + 1`
     * already exists (a racing committer won), the commit FAILS
-    * loudly — retry against the new snapshot.
-    */
-  def commit(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path,
-      expectedVersion: Long, files: Seq[String]): Long =
-    commitEntries(fs, dir, expectedVersion,
-      files.map(ManifestEntry(_, Map.empty)), kind = "replace")
-
-  /** [[commit]] with per-file column ranges and a commit-kind header —
-    * the full manifest form the stats-aware writers
-    * ([[initSnapshot]]/[[appendSnapshot]]/[[compactSnapshot]]) publish.
-    * Same atomicity and optimistic-concurrency contract. */
+    * loudly — retry against the new snapshot. */
   def commitEntries(
       fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path,
@@ -729,9 +430,9 @@ object Sinks {
   /** Bring an existing layout directory (written by this module's
     * layout writers — name order = key order) under snapshot
     * management: publish manifest-v1 listing the current visible part
-    * files in name order. From then on, maintenance passes
-    * ([[compact]]) become staged-files + one manifest swap, and
-    * [[readTable]] readers never observe a half-swapped directory.
+    * files in name order. From then on, writers stage files and
+    * publish them with one manifest swap, and [[readTable]] readers
+    * never observe a half-written snapshot.
     */
   def initSnapshot(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -751,21 +452,6 @@ object Sinks {
         blooms.getOrElse(n, Map.empty))),
       kind = "init")
   }
-
-  /** Per-file min/max of `cols` over the given data files — ONE scan,
-    * column-pruned to exactly the stat columns, grouped by
-    * `input_file_name` (so at write time a table pays one cheap
-    * footer-friendly pass; thereafter every [[readTableWhere]] prunes
-    * from the manifest without touching the files at all). Integral
-    * columns record kind 'L', float/double 'D' (floats widened to
-    * double — exact), strings 'S'; other types (and all-null files)
-    * simply record no range for that column, which readers treat as
-    * "cannot prune" — conservative by construction.
-    */
-  def collectFileStats(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      names: Seq[String], cols: Seq[String]): Map[String, Map[String, ColRange]] =
-    collectFileMeta(spark, path, names, cols, None)._1
 
   /** One pass for everything a manifest entry records about a file:
     * min/max ranges on `statsCols` AND bloom bitsets on `bloom.cols`,
@@ -790,7 +476,7 @@ object Sinks {
         case FloatType | DoubleType => 'D'
         case StringType => 'S'
         case other => throw new IllegalArgumentException(
-          s"collectFileStats: unsupported stat column type $other for $c " +
+          s"snapshot stats: unsupported stat column type $other for $c " +
             "(supported: integral, float/double, string)")
       }
       c -> k
@@ -799,7 +485,7 @@ object Sinks {
       probe.schema(c).dataType match {
         case ByteType | ShortType | IntegerType | LongType | StringType => ()
         case other => throw new IllegalArgumentException(
-          s"collectFileBlooms: unsupported bloom column type $other for $c " +
+          s"snapshot blooms: unsupported bloom column type $other for $c " +
             "(supported: integral, string)")
       }
     }
@@ -869,7 +555,7 @@ object Sinks {
       name: String, mBits: Int, k: Int, bits: Array[Long]): Unit = {
     fsOpHook(s"bloom-write:$name")
     // overwrite = true: a sidecar at this name is residue of a crashed
-    // attempt at the same commit, same as compactSnapshot's staged files
+    // attempt at the same commit
     val out = new java.io.DataOutputStream(
       fs.create(new org.apache.hadoop.fs.Path(dir, name), true))
     try {
@@ -893,9 +579,8 @@ object Sinks {
 
   /** Process-wide decoded-sidecar LRU so repeated point lookups pay the
     * FS read once per sidecar, not once per call (review r17). Safe to
-    * cache by name: append sidecars embed a UUID (never reused) and a
-    * compaction crash-retry rewrites the same name with byte-identical
-    * contents (deterministic OR of the same sources). 256 entries
+    * cache by name: sidecar names embed their data file's name, and
+    * append file names embed a UUID (never reused). 256 entries
     * ≈ 32 MiB at the default 2^20 bits. */
   private val sidecarCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[String, (Int, Int, Array[Long])](64, 0.75f, true) {
@@ -917,21 +602,6 @@ object Sinks {
     }
   }
 
-  /** Per-file Bloom bitsets over `spec.cols` for the given data files —
-    * ONE scan column-pruned to the bloom columns, each file's hashes
-    * OR-aggregated map-side into its m/64-long buffer
-    * ([[graft.functions.BloomBitsAgg]] under `functions.udaf`), so only
-    * files × m/8 bytes reach the driver. Files are processed in bounded
-    * groups to cap driver memory; at append scale (a micro-batch's few
-    * files) this is one small job. Supported column types: integral and
-    * string (the realistic point-lookup keys; the hash family needs a
-    * canonical string form both sides agree on).
-    */
-  def collectFileBlooms(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      names: Seq[String], spec: BloomSpec): Map[String, Map[String, Array[Long]]] =
-    collectFileMeta(spark, path, names, Seq.empty, Some(spec))._2
-
   /** Stage the sidecars for pre-collected per-file bitsets and return
     * the manifest refs to attach — shared by the snapshot writers. */
   private def stageBlooms(
@@ -951,12 +621,10 @@ object Sinks {
     }
 
   /** Write a (layout) frame and bring it under snapshot management in
-    * one step — the composition every z/Hilbert-ordered 100 TB table
-    * should ship with: `writeLayoutSnapshot(hilbertLayout(df, …), p)`
-    * publishes manifest-v1 over the freshly-written part files (name
-    * order = key order), after which [[compact]] maintains the table
-    * through atomic manifest swaps and [[readTable]] readers never
-    * observe maintenance in progress. Returns the committed version.
+    * one step: publishes manifest-v1 over the freshly-written part
+    * files (name order = key order), after which appends go through
+    * atomic manifest swaps and [[readTable]] readers never observe a
+    * half-written snapshot. Returns the committed version.
     */
   def writeLayoutSnapshot(
       df: DataFrame, path: String, statsCols: Seq[String] = Seq.empty,
@@ -969,8 +637,8 @@ object Sinks {
     * exactly the files it lists (in manifest = key order); a
     * directory without a manifest falls back to the plain parquet
     * read. This is the ONLY read path that is immune to concurrent
-    * compaction — a plain directory listing can catch the staged
-    * files of an in-flight pass.
+    * writers — a plain directory listing can catch the staged files
+    * of an in-flight append.
     */
   def readTable(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
@@ -992,11 +660,10 @@ object Sinks {
       .collect { case ManifestName(v) => v.toLong }.sorted
 
   /** Time-travel read: the table exactly as manifest `version`
-    * committed it. Works as long as the version has not been expired
-    * by [[expireSnapshots]] — compaction never deletes a file a
-    * SURVIVING manifest references, so every retained snapshot stays
-    * readable forever (the audit/reproducibility property a training
-    * pipeline needs: re-read the exact table a run trained on).
+    * committed it. No writer deletes a file a manifest references,
+    * so every committed snapshot stays readable (the
+    * audit/reproducibility property a training pipeline needs:
+    * re-read the exact table a run trained on).
     */
   def readTableAsOf(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -1084,8 +751,7 @@ object Sinks {
     * previous entries ++ new entries in ONE atomic rename — the
     * ingest half of the snapshot protocol (readers flip from v to
     * v+1 with no intermediate state; a crash at any step leaves v
-    * authoritative and only unreferenced residue, which
-    * [[expireSnapshots]]' vacuum sweep reclaims). New files carry
+    * authoritative and only unreferenced residue). New files carry
     * min/max ranges on `statsCols` (one scan of the APPENDED data
     * only). Appended files join at the END of the manifest: a layout
     * table's global key-disjointness is intentionally relaxed by
@@ -1093,7 +759,7 @@ object Sinks {
     * stays correct) and restored by the next re-layout pass. Names
     * embed a UUID, not just the version: two racing appenders must
     * never stage over each other's files — the loser's commit fails
-    * on the version check and its staged files become vacuumable
+    * on the version check and its staged files stay unreferenced
     * orphans, never part of the winner's snapshot.
     */
   def appendSnapshot(
@@ -1152,10 +818,7 @@ object Sinks {
 
   /** The newest batch id a `#txn=appId:batchId` header records for
     * `appId` across the RETAINED manifests — how
-    * [[appendSnapshotBatch]] recognizes a replayed micro-batch.
-    * Retention caveat (same as Delta's txn table): [[expireSnapshots]]
-    * discards expired manifests' headers, so keep retention longer
-    * than the longest possible stream-restart window. */
+    * [[appendSnapshotBatch]] recognizes a replayed micro-batch. */
   def lastCommittedBatch(
       fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path, appId: String): Option[Long] = {
@@ -1194,8 +857,7 @@ object Sinks {
       case None =>
         // bootstrap is for an EMPTY directory only: committing
         // manifest-v1 over pre-existing plain parquet files would
-        // orphan them out of every snapshot read and a later vacuum
-        // would delete them for good (review r17) — an existing table
+        // orphan them out of every snapshot read (review r17) — an existing table
         // must opt in through initSnapshot. The protocol's own staged
         // residue (`append-v*` files a crashed first batch left
         // uncommitted) is exempt: it was never visible to any reader.
@@ -1217,11 +879,11 @@ object Sinks {
     * downstream refresh builds on (process each ingest batch once,
     * never rescan the table). Row-exact ONLY while every commit in
     * the interval is an [[appendSnapshot]] (`#kind=append`): a
-    * compaction or re-layout commit REWRITES existing rows into new
-    * files, which a file-level diff would replay as phantom inserts —
+    * rewrite commit (compaction, re-layout) REWRITES existing rows into
+    * new files, which a file-level diff would replay as phantom inserts —
     * so any non-append commit in the interval fails loudly rather
-    * than double-count (consume changes before compacting, or full
-    * re-read across a rewrite; the same contract Iceberg's
+    * than double-count (consume changes before a rewrite, or full
+    * re-read across it; the same contract Iceberg's
     * incremental scan enforces).
     */
   def readTableChanges(
@@ -1250,224 +912,4 @@ object Sinks {
     }
   }
 
-  /** Retention GC: keep the newest `keep` manifests; delete the rest,
-    * every data file that is PROVABLY dead (referenced by an expired
-    * manifest and by no surviving one), AND — the vacuum sweep —
-    * every unreferenced visible data file STRICTLY OLDER than the
-    * newest surviving manifest. The age gate is what makes the sweep
-    * safe against an in-flight committer: its staged files are
-    * necessarily newer than the latest manifest it read (ties spared
-    * — `<`, not `≤`), while crash residue (a pass that staged but
-    * never committed, or a previous GC that deleted manifests and
-    * then died before its file loop — both leave files referenced by
-    * NOTHING, which the expired-referenced rule alone would leak
-    * forever; review r17) is necessarily older. Deletion order is
-    * manifests-first — a crash mid-GC leaves unreferenced files the
-    * NEXT vacuum sweep reclaims, never a manifest pointing at deleted
-    * data. Returns (manifestsDeleted, filesDeleted incl. vacuumed).
-    */
-  def expireSnapshots(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      keep: Int): (Int, Int) = {
-    require(keep >= 1, "must keep at least the latest snapshot")
-    val (fs, dir) = fsFor(spark, path)
-    val versions = snapshotVersions(fs, dir)
-    val survivors = versions.takeRight(keep)
-    val expired = versions.dropRight(keep)
-    // a manifest references its data files AND their bloom sidecars —
-    // both live and die with the manifests that list them
-    def referenced(v: Long): Seq[String] =
-      manifestEntries(fs, dir, v).flatMap(e =>
-        e.name +: e.blooms.values.map(_.file).toSeq)
-    val live = survivors.flatMap(referenced).toSet
-    val dead = expired.flatMap(referenced).toSet -- live
-    expired.foreach { v =>
-      fsOpHook(s"expire-manifest:$v")
-      require(fs.delete(new org.apache.hadoop.fs.Path(dir, s"manifest-v$v"), false),
-        s"expireSnapshots: deleting manifest-v$v failed")
-    }
-    dead.toSeq.sorted.foreach { n =>
-      fsOpHook(s"expire-file:$n")
-      require(fs.delete(new org.apache.hadoop.fs.Path(dir, n), false),
-        s"expireSnapshots: deleting $n failed")
-    }
-    // vacuum: unreferenced visible data files strictly older than the
-    // newest surviving manifest are provably dead crash residue
-    val latestMtime = survivors.lastOption.map(v =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, s"manifest-v$v"))
-        .getModificationTime).getOrElse(Long.MinValue)
-    val orphans = fs.listStatus(dir).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
-        ManifestName.findFirstIn(n).isEmpty && !live(n) && !dead(n) &&
-        st.getModificationTime < latestMtime
-    }.map(_.getPath.getName).sorted
-    orphans.foreach { n =>
-      fsOpHook(s"vacuum:$n")
-      require(fs.delete(new org.apache.hadoop.fs.Path(dir, n), false),
-        s"expireSnapshots: vacuuming $n failed")
-    }
-    (expired.size, dead.size + orphans.size)
-  }
-
-  /** Snapshot compaction — the crash-safe form of [[compact]] for
-    * manifest-managed tables. Greedy consecutive bins are computed
-    * over the MANIFEST's file order (the key order), merged bins are
-    * staged into the directory under fresh `compact-v{N+1}-*` names
-    * (not listed by manifest N, so live readers are untouched), and
-    * the whole pass becomes visible through ONE manifest rename.
-    * Sources stay on disk, still referenced by manifest N — physical
-    * reclamation is [[expireSnapshots]]' job, so every retained
-    * snapshot remains time-travel readable ([[readTableAsOf]]). A
-    * crash at any step leaves readers on exactly manifest N or
-    * exactly manifest N+1 (all new files staged before the commit);
-    * the only crash residue is unreferenced files, never a missing or
-    * doubled row. Returns the same [[CompactStats]] as the in-place
-    * form (file/byte counts over the LIVE snapshot's files).
-    */
-  def compactSnapshot(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      targetBytes: Long, parallelism: Int = 4): CompactStats = {
-    require(targetBytes > 0 && parallelism >= 1)
-    val (fs, dir) = fsFor(spark, path)
-    val v = latestManifest(fs, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"compactSnapshot: $path has no manifest — run initSnapshot first"))
-    val entries = manifestEntries(fs, dir, v)
-    val sized = entries.map { e =>
-      e -> fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, e.name)).getLen
-    }
-    val bytesBefore = sized.map(_._2).sum
-    // greedy consecutive packing in manifest (= key) order
-    val bins = packBins[(ManifestEntry, Long)](sized, _._2, targetBytes)
-    val mergeIdx = bins.zipWithIndex.filter(_._1.size >= 2)
-    if (mergeIdx.isEmpty)
-      return CompactStats(entries.size, entries.size, bytesBefore, bytesBefore, 0)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".compact-tmp-v${v + 1}")
-    fs.mkdirs(tmp)
-    mergeBins(spark, mergeIdx.map { case (bin, i) =>
-      (i, bin.map(f => s"$path/${f._1.name}"))
-    }, tmp.toString, parallelism)
-    // stage each merged file into the table dir under a fresh
-    // versioned name — VISIBLE on disk but unreferenced by manifest v,
-    // so live readers (via readTable) never see it early
-    val mergedName = scala.collection.mutable.Map.empty[Int, String]
-    mergeIdx.foreach { case (_, i) =>
-      val part = stagedPart(fs, tmp.toString, i)
-      val name = f"compact-v${v + 1}-b$i%05d.parquet"
-      val dest = new org.apache.hadoop.fs.Path(dir, name)
-      // a file already at this deterministic name is residue of a
-      // CRASHED pass at the same target version (had that pass
-      // committed, latestManifest would have moved past v and the
-      // name would carry a higher version) — replace it, or retries
-      // wedge forever on HDFS's rename-fails-on-existing semantics
-      // (review r17)
-      if (fs.exists(dest)) {
-        fsOpHook(s"unstage:$name")
-        require(fs.delete(dest, false),
-          s"compactSnapshot: clearing stale staged $name failed")
-      }
-      fsOpHook(s"stage:$name")
-      require(fs.rename(part, dest),
-        s"compactSnapshot: staging $name failed")
-      mergedName(i) = name
-    }
-    val newEntries = bins.zipWithIndex.map { case (bin, i) =>
-      mergedName.get(i) match {
-        case None => bin.head._1 // untouched singleton keeps its stats
-        case Some(name) =>
-          // merged file: union the sources' ranges per column — exact
-          // without rescanning (a merge permutes no values); a column
-          // any source lacks (or whose kinds drifted) records no range
-          val shared = bin.map(_._1.stats.keySet).reduce(_ intersect _)
-          val stats = shared.toSeq.flatMap { c =>
-            bin.tail.foldLeft(Option(bin.head._1.stats(c))) { (acc, e) =>
-              acc.flatMap(_.union(e._1.stats(c)))
-            }.map(c -> _)
-          }.toMap
-          // bloom sidecars merge the same way: OR of the sources' bit
-          // arrays IS the filter over the union (the aggregator's own
-          // merge op) — provided every source filtered this column
-          // with identical (mBits, k); otherwise drop, conservative
-          val bloomShared = bin.map(_._1.blooms.keySet).reduce(_ intersect _)
-          val blooms = bloomShared.toSeq.flatMap { c =>
-            val refs = bin.map(_._1.blooms(c))
-            val (m0, k0) = (refs.head.mBits, refs.head.k)
-            if (!refs.forall(r => r.mBits == m0 && r.k == k0)) None
-            else {
-              val acc = new Array[Long](1 << (m0 - 6))
-              refs.foreach { r =>
-                val (_, _, bits) = readBloomSidecar(fs, dir, r.file)
-                var i = 0
-                while (i < acc.length) { acc(i) |= bits(i); i += 1 }
-              }
-              val sc = bloomSidecarName(name, c)
-              writeBloomSidecar(fs, dir, sc, m0, k0, acc)
-              Some(c -> BloomRef(sc, m0, k0))
-            }
-          }.toMap
-          ManifestEntry(name, stats, blooms)
-      }
-    }
-    val newFiles = newEntries.map(_.name)
-    commitEntries(fs, dir, v, newEntries, kind = "compact") // THE atomic visibility flip
-    // NO physical deletes here (r17): the merged bins' sources are
-    // still referenced by manifest v — deleting them would break
-    // [[readTableAsOf]](v) for every retained snapshot. Space is
-    // reclaimed by [[expireSnapshots]], which deletes a file only
-    // once NO surviving manifest references it — the Iceberg split
-    // between logical commit and physical GC.
-    fs.delete(tmp, true)
-    val bytesAfter = newFiles.map { n =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, n)).getLen
-    }.sum
-    CompactStats(entries.size, newFiles.size, bytesBefore, bytesAfter, mergeIdx.size)
-  }
-
-  /** Partition-aware compaction (VERDICT r16 next #7):
-    * [[writePartitioned]] tables hold their part files under
-    * Hive-style `col=value` leaf directories, one layout per leaf.
-    * Recurse to each leaf that holds data files and compact it
-    * independently (manifest-aware per leaf via [[compact]]'s
-    * dispatch), preserving each partition's own name-order contract;
-    * stats are aggregated across leaves.
-    */
-  def compactPartitioned(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      targetBytes: Long, parallelism: Int = 4): CompactStats = {
-    val (fs, root) = fsFor(spark, path)
-    def leaves(d: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-      val entries = fs.listStatus(d).toSeq
-        .filter { st =>
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }
-      val subdirs = entries.filter(_.isDirectory)
-      if (subdirs.isEmpty) Seq(d)
-      else subdirs.flatMap(s => leaves(s.getPath))
-    }
-    leaves(root)
-      .filter(d => fs.listStatus(d).exists(_.isFile))
-      .map(d => compact(spark, d.toString, targetBytes, parallelism))
-      .foldLeft(CompactStats(0, 0, 0L, 0L, 0)) { (a, b) =>
-        CompactStats(a.filesBefore + b.filesBefore,
-          a.filesAfter + b.filesAfter,
-          a.bytesBefore + b.bytesBefore,
-          a.bytesAfter + b.bytesAfter,
-          a.binsRewritten + b.binsRewritten)
-      }
-  }
-
-  /** Side/branch output (SURVEY §2.1 S5): the reference's
-    * AvroMultipleOutputs writes a filtered branch of one reduce pass to
-    * a second file set (ReducerExtractFeatureTFIDF.java:85-88). Spark
-    * has no multi-sink single-pass at the DataFrame level, so: persist
-    * the parent once, run each branch write against the cached plan —
-    * one upstream computation, n sink scans.
-    */
-  def writeBranches(df: DataFrame, branches: Seq[(DataFrame => DataFrame, String)]): Unit = {
-    val cached = df.persist()
-    try branches.foreach { case (f, path) => writeColumnar(f(cached), path) }
-    finally cached.unpersist()
-  }
 }

@@ -11,9 +11,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamOps {
 
-  final case class Ev(user_id: Long, value: Double, ts: java.sql.Timestamp)
-  final case class UserAgg(user_id: Long, n: Long, total: Double)
-
   /** Tumbling 1-hour event-time aggregation with a 2-hour watermark —
     * the streaming twin of SparkEntry.q_window_hourly.
     */
@@ -24,26 +21,6 @@ object StreamOps {
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
       .select(unix_timestamp(col("window.start")).as("hour_epoch"),
         col("event_type"), col("n"), col("total"))
-
-  /** Custom keyed state: running per-user totals via mapGroupsWithState
-    * (the KeyValueGroupedDataset state API the prompt calls for).
-    * Emits the updated running aggregate for each user seen in a batch.
-    */
-  def userRunningTotals(events: Dataset[Ev]): Dataset[UserAgg] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-        (uid: Long, evs: Iterator[Ev], state: GroupState[UserAgg]) =>
-          val prev = state.getOption.getOrElse(UserAgg(uid, 0L, 0.0))
-          val cur = evs.foldLeft(prev)((a, e) => UserAgg(uid, a.n + 1, a.total + e.value))
-          state.update(cur)
-          cur
-      }
-  }
-
-  /** The output mode [[userRunningTotals]] requires when streamed. */
-  val UserTotalsOutputMode: OutputMode = OutputMode.Update()
 
   /** Stream-stream interval join: each left event joined to the right
     * events of the same key whose timestamp falls in
@@ -63,44 +40,20 @@ object StreamOps {
         expr(s"$leftKey = $rightKey AND $rightTs >= $leftTs - INTERVAL $lagSeconds SECONDS" +
           s" AND $rightTs <= $leftTs"))
 
-  /** Stream-static enrichment: every micro-batch joined against a
-    * static dimension table, broadcast so the stream side never
-    * shuffles. Stateless (the static side is re-resolvable per batch) —
-    * no watermark required; the standard "attach user/doc metadata to
-    * an event stream" shape.
-    */
-  def enrichWithStatic(stream: DataFrame, dim: DataFrame, keys: Seq[String]): DataFrame =
-    stream.join(broadcast(dim), keys)
-
   /** Streaming decontamination — the ingest-time twin of
-    * [[graft.ops.Dedup.contaminationHits]]: each arriving document's
-    * grams are probed against the STATIC benchmark gram set (its gram
-    * column named by `benchGramCol`, default "g") via a
-    * stream-static inner join (stateless — the static side is
-    * re-resolved per micro-batch and broadcasts, so the stream side
-    * never shuffles for the join), then a stateful dropDuplicates
-    * emits each contaminated doc id exactly ONCE however many grams
-    * hit. Output: (idCol) — the ids a downstream anti-join scrubs
-    * before anything lands in training storage. Dedup state is one
-    * entry per CONTAMINATED doc (a vanishing fraction of the stream);
-    * bound it with a watermarked variant on a rolling horizon when the
-    * deployment needs one.
-    */
-  def contaminatedStream(
-      docs: DataFrame, idCol: String, gramsCol: String,
-      benchGrams: DataFrame, benchGramCol: String = "g"): DataFrame =
-    contaminatedGrams(
-      docs.select(col(idCol), explode(col(gramsCol)).as("__graft_g")),
-      idCol, "__graft_g", benchGrams, benchGramCol)
-
-  /** [[contaminatedStream]] for a PRE-EXPLODED gram stream (idCol,
-    * gramCol) — the form to use when the gram column is derived by an
-    * expression pipeline: Catalyst textually duplicates unaliased
-    * array-building trees through explode (the `shingleHashes` lesson,
-    * ~7× re-evaluation measured), and a stream cannot localCheckpoint
-    * the array away. Explode on the caller's side of an encoder
-    * boundary (typed flatMap) instead, then hand the rows here: one
-    * broadcast stream-static join + stateful one-row-per-id dedup.
+    * [[graft.ops.Dedup.contaminationHits]] over a PRE-EXPLODED gram
+    * stream (idCol, gramCol): each arriving gram is probed against the
+    * STATIC benchmark gram set (its gram column named by
+    * `benchGramCol`, default "g") via a stream-static inner join
+    * (stateless — the static side is re-resolved per micro-batch and
+    * broadcasts, so the stream side never shuffles for the join), then
+    * a stateful dropDuplicates emits each contaminated doc id exactly
+    * ONCE however many grams hit. Explode on the caller's side of an
+    * encoder boundary (typed flatMap): Catalyst textually duplicates
+    * unaliased array-building trees through explode (the
+    * `shingleHashes` lesson, ~7× re-evaluation measured), and a stream
+    * cannot localCheckpoint the array away. Dedup state is one entry
+    * per CONTAMINATED doc (a vanishing fraction of the stream).
     */
   def contaminatedGrams(
       grams: DataFrame, idCol: String, gramCol: String,
@@ -110,77 +63,6 @@ object StreamOps {
         benchGrams.select(col(benchGramCol).as("__graft_g"))), Seq("__graft_g"))
       .select(col(idCol))
       .dropDuplicates(idCol)
-
-  /** Streaming exact dedup — the stream twin of Dedup.dropDupsByKey:
-    * keeps the first arrival of each key and drops re-arrivals while the
-    * key is inside the event-time watermark horizon; state for keys
-    * older than the watermark is evicted (dropDuplicatesWithinWatermark),
-    * so dedup state is bounded regardless of stream length.
-    */
-  def dedupStream(
-      events: DataFrame, tsCol: String, keyCols: Seq[String],
-      watermark: String = "10 seconds"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  final case class BandRow(id: Long, band: Int, bh: Long)
-  final case class BucketState(ids: List[Long], dead: Boolean = false)
-  final case class CandPair(id1: Long, id2: Long)
-
-  /** Streaming MinHash-LSH candidate pairs — the stream twin of
-    * Dedup.lshCandidates, for near-dup suppression at ingest time:
-    * docs arrive as exploded band rows (id, band, bh) — computed
-    * map-side with the same pure column expressions the batch path
-    * uses (Dedup.minhashSigsCol → functions.BandHashes → posexplode),
-    * all streaming-safe — and each (band, bh) bucket keeps the ids
-    * seen so far, emitting a candidate pair for every new arrival
-    * against every prior member. `maxBucket` matches the batch
-    * semantics (Dedup.lshCandidates drops an over-cap bucket
-    * ENTIRELY): the moment a bucket's distinct-id count would exceed
-    * the cap it is marked dead and its stored ids are purged — nothing
-    * further is emitted or stored for it. One divergence is inherent
-    * to append mode and documented here: pairs emitted in EARLIER
-    * micro-batches, before the bucket went over-cap, cannot be
-    * retracted (the batch path, seeing the whole corpus at once, emits
-    * none for that bucket). A bucket that crosses the cap within its
-    * first micro-batch matches the batch output exactly. NoTimeout
-    * state: ingest dedup wants the full corpus horizon — live buckets
-    * hold ≤ maxBucket ids, dead buckets a constant-size tombstone;
-    * evict with a watermarked variant if the deployment only needs a
-    * rolling horizon.
-    *
-    * Pairs can repeat across bands (the batch op's `.distinct()`);
-    * dedup downstream — e.g. in the exact-verify foreachBatch — so the
-    * streaming stage stays single-stateful-operator.
-    */
-  def lshCandidatesStream(
-      bands: Dataset[BandRow], maxBucket: Int = 1000): Dataset[CandPair] = {
-    import bands.sparkSession.implicits._
-    bands.groupByKey(b => (b.band, b.bh))
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: (Int, Long), rows: Iterator[BandRow], state: GroupState[BucketState]) =>
-          val st = state.getOption.getOrElse(BucketState(Nil))
-          if (st.dead) Iterator.empty
-          else {
-            val newIds = rows.map(_.id).filterNot(st.ids.contains).toList.distinct
-            if (st.ids.length + newIds.length > maxBucket) {
-              // over-cap: kill the bucket like the batch path drops it —
-              // purge stored ids, emit nothing, ignore all future arrivals
-              state.update(BucketState(Nil, dead = true))
-              Iterator.empty
-            } else {
-              var seen = st.ids
-              val out = scala.collection.mutable.ListBuffer.empty[CandPair]
-              newIds.foreach { id =>
-                seen.foreach(s => out += CandPair(math.min(s, id), math.max(s, id)))
-                seen = id :: seen
-              }
-              if (newIds.nonEmpty) state.update(BucketState(seen))
-              out.iterator
-            }
-          }
-      }
-  }
 
   final case class SEv(user_id: Long, ts: java.sql.Timestamp)
   final case class OpenSession(start: Long, end: Long, n: Long)
@@ -439,8 +321,8 @@ object StreamOps {
     *
     * Wire it as `writeStream.foreachBatch((b, _) =>
     * weightedVerifyBatch(b, …).write.mode("append")…)` — the
-    * documented exact-verify stage behind [[lshCandidatesStream]]-style
-    * candidate generation. Stream/ref id spaces must be disjoint.
+    * exact-verify stage behind streaming candidate generation.
+    * Stream/ref id spaces must be disjoint.
     *
     * @param batch      the micro-batch, (id, toks)
     * @param refWeights static (id, tok, w) reference weight vectors —

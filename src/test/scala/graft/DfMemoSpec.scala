@@ -106,7 +106,7 @@ class DfMemoSpec extends AnyFunSuite {
     val clusters = DfMemo.cached(docs, "spec:sweep") {
       graft.ops.Dedup.dedupClusters(
         graft.ops.Dedup.jaccardPairsPrefix(
-          graft.ops.Dedup.shingleHashesViaArrays(docs, "doc_id", "toks", k = 3),
+          Oracles.shingleHashesViaArrays(docs, "doc_id", "toks", k = 3),
           0.5))
     }
     val first = clusters.count()
@@ -177,6 +177,26 @@ class DfMemoSpec extends AnyFunSuite {
     assert(again.count() == first)
     assert(again.as[(Long, Long)].collect().forall(_._2 == 0L),
       "every chain node resolves to the component minimum")
+    DfMemo.clear()
+  }
+
+  test("dedupPairs3 reads the persisted shingle memo in place: its build pins one checkpoint, not a second copy of the shingle rows") {
+    DfMemo.clear()
+    val sc = spark.sparkContext
+    // every consumer resolves the shingle memo first; its pins predate
+    // the pair build
+    QShared.shingles3Arrays(spark, TestSpark.Sf)
+    val prot0 = DfMemo.protectedRddIds
+    val (pairs, jobs) = TestSpark.countJobs(QShared.dedupPairs3(spark, TestSpark.Sf))
+    val fresh = DfMemo.protectedRddIds -- prot0
+    val ckpts = sc.getPersistentRDDs.filter { case (id, rdd) =>
+      fresh(id) && org.apache.spark.rdd.GraftRddBridge.isLocallyCheckpointed(rdd)
+    }
+    // no eager checkpoint of the input: 12 jobs (13 with it), and the
+    // one pin is the prefix kernel's per-document aggregate
+    assert(jobs == 12, s"dedupPairs3 build ran $jobs jobs")
+    assert(ckpts.size == 1, s"${ckpts.size} checkpoint pins from one dedupPairs3 build")
+    assert(pairs.count() > 0)
     DfMemo.clear()
   }
 

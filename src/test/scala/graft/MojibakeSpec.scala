@@ -50,36 +50,6 @@ class MojibakeSpec extends AnyFunSuite {
     assert(got.toSeq == cleans)
   }
 
-  test("normalizeTextNoRepair: the oracle-sensitive variant keeps a repairable-looking fixture verbatim") {
-    import graft.ops.TextOps
-    // an intentional mojibake MENTION (a doc ABOUT encoding bugs):
-    // normalizeText would rewrite it into the clean form; the
-    // no-repair variant must key it as written — the escape hatch the
-    // normalizeText oracle-constraint scaladoc promises
-    val mention = "the string cafÃ© is mojibake"
-    // the house dedup-key chain (see the adjacent key-unification
-    // test): diacritics stripped to their ASCII base, THEN normalized
-    // — the chain where the repair visibly changes the key
-    val (k1, k2) = Seq(mention).toDF("s")
-      .select(
-        TextOps.normalizeText(TextOps.stripDiacritics(
-          Mojibake.fixEncoding($"s"))).as("a"),
-        TextOps.normalizeTextNoRepair(TextOps.stripDiacritics($"s")).as("b"))
-      .as[(String, String)].head()
-    // repaired: cafÃ© -> café -> cafe; un-repaired: Ã -> a, © stripped
-    assert(k1 == "the string cafe is mojibake", k1)
-    assert(k2 == "the string cafa is mojibake", k2)
-    assert(k1 != k2,
-      "the no-repair variant must keep the mention's own key")
-    // and on clean text the two variants are identical
-    val clean = "plain ascii text 42"
-    val (c1, c2) = Seq(clean).toDF("s")
-      .select(TextOps.normalizeText($"s").as("a"),
-        TextOps.normalizeTextNoRepair($"s").as("b"))
-      .as[(String, String)].head()
-    assert(c1 == c2 && c1 == clean)
-  }
-
   test("normalizeText repairs ahead of NFC: corrupt and clean copies meet in one dedup key") {
     import graft.ops.TextOps
     val df = fixtures.toDF("corrupt", "clean")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Tfidf
@@ -93,7 +92,7 @@ class PipelineSpec extends AnyFunSuite {
     val zesty = got.find(_._1 == "zesty").get
     assert(zesty._2 == 0L)
     // the same doubles Spark's log computes for every observed word
-    val viaSpark = Tfidf.withIdf(got.map(r => (r._1, r._2)).toSeq.toDF("word", "df"), 4)
+    val viaSpark = Oracles.withIdf(got.map(r => (r._1, r._2)).toSeq.toDF("word", "df"), 4)
       .as[(String, Long, Double)].collect().map(r => r._1 -> r._3).toMap
     got.foreach { case (w, df, idf) =>
       assert(java.lang.Double.doubleToRawLongBits(idf) ==

@@ -101,7 +101,6 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("silhouette is a zero-shuffle map-side projection: no Exchange, no join") {
-    import org.apache.spark.sql.functions._
     val emb = Tables.table(spark, TestSpark.Sf, "embeddings")
     val cells = QShared.fixedCentroidArr(spark, TestSpark.Sf)
     val p = graft.ops.Similarity.silhouette(emb, "vec_id", "embedding", cells)
@@ -296,8 +295,7 @@ class PlanAuditSpec extends AnyFunSuite {
       // kernel, not just the knnGraph wrapper
       assert(block.contains("Similarity.knnSelfJoin("),
         s"$name must build its edges via the Similarity.knnSelfJoin(...) call")
-      for (banned <- Seq("knnGraph", "cosinePairsBlocked", "cosinePairsAuto",
-          "cosinePairsSparse"))
+      for (banned <- Seq("knnGraph", "cosinePairsBlocked", "cosinePairsSparse"))
         assert(!block.contains(banned),
           s"$name must not route edges through the $banned kernel")
     }

@@ -36,7 +36,7 @@ class PropertySpec extends AnyFunSuite {
         .agg(sum($"a.w" * $"b.w").as("cos"))
         .filter($"cos" >= theta)
         .select($"id1", $"id2").as[(Long, Long)].collect().toSet
-      val pref = graft.ops.Similarity.cosinePairsSparse(e, theta, materialize = false)
+      val pref = graft.ops.Similarity.cosinePairsSparse(e, theta)
         .select($"id1", $"id2").as[(Long, Long)].collect().toSet
       assert(pref == brute, s"theta=$theta: prefix ${pref.size} vs brute ${brute.size}")
     }
@@ -85,7 +85,7 @@ class PropertySpec extends AnyFunSuite {
       id -> Seq.fill(1 + rnd.nextInt(20))(words(rnd.nextInt(words.size)))
     }.toDF("id", "toks")
     val n = docs.count()
-    val vocab = Tfidf.withIdf(Tfidf.docFreq(docs, "id", "toks"), n)
+    val vocab = Oracles.withIdf(Tfidf.docFreq(docs, "id", "toks"), n)
     val w = Tfidf.tfidfVectors(docs, "id", "toks", vocab, scale = 9)
     val norms = w.groupBy($"id").agg(sum($"weight" * $"weight").as("n2"))
       .as[(Long, Double)].collect()

@@ -17,11 +17,13 @@ class SimilaritySpec extends AnyFunSuite {
       (2L, Seq(1.0, 0.0), Seq(0.0, 2.0)),
       (3L, Seq(0.0, 0.0), Seq(1.0, 1.0)))
       .toDF("id", "a", "b")
-      .select($"id", Similarity.cosine($"a", $"b").as("c"))
+    // the kernels' cosine: dot of the pre-normalized unit vectors
+    val got = Similarity.withUnitVec(Similarity.withUnitVec(df, "a", "ua"), "b", "ub")
+      .select($"id", Similarity.dot($"ua", $"ub").as("c"))
       .as[(Long, Double)].collect().toMap
-    assert(math.abs(df(1L) - 1.0) < 1e-12)
-    assert(math.abs(df(2L)) < 1e-12)
-    assert(df(3L) == 0.0)
+    assert(math.abs(got(1L) - 1.0) < 1e-12)
+    assert(math.abs(got(2L)) < 1e-12)
+    assert(got(3L) == 0.0)
   }
 
   test("knnSelfJoin: nprobe=C degenerates to the exact knnGraph; partial nprobe is a ranked subset") {
@@ -121,7 +123,7 @@ class SimilaritySpec extends AnyFunSuite {
       def canon(df: org.apache.spark.sql.DataFrame) =
         df.withColumn("cos", round($"cos", 9))
           .as[(Long, Long, Double)].collect().toSet
-      val fast = canon(Similarity.cosinePairsFast(emb, "vec_id", "embedding", 0.4))
+      val fast = canon(Oracles.cosinePairsFast(emb, "vec_id", "embedding", 0.4))
       val blocked = canon(Similarity.cosinePairsBlocked(emb, "vec_id", "embedding", 0.4, blocks = 7))
       assert(blocked == fast, s"$sf: blocked kernel diverges from collect kernel")
       assert(fast.nonEmpty)
@@ -177,14 +179,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(lsh.forall(p => p._1 < p._2))
   }
 
-  test("cosinePairsAuto: routes small corpora to the collect kernel with identical output") {
-    val emb = Tables.table(spark, TestSpark.Sf, "embeddings")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("cos", round($"cos", 9)).as[(Long, Long, Double)].collect().toSet
-    assert(canon(Similarity.cosinePairsAuto(emb, "vec_id", "embedding", 0.4))
-      == canon(Similarity.cosinePairsFast(emb, "vec_id", "embedding", 0.4)))
-  }
-
   test("semanticDedup: identical-direction twins in one cell collapse; cross-cell twins are NOT seen (recall contract)") {
     // two centroids on the x and y axes; three x-ish near-dup vectors,
     // one y-ish vector whose exact copy sits across the cell boundary
@@ -234,7 +228,7 @@ class SimilaritySpec extends AnyFunSuite {
       .agg(sum($"a.w" * $"b.w").as("cos"))
       .filter($"cos" >= theta)
       .select($"id1", $"id2").as[(Long, Long)].collect().toSet
-    val pref = Similarity.cosinePairsSparse(e, theta, materialize = false)
+    val pref = Similarity.cosinePairsSparse(e, theta)
       .select($"id1", $"id2").as[(Long, Long)].collect().toSet
     assert(pref == brute, s"prefix ${pref.size} vs brute ${brute.size}")
     assert(brute.nonEmpty)  // the parity must witness actual pairs
@@ -273,7 +267,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("pqAdcTopK: with a codebook holding every vector, ADC ≡ exact Euclidean top-k; broadcast-only plan") {
-    import graft.ops.KMeansOps
     // 6 vectors, d=4, m=2 — codebook = all of them, so every vector
     // self-encodes (zero residual) and the ADC distance IS the exact
     // Euclidean distance
@@ -504,7 +497,7 @@ class SimilaritySpec extends AnyFunSuite {
     val d64 = 64
     val m = Array.ofDim[Double](d64, d64)
     rows.foreach { case (i, j, c) => m(i)(j) = c }
-    val (lam1, v1) = Similarity.topEigen(m)
+    val (lam1, v1) = Oracles.topEigen(m)
     assert(math.abs(basis(0)._1 - lam1) < 1e-6 * math.max(1.0, lam1))
     v1.zip(basis(0)._2).foreach { case (a, b) => assert(math.abs(a - b) < 1e-6) }
   }
@@ -592,7 +585,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("topEigen: dominant eigenpair of a known matrix; Rayleigh maximal on a real covariance") {
-    val (l1, v1) = Similarity.topEigen(Array(Array(2.0, 0.0), Array(0.0, 1.0)))
+    val (l1, v1) = Oracles.topEigen(Array(Array(2.0, 0.0), Array(0.0, 1.0)))
     assert(math.abs(l1 - 2.0) < 1e-9)
     assert(math.abs(v1(0) - 1.0) < 1e-6 && math.abs(v1(1)) < 1e-6)
 
@@ -601,7 +594,7 @@ class SimilaritySpec extends AnyFunSuite {
     val d = 64
     val m = Array.ofDim[Double](d, d)
     rows.foreach { case (i, j, c) => m(i)(j) = c }
-    val (lam, v) = Similarity.topEigen(m)
+    val (lam, v) = Oracles.topEigen(m)
     // residual ‖Mv − λv‖ small, and λ ≥ variance along every axis
     val mv = Array.tabulate(d)(i => (0 until d).map(j => m(i)(j) * v(j)).sum)
     val resid = math.sqrt((0 until d).map(i => math.pow(mv(i) - lam * v(i), 2)).sum)
@@ -623,7 +616,7 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("protoPrune closed form: assignment ties, ceil quota, hardest-vs-prototypical regimes") {
+  test("protoPrune closed form: assignment ties, ceil quota, hardest-first keeps") {
     // c0 = (1,0), c1 = (0,1); id 6 is EQUIDISTANT (dist 1 to both) and
     // must break to the smaller cid — the SqlKmeansAssign tie rule
     val cells = Array(0L -> Array(1.0, 0.0), 1L -> Array(0.0, 1.0))
@@ -635,12 +628,12 @@ class SimilaritySpec extends AnyFunSuite {
       (4L, Seq(0.0, 3.0)),   // cell1, proto 1.0
       (5L, Seq(0.1, 1.0)))   // cell1, proto 0.995
       .toDF("id", "v")
-    def run(num: Int, den: Int, hardest: Boolean) =
-      Similarity.protoPrune(df, "id", "v", cells, num, den, hardest)
+    def run(num: Int, den: Int) =
+      Similarity.protoPrune(df, "id", "v", cells, num, den)
         .select($"id", $"cell", $"proto", $"rank", $"kept")
         .as[(Long, Long, Double, Int, Boolean)].collect()
         .map(r => r._1 -> r).toMap
-    val h = run(1, 2, hardest = true)  // quota = ceil(3/2) = 2 per cell
+    val h = run(1, 2)  // quota = ceil(3/2) = 2 per cell
     assert(h(6L)._2 == 0L, "equidistant point must land in the smaller cid")
     assert(h(1L)._3 == 1.0 && h(2L)._3 == 0.8944 && h(6L)._3 == 0.7071)
     // hardest ASC: cell0 keeps 6 (rank1), 2 (rank2); drops 1 (rank3)
@@ -648,10 +641,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(h(1L)._4 == 3 && !h(1L)._5)
     // cell1 keeps 3 (0.8), 5 (0.995); drops 4 (1.0)
     assert(h(3L)._5 && h(5L)._5 && !h(4L)._5)
-    val p = run(1, 2, hardest = false)  // prototypical DESC flips the keeps
-    assert(p(1L)._5 && p(2L)._5 && !p(6L)._5)
-    assert(p(4L)._5 && p(5L)._5 && !p(3L)._5)
-    val all = run(1, 1, hardest = true)  // keepFrac 1 keeps everything
+    val all = run(1, 1)  // keepFrac 1 keeps everything
     assert(all.values.forall(_._5))
     // per-cell kept count always equals the exact-rational ceil quota
     val counts = h.values.groupBy(_._2).map { case (c, rs) =>

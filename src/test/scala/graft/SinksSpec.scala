@@ -11,6 +11,25 @@ class SinksSpec extends AnyFunSuite {
 
   lazy val region = Tables.table(spark, TestSpark.Sf, "region")
 
+  /** Range-partition `df` on `key` into `files` files, sorted within each
+    * file — the layout whose per-file min/max boxes the key-locality
+    * tests measure. */
+  private def layoutOn(df: org.apache.spark.sql.DataFrame,
+      key: org.apache.spark.sql.Column, files: Int, path: String): Unit =
+    Sinks.writeColumnar(df.withColumn("__k", key).repartitionByRange(files, $"__k")
+      .sortWithinPartitions("__k").drop("__k"), path)
+
+  /** (files whose x/y min/max box meets the 16x16 box (8..23)^2, total
+    * files): a file is skippable iff its box misses the query box. */
+  private def filesTouched2d(path: String): (Long, Long) = {
+    val boxes = spark.read.parquet(path)
+      .groupBy(input_file_name().as("f"))
+      .agg(min($"x").as("x0"), max($"x").as("x1"),
+        min($"y").as("y0"), max($"y").as("y1"))
+    (boxes.filter(!($"x1" < 8 || $"x0" > 23 || $"y1" < 8 || $"y0" > 23)).count(),
+      boxes.count())
+  }
+
   test("columnar + line sinks round-trip") {
     val dir = java.nio.file.Files.createTempDirectory("sinks").toString
     Sinks.writeColumnar(region, s"$dir/p", "parquet")
@@ -40,36 +59,16 @@ class SinksSpec extends AnyFunSuite {
     assert(got((3L, 3L)) == 15L)
   }
 
-  test("zOrderLayout: range exchange + local sort in the plan; z-files skip a box query a hash layout cannot") {
+  test("zOrderValue layout: z-files skip a box query a hash layout cannot") {
     val dir = java.nio.file.Files.createTempDirectory("zorder").toString
     // a 64x64 grid of points, both coordinates uniform
     val grid = spark.range(4096)
       .select(($"id" % 64).as("x"), ($"id" / 64).cast("long").as("y"))
-    val laid = Sinks.zOrderLayout(grid, Seq("x", "y"), files = 16, bits = 6)
-    // plan audit: ONE range exchange on the z value + a partition-local
-    // (non-global) sort — a global sort would be a second exchange
-    val plan = laid.queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning"), plan.take(400))
-    assert("""Sort \[__z#\d+L ASC NULLS FIRST\], false""".r
-      .findFirstIn(plan).isDefined, "partition-local sort expected")
-    Sinks.writeZOrdered(grid, s"$dir/z", Seq("x", "y"), files = 16, bits = 6)
+    layoutOn(grid, Sinks.zOrderValue(Seq($"x", $"y"), bits = 6), 16, s"$dir/z")
     // control: same data, hash-partitioned into the same file count
     grid.repartition(16).write.parquet(s"$dir/h")
-    // the file-skipping measurement a parquet reader performs: a file
-    // can be SKIPPED for the box predicate iff its per-file min/max
-    // box misses the query box — count survivors under both layouts
-    def filesTouched(path: String): (Long, Long) = {
-      val boxes = spark.read.parquet(path)
-        .groupBy(input_file_name().as("f"))
-        .agg(min($"x").as("x0"), max($"x").as("x1"),
-          min($"y").as("y0"), max($"y").as("y1"))
-      val total = boxes.count()
-      val touched = boxes.filter(!($"x1" < 8 || $"x0" > 23 || $"y1" < 8 || $"y0" > 23))
-        .count()
-      (touched, total)
-    }
-    val (zt, ztot) = filesTouched(s"$dir/z")
-    val (ht, htot) = filesTouched(s"$dir/h")
+    val (zt, ztot) = filesTouched2d(s"$dir/z")
+    val (ht, htot) = filesTouched2d(s"$dir/h")
     assert(ztot == 16 && htot == 16, s"expected 16 files, got z=$ztot h=$htot")
     // hash layout: every file spans the whole grid -> nothing skips.
     // z-order: the 16x16 box at (8..23)^2 is a compact z-range -> most
@@ -111,25 +110,19 @@ class SinksSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Sinks.hilbertValue($"x", $"y", 33))
   }
 
-  test("hilbertLayout: file skipping on the same box query, at least as strong as the Morton layout") {
+  test("hilbertValue layout: file skipping on the same box query, at least as strong as the Morton layout") {
     val dir = java.nio.file.Files.createTempDirectory("hilbert").toString
     val grid = spark.range(4096)
       .select(($"id" % 64).as("x"), ($"id" / 64).cast("long").as("y"))
-    Sinks.writeColumnar(
-      Sinks.hilbertLayout(grid, "x", "y", files = 16, bits = 6), s"$dir/h")
-    def filesTouched(path: String): (Long, Long) = {
-      val boxes = spark.read.parquet(path)
-        .groupBy(input_file_name().as("f"))
-        .agg(min($"x").as("x0"), max($"x").as("x1"),
-          min($"y").as("y0"), max($"y").as("y1"))
-      (boxes.filter(!($"x1" < 8 || $"x0" > 23 || $"y1" < 8 || $"y0" > 23)).count(),
-        boxes.count())
-    }
-    val (ht, htot) = filesTouched(s"$dir/h")
+    layoutOn(grid, Sinks.hilbertValue($"x", $"y", 6), 16, s"$dir/h")
+    layoutOn(grid, Sinks.zOrderValue(Seq($"x", $"y"), bits = 6), 16, s"$dir/m")
+    val (ht, htot) = filesTouched2d(s"$dir/h")
+    val (mt, _) = filesTouched2d(s"$dir/m")
     assert(htot == 16, s"expected 16 files, got $htot")
     // the same 16x16 box query the zOrder spec uses: Hilbert's tighter
     // locality must skip at least half the files too
     assert(ht <= 8, s"hilbert layout touched $ht of $htot files")
+    assert(ht <= mt, s"hilbert touched $ht files, morton $mt — locality regressed")
     assert(spark.read.parquet(s"$dir/h").count() == 4096)
   }
 
@@ -175,12 +168,8 @@ class SinksSpec extends AnyFunSuite {
     val grid = spark.range(16 * 16 * 16)
       .select(($"id" % 16).as("x"), (($"id" / 16) % 16).cast("long").as("y"),
         ($"id" / 256).cast("long").as("z"))
-    def layoutOn(key: org.apache.spark.sql.Column, path: String): Unit =
-      Sinks.writeColumnar(
-        grid.withColumn("__k", key).repartitionByRange(16, $"__k")
-          .sortWithinPartitions("__k").drop("__k"), path)
-    layoutOn(Sinks.hilbertValueN(Seq($"x", $"y", $"z"), 4), s"$dir/h")
-    layoutOn(Sinks.zOrderValue(Seq($"x", $"y", $"z"), 4), s"$dir/m")
+    layoutOn(grid, Sinks.hilbertValueN(Seq($"x", $"y", $"z"), 4), 16, s"$dir/h")
+    layoutOn(grid, Sinks.zOrderValue(Seq($"x", $"y", $"z"), 4), 16, s"$dir/m")
     def filesTouched(path: String): (Long, Long) = {
       val boxes = spark.read.parquet(path)
         .groupBy(input_file_name().as("f"))
@@ -198,108 +187,26 @@ class SinksSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/h").count() == 4096)
   }
 
-  test("quantileBucket: skew-robust encode — balanced buckets, monotone, in-domain; quantile z-layout preserves data") {
-    // heavily skewed column: 7/8 of mass in [0, 100), a long tail to 1e9
-    val skew = spark.range(4096).select($"id",
-      when($"id" % 8 =!= 0, ($"id" % 100).cast("double"))
-        .otherwise(($"id" * $"id" % 1000000000L).cast("double")).as("v"),
-      ($"id" % 64).cast("double").as("u"))
-    val b = Sinks.quantileBucket(skew, "v", bits = 4)
-    val got = skew.select($"v", b.as("bucket")).as[(Double, Long)].collect()
-    // in-domain: every bucket inside [0, 2^4)
-    assert(got.forall(t => t._2 >= 0 && t._2 < 16))
-    // monotone: sort by value -> bucket never decreases
-    val sorted = got.sortBy(_._1)
-    assert(sorted.zip(sorted.tail).forall { case ((_, b1), (_, b2)) => b1 <= b2 })
-    // balance: raw values would cram 7/8 of rows into the first sliver
-    // of the range; quantile buckets keep the LARGEST bucket within a
-    // small multiple of the ideal 1/16 share (ties can merge buckets)
-    val counts = got.groupBy(_._2).map(_._2.length)
-    assert(counts.max <= 4096 / 16 * 3,
-      s"largest bucket ${counts.max} of 4096 — not balanced")
-    // end-to-end: the quantile z-layout is a pure re-layout
-    val laid = Sinks.zOrderLayoutQuantile(skew, Seq("v", "u"), files = 8, bits = 4)
-    assert(laid.count() == 4096 && laid.columns.toSeq == skew.columns.toSeq)
-  }
-
-  test("compact: consecutive-bin small-file merge preserves hilbert order, min/max tightness, and the data") {
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
-    val grid = spark.range(4096)
-      .select(($"id" % 64).as("x"), ($"id" / 64).cast("long").as("y"))
-    Sinks.writeColumnar(
-      Sinks.hilbertLayout(grid, "x", "y", files = 16, bits = 6), dir)
-    val before = spark.read.parquet(dir)
-      .select($"x", $"y").as[(Long, Long)].collect().sorted.toSeq
-    val sizes = new java.io.File(dir).listFiles
-      .filter(f => f.getName.startsWith("part-")).map(_.length)
-    // target ~4 source files per bin
-    val stats = Sinks.compact(spark, dir, targetBytes = sizes.max * 4)
-    assert(stats.filesBefore == 16)
-    assert(stats.filesAfter < stats.filesBefore,
-      s"expected fewer files, got $stats")
-    assert(stats.binsRewritten >= 1)
-    // data survives exactly
-    val after = spark.read.parquet(dir)
-      .select($"x", $"y").as[(Long, Long)].collect().sorted.toSeq
-    assert(after == before)
-    // order: per-file hilbert ranges are DISJOINT and follow name
-    // order (consecutive-range unions — min/max stays tight), and
-    // rows inside each file are still h-sorted
-    val partFiles = new java.io.File(dir).listFiles
-      .filter(f => f.getName.startsWith("part-")).map(_.toString).sorted
-    val ranges = partFiles.map { f =>
-      val hs = spark.read.parquet(f).coalesce(1)
-        .select(Sinks.hilbertValue($"x", $"y", 6)).as[Long].collect()
-      assert(hs.zip(hs.tail).forall { case (a, b) => a <= b },
-        s"rows inside $f lost their hilbert sort")
-      (hs.min, hs.max)
-    }
-    ranges.zip(ranges.tail).foreach { case ((_, hi), (lo2, _)) =>
-      assert(hi < lo2, "file ranges overlap after compaction")
-    }
-    // tightness in practice: the 16x16 box query still skips most files
-    val boxes = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
-      .agg(min($"x").as("x0"), max($"x").as("x1"),
-        min($"y").as("y0"), max($"y").as("y1"))
-    val touched = boxes
-      .filter(!($"x1" < 8 || $"x0" > 23 || $"y1" < 8 || $"y0" > 23)).count()
-    assert(touched <= (stats.filesAfter + 1) / 2,
-      s"box query touched $touched of ${stats.filesAfter} compacted files")
-    // repeated passes converge: recompression can shrink merged files
-    // enough that another consecutive pair fits the target, so run to
-    // the fixpoint and assert it arrives (and the data still survives)
-    var last = stats
-    var passes = 0
-    while (last.binsRewritten > 0 && passes < 5) {
-      last = Sinks.compact(spark, dir, targetBytes = sizes.max * 4)
-      passes += 1
-    }
-    assert(last.binsRewritten == 0, s"compaction did not converge: $last")
-    val converged = spark.read.parquet(dir)
-      .select($"x", $"y").as[(Long, Long)].collect().sorted.toSeq
-    assert(converged == before)
-  }
-
   test("snapshot protocol: crash injected between every pair of FS ops — reader sees exactly old or new") {
     import org.apache.hadoop.fs.{FileUtil, Path}
     val base = java.nio.file.Files.createTempDirectory("snapcrash").toString
     val golden = s"$base/golden"
-    val grid = spark.range(1024)
+    def grid(lo: Long, hi: Long) = spark.range(lo, hi)
       .select(($"id" % 32).as("x"), ($"id" / 32).cast("long").as("y"))
-    assert(Sinks.writeLayoutSnapshot(
-      Sinks.hilbertLayout(grid, "x", "y", files = 8, bits = 5), golden) == 1L)
+    assert(Sinks.writeLayoutSnapshot(grid(0, 1024).repartition(4), golden,
+      statsCols = Seq("x")) == 1L)
     val fs = new Path(golden)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = Sinks.readTable(spark, golden)
+    def rows(dir: String) = Sinks.readTable(spark, dir)
       .select($"x", $"y").as[(Long, Long)].collect().sorted.toSeq
+    val before = rows(golden)
+    val extra = grid(1024, 1536).repartition(3)
+    val after = (before ++ extra.as[(Long, Long)].collect()).sorted
     val nBefore = Sinks.manifestFiles(fs, new Path(golden), 1L).size
-    val targetBytes = new java.io.File(golden).listFiles
-      .filter(_.getName.startsWith("part-")).map(_.length).max * 4
-    // inject a crash before FS op k, for every k, until a pass runs
+    // inject a crash before FS op k, for every k, until an append runs
     // through uninjected; after EVERY outcome the reader must see
     // exactly the old or the new snapshot — same rows, a committed
-    // manifest, every listed file present
+    // manifest, every listed file and sidecar present
     var k = 0
     var sawSuccess = false
     var sawCrash = false
@@ -313,28 +220,26 @@ class SinksSpec extends AnyFunSuite {
         if (count > k) throw new RuntimeException("injected crash")
       }
       val crashed =
-        try { Sinks.compact(spark, dir, targetBytes); false }
-        catch {
+        try {
+          Sinks.appendSnapshot(extra, dir, statsCols = Seq("x"),
+            bloom = Some(Sinks.BloomSpec(Seq("y"))))
+          false
+        } catch {
           case e: RuntimeException if e.getMessage == "injected crash" => true
         }
       Sinks.fsOpHook = _ => ()
       sawCrash ||= crashed
-      val got = Sinks.readTable(spark, dir)
-        .select($"x", $"y").as[(Long, Long)].collect().sorted.toSeq
-      assert(got == before, s"crash point $k: reader saw wrong rows")
       val v = Sinks.latestManifest(fs, new Path(dir)).get
       assert(v == 1L || v == 2L, s"crash point $k: manifest version $v")
-      val listed = Sinks.manifestFiles(fs, new Path(dir), v)
-      listed.foreach(n => assert(fs.exists(new Path(s"$dir/$n")),
-        s"crash point $k: manifest-v$v lists missing file $n"))
-      if (v == 2L)
-        assert(listed.size < nBefore,
-          s"crash point $k: committed snapshot did not shrink")
+      assert(rows(dir) == (if (v == 1L) before else after),
+        s"crash point $k: reader saw wrong rows for v$v")
+      val listed = Sinks.manifestEntries(fs, new Path(dir), v)
+      listed.flatMap(e => e.name +: e.blooms.values.map(_.file).toSeq)
+        .foreach(n => assert(fs.exists(new Path(s"$dir/$n")),
+          s"crash point $k: manifest-v$v lists missing file $n"))
       if (!crashed) {
-        // the uninjected pass must have actually compacted, committed
-        // v2, and GC'd the dead sources
-        assert(Sinks.latestManifest(fs, new Path(dir)).get == 2L)
-        assert(listed.size < nBefore)
+        // the uninjected pass must have actually appended and committed v2
+        assert(v == 2L && listed.size > nBefore)
         sawSuccess = true
       }
       k += 1
@@ -342,68 +247,24 @@ class SinksSpec extends AnyFunSuite {
     assert(sawSuccess, "never reached an uninjected full pass")
     assert(sawCrash, "injection never fired — hook not wired")
     assert(k > 3, s"too few FS ops hooked ($k) for a meaningful sweep")
-    // repeated passes on the committed table converge (no new bins ->
-    // no new manifest version)
+    // time travel: v1 stays readable — the append committed v2 without
+    // touching v1's files
     val dirLast = s"$base/run${k - 1}"
-    val again = Sinks.compact(spark, dirLast, targetBytes)
-    assert(again.binsRewritten == 0 || Sinks.compact(
-      spark, dirLast, targetBytes).binsRewritten == 0)
-    val gotLast = Sinks.readTable(spark, dirLast)
-      .select($"x", $"y").as[(Long, Long)].collect().sorted.toSeq
-    assert(gotLast == before)
-    // time travel: v1 (pre-compaction) stays readable — compaction
-    // committed v2 without deleting v1's files
     val lastPath = new Path(dirLast)
     val v1rows = Sinks.readTableAsOf(spark, dirLast, 1L)
       .select($"x", $"y").as[(Long, Long)].collect().sorted.toSeq
     assert(v1rows == before, "snapshot v1 no longer readable")
-    val v1files = Sinks.manifestFiles(fs, lastPath, 1L)
-    // retention GC: expire everything but the latest (the convergence
-    // re-compact above may have committed a v3) — the old manifests
-    // and their now-dead merged sources go, the live snapshot survives
-    val vsBefore = Sinks.snapshotVersions(fs, lastPath)
-    assert(vsBefore.size >= 2)
-    val (mDel, fDel) = Sinks.expireSnapshots(spark, dirLast, keep = 1)
-    assert(mDel == vsBefore.size - 1 && fDel > 0,
-      s"expire deleted ($mDel, $fDel) of $vsBefore")
-    assert(Sinks.snapshotVersions(fs, lastPath) == Seq(vsBefore.last))
-    val liveFiles = Sinks.manifestFiles(fs, lastPath, vsBefore.last)
-    v1files.filterNot(liveFiles.contains)
-      .foreach(n => assert(!fs.exists(new Path(s"$dirLast/$n")),
-        s"dead file $n survived expiry"))
-    assert(Sinks.readTable(spark, dirLast)
-      .select($"x", $"y").as[(Long, Long)].collect().sorted.toSeq == before)
-    intercept[IllegalArgumentException] {
-      Sinks.readTableAsOf(spark, dirLast, 1L)
-    }
     // optimistic concurrency: a committer holding a stale expected
     // version loses loudly instead of clobbering the newer snapshot
     intercept[IllegalArgumentException] {
-      Sinks.commit(fs, lastPath, vsBefore.last - 1, liveFiles)
+      Sinks.commitEntries(fs, lastPath, 1L,
+        Sinks.manifestEntries(fs, lastPath, 1L), kind = "replace")
     }
+    assert(Sinks.latestManifest(fs, lastPath).contains(2L))
+    assert(rows(dirLast) == after)
   }
 
-  test("compactPartitioned: per-leaf compaction of a hive-partitioned table") {
-    val dir = java.nio.file.Files.createTempDirectory("compactpart").toString + "/t"
-    val df = spark.range(4096)
-      .select(($"id" % 4).as("p"), $"id".as("v"))
-      .repartition(8)
-    Sinks.writePartitioned(df, dir, Seq("p"))
-    val before = spark.read.parquet(dir)
-      .select($"p", $"v").as[(Long, Long)].collect().sorted.toSeq
-    val leafFiles = new java.io.File(dir).listFiles.filter(_.isDirectory)
-      .map(d => d.listFiles.count(_.getName.startsWith("part-")))
-    assert(leafFiles.forall(_ > 1), "fixture should have small files per leaf")
-    val stats = Sinks.compactPartitioned(spark, dir, targetBytes = 512L * 1024)
-    assert(stats.filesBefore == leafFiles.sum)
-    assert(stats.filesAfter < stats.filesBefore, s"no compaction: $stats")
-    assert(stats.binsRewritten >= 4, "every leaf should have merged")
-    val after = spark.read.parquet(dir)
-      .select($"p", $"v").as[(Long, Long)].collect().sorted.toSeq
-    assert(after == before)
-  }
-
-  test("manifest stats pruning: readTableWhere equals full-read+filter, skips files, survives compaction, stays conservative") {
+  test("manifest stats pruning: readTableWhere equals full-read+filter, skips files, stays conservative") {
     import org.apache.hadoop.fs.Path
     val dir = java.nio.file.Files.createTempDirectory("snapstats").toString + "/t"
     val df = spark.range(4096)
@@ -444,23 +305,6 @@ class SinksSpec extends AnyFunSuite {
     val prNone = Sinks.readTableWhere(spark, dir, Map("k" -> (100000L, 200000L)))
     assert(prNone.filesRead == 0 && prNone.df.count() == 0)
     assert(prNone.df.columns.toSeq == Seq("k", "w", "tag"))
-    // compaction carries stats through merges WITHOUT rescanning:
-    // ranges stay exact, pruning still works, results still equal
-    val sizes = new java.io.File(dir).listFiles
-      .filter(_.getName.startsWith("part-")).map(_.length)
-    val cs = Sinks.compactSnapshot(spark, dir, targetBytes = sizes.max * 4)
-    assert(cs.filesAfter < cs.filesBefore)
-    val v2 = Sinks.latestManifest(fs, new Path(dir)).get
-    val merged = Sinks.manifestEntries(fs, new Path(dir), v2)
-    assert(merged.forall(e => e.stats.keySet == Set("k", "w", "tag")),
-      "compaction dropped stats from a merged file")
-    // recompute ground truth per merged file and compare to carried stats
-    merged.foreach { e =>
-      val truth = Sinks.collectFileStats(spark, dir, Seq(e.name),
-        Seq("k", "w", "tag"))(e.name)
-      assert(truth == e.stats, s"carried stats for ${e.name} are not exact")
-    }
-    checkPrune(Map("k" -> (0L, 400L)), $"k".between(0L, 400L), expectSkip = true)
     // manifest round-trip of the degenerate string stat: empty-string
     // bounds serialize as 'col=S::' whose trailing empty fields a
     // default split would drop (review r17)
@@ -509,28 +353,23 @@ class SinksSpec extends AnyFunSuite {
     assert(fired, "append crash hook never fired")
     assert(Sinks.latestManifest(fs, new Path(dir)).get == 3L)
     assert(Sinks.readTable(spark, dir).count() == 1800)
-    // a compaction (rewrite) commit in the interval refuses change
-    // capture loudly instead of replaying rewritten rows as inserts
-    val sizes = new java.io.File(dir).listFiles
-      .filter(f => f.getName.startsWith("part-") || f.getName.startsWith("append-"))
-      .map(_.length)
-    val cs = Sinks.compactSnapshot(spark, dir, targetBytes = sizes.max * 8)
-    assert(cs.binsRewritten >= 1, "fixture should compact something")
-    val v4 = Sinks.latestManifest(fs, new Path(dir)).get
+    // a rewrite commit (here a re-publish of the live files, as a
+    // compaction or re-layout would commit) in the interval refuses
+    // change capture loudly instead of replaying rewritten rows as inserts
+    val v4 = Sinks.commitEntries(fs, new Path(dir), 3L,
+      Sinks.manifestEntries(fs, new Path(dir), 3L), kind = "compact")
     assert(Sinks.manifestKind(fs, new Path(dir), v4).contains("compact"))
     intercept[IllegalArgumentException] {
       Sinks.readTableChanges(spark, dir, 3L, v4)
     }
     // but intervals of pure appends before the rewrite still serve
     assert(ks(Sinks.readTableChanges(spark, dir, 1L, 3L)) == (1000L until 1800L))
-    // and the crash residue (staged-but-uncommitted append files) is
-    // reclaimed by the vacuum sweep once it predates the live manifest
+    // and the crash residue (staged-but-uncommitted append files) is on
+    // disk but listed by no manifest
     val residue = new java.io.File(dir).listFiles
       .filter(_.getName.startsWith("append-v4-")).map(_.getName).toSeq
     assert(residue.nonEmpty, "expected staged residue from the injected crash")
-    Sinks.expireSnapshots(spark, dir, keep = 1)
-    residue.foreach(n => assert(!fs.exists(new Path(s"$dir/$n")),
-      s"vacuum left crash residue $n"))
+    assert(Sinks.manifestFiles(fs, new Path(dir), v4).intersect(residue).isEmpty)
     assert(Sinks.readTable(spark, dir).count() == 1800)
   }
 
@@ -561,8 +400,8 @@ class SinksSpec extends AnyFunSuite {
     assert(Sinks.lastCommittedBatch(fs, new Path(dir), "appA").contains(2L))
     assert(Sinks.readTable(spark, dir).count() == 310)
     // bootstrap refuses a directory that holds UN-snapshotted data —
-    // committing manifest-v1 over it would orphan those files into
-    // vacuum-bait (review r17)
+    // committing manifest-v1 over it would orphan those files out of
+    // every snapshot read (review r17)
     val plain = java.nio.file.Files.createTempDirectory("snapplain").toString + "/t"
     Sinks.writeColumnar(batch(0, 50), plain)
     intercept[IllegalArgumentException] {
@@ -571,7 +410,7 @@ class SinksSpec extends AnyFunSuite {
     assert(spark.read.parquet(plain).count() == 50, "guard must not mutate")
   }
 
-  test("bloom sidecars: point lookups prune hash-laid files range stats cannot, merge exactly through compaction, die with their manifests") {
+  test("bloom sidecars: point lookups prune hash-laid files range stats cannot; appended files carry their own") {
     import org.apache.hadoop.fs.Path
     val dir = java.nio.file.Files.createTempDirectory("snapbloom").toString + "/t"
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -615,40 +454,5 @@ class SinksSpec extends AnyFunSuite {
     val hitNew = lookup(Map("k" -> 10250L))
     assert(hitNew.filesRead < hitNew.filesTotal)
     assert(hitNew.df.filter($"k" === 10250L).count() == 1)
-    // compaction ORs the sources' bitsets — lookups stay exact and
-    // still prune afterwards
-    val sizes = new java.io.File(dir).listFiles
-      .filter(f => f.getName.startsWith("part-")).map(_.length)
-    val cs = Sinks.compactSnapshot(spark, dir, targetBytes = sizes.max * 4)
-    assert(cs.binsRewritten >= 1)
-    val v3 = Sinks.latestManifest(fs, new Path(dir)).get
-    val merged = Sinks.manifestEntries(fs, new Path(dir), v3)
-    assert(merged.forall(_.blooms.keySet == Set("k", "tag")),
-      "compaction dropped a bloom")
-    val hit2 = lookup(Map("k" -> 17L))
-    assert(hit2.df.filter($"k" === 17L).count() == 1)
-    assert(hit2.filesRead < hit2.filesTotal)
-    assert(lookup(Map("k" -> 999999L)).filesRead == 0)
-    // retention GC deletes expired manifests' sidecars, keeps live ones
-    val deadSidecars = entries.flatMap(_.blooms.values.map(_.file))
-      .filterNot(merged.flatMap(_.blooms.values.map(_.file)).toSet)
-    assert(deadSidecars.nonEmpty)
-    Sinks.expireSnapshots(spark, dir, keep = 1)
-    deadSidecars.foreach(n => assert(!fs.exists(new Path(s"$dir/$n")),
-      s"expired sidecar $n survived GC"))
-    merged.flatMap(_.blooms.values.map(_.file)).foreach(n =>
-      assert(fs.exists(new Path(s"$dir/$n")), s"live sidecar $n was GC'd"))
-    assert(lookup(Map("k" -> 17L)).df.filter($"k" === 17L).count() == 1)
-  }
-
-  test("writeBranches: side output splits one pass into n sinks") {
-    val dir = java.nio.file.Files.createTempDirectory("branches").toString
-    Sinks.writeBranches(region, Seq(
-      ((df: org.apache.spark.sql.DataFrame) => df.filter($"r_regionkey" < 2), s"$dir/low"),
-      ((df: org.apache.spark.sql.DataFrame) => df.filter($"r_regionkey" >= 2), s"$dir/high")))
-    val low = spark.read.parquet(s"$dir/low").count()
-    val high = spark.read.parquet(s"$dir/high").count()
-    assert(low + high == region.count())
-    assert(low > 0 && high > 0)
   }
 }

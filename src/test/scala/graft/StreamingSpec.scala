@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamOps
-import graft.streaming.StreamOps.{Ev, UserAgg}
 
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -33,78 +32,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(streamed == batch)
       assert(streamed.nonEmpty)
     } finally q.stop()
-  }
-
-  test("lshCandidatesStream: cumulative streamed candidates == batch lshCandidates on the same corpus") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ops.{Dedup, TextOps}
-    // the SAME map-side expressions as the batch path, applied to a stream
-    def toBands(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("id"),
-        Dedup.minhashSigsCol(
-          array_distinct(transform(
-            Dedup.tokenShingles(
-              TextOps.tokenizeFiltered(col("text"), Dictionaries.Stopwords, Nil), 3),
-            s => xxhash64(s))),
-          numHashes = 128, seed = 42L).as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(col("id"),
-        posexplode(graft.functions.BandHashes.band_hashes(col("sig"), 32))
-          .as(Seq("band", "bh")))
-      .as[StreamOps.BandRow]
-    val docs = Tables.table(spark, TestSpark.Sf, "documents")
-      .select($"doc_id", $"text").as[(Long, String)].collect().toSeq
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamOps.lshCandidatesStream(toBands(mem.toDF().toDF("id", "text")))
-      .writeStream.format("memory").queryName("lshcand").outputMode("append").start()
-    try {
-      val (b1, b2) = docs.splitAt(docs.length / 2)
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-      val got = spark.table("lshcand").as[(Long, Long)].collect().toSet
-      val want = Dedup.lshCandidates(
-          Dedup.minhashFromHashes(
-            Dedup.shingleHashesViaArrays(
-              Tables.table(spark, TestSpark.Sf, "documents")
-                .select($"doc_id",
-                  TextOps.tokenizeFiltered($"text", Dictionaries.Stopwords, Nil).as("toks")),
-              "doc_id", "toks", k = 3),
-            numHashes = 128, seed = 42L), bands = 32)
-        .as[(Long, Long)].collect().toSet
-      assert(got == want, s"stream ${got.size} vs batch ${want.size} pairs")
-      assert(want.nonEmpty || got.isEmpty)
-    } finally q.stop()
-  }
-
-  test("lshCandidatesStream maxBucket: an over-cap bucket dies like the batch path drops it") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def row(id: Long) = StreamOps.BandRow(id, 0, 7L)
-    // Case 1: the bucket crosses the cap within one micro-batch →
-    // exact batch parity (batch drops the 5-member bucket entirely).
-    val mem1 = MemoryStream[StreamOps.BandRow]
-    val q1 = StreamOps.lshCandidatesStream(mem1.toDS(), maxBucket = 3)
-      .writeStream.format("memory").queryName("hot1").outputMode("append").start()
-    try {
-      mem1.addData((1L to 5L).map(row): _*); q1.processAllAvailable()
-      assert(spark.table("hot1").count() == 0,
-        "bucket over cap in its first batch must emit nothing (batch parity)")
-    } finally q1.stop()
-    // Case 2: cap crossed in a LATER batch — pairs already emitted stand
-    // (append mode can't retract; documented divergence), but the bucket
-    // dies: purged state, nothing more emitted, later arrivals ignored.
-    val mem2 = MemoryStream[StreamOps.BandRow]
-    val q2 = StreamOps.lshCandidatesStream(mem2.toDS(), maxBucket = 3)
-      .writeStream.format("memory").queryName("hot2").outputMode("append").start()
-    try {
-      mem2.addData((1L to 3L).map(row): _*); q2.processAllAvailable()
-      assert(spark.table("hot2").count() == 3, "3 ids at cap: C(3,2) pairs emitted")
-      mem2.addData(row(4L)); q2.processAllAvailable()
-      assert(spark.table("hot2").count() == 3, "over-cap arrival emits nothing")
-      mem2.addData(row(5L), row(6L)); q2.processAllAvailable()
-      assert(spark.table("hot2").count() == 3, "dead bucket ignores all later arrivals")
-    } finally q2.stop()
   }
 
   test("lmScoreBatch via foreachBatch: stream LM scores are bit-identical to batch, nothing collected") {
@@ -280,7 +207,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("contaminatedStream: streamed stream-static join + dedup == batch contaminationHits id set, across micro-batches") {
+  test("contaminatedGrams: streamed stream-static join + dedup == batch contaminationHits id set, across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.ops.{Dedup, TextOps}
@@ -296,8 +223,9 @@ class StreamingSpec extends AnyFunSuite {
     val rows = docs.filter($"doc_id" % 7 =!= 0)
       .as[(Long, Seq[String])].collect().toSeq
     val mem = MemoryStream[(Long, Seq[String])]
-    val q = graft.streaming.StreamOps.contaminatedStream(
-        mem.toDF().toDF("doc_id", "g5"), "doc_id", "g5", bench)
+    val q = StreamOps.contaminatedGrams(
+        mem.toDF().toDF("doc_id", "g5").select($"doc_id", explode($"g5").as("g")),
+        "doc_id", "g", bench)
       .writeStream.format("memory").queryName("deconstream")
       .outputMode("append").start()
     try {
@@ -481,26 +409,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("dedupStream: watermarked dropDuplicates keeps first arrival across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamOps.dedupStream(
-        mem.toDF().toDF("id", "payload", "ts"), "ts", Seq("id"), "10 minutes")
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-    try {
-      mem.addData((1L, "a", ts(0)), (1L, "a-dup", ts(1)), (2L, "b", ts(1)))
-      q.processAllAvailable()
-      // re-arrival of key 1 in a LATER micro-batch, still inside the horizon
-      mem.addData((1L, "a-dup2", ts(2)), (3L, "c", ts(3)))
-      q.processAllAvailable()
-      val got = spark.table("dedup").as[(Long, String, java.sql.Timestamp)]
-        .collect().map(r => r._1 -> r._2).toMap
-      assert(got == Map(1L -> "a", 2L -> "b", 3L -> "c"),
-        s"one survivor per key, first arrival wins: $got")
-    } finally q.stop()
-  }
-
   test("checkpoint restart: file sink resumes exactly-once (no re-emission, no loss)") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("ckpt").toString
@@ -528,24 +436,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.toSet == Set((1L, 10.0), (2L, 20.0), (3L, 30.0), (4L, 40.0)))
   }
 
-  test("enrichWithStatic: stream-static broadcast join == batch join") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "tier")
-    val evs = Seq((1L, 5.0, ts(0)), (2L, 7.0, ts(1)), (3L, 9.0, ts(2)))
-    val mem = MemoryStream[(Long, Double, java.sql.Timestamp)]
-    val q = StreamOps.enrichWithStatic(
-        mem.toDF().toDF("user_id", "value", "ts"), dim, Seq("user_id"))
-      .writeStream.format("memory").queryName("enrich").outputMode("append").start()
-    try {
-      mem.addData(evs: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("enrich").select($"user_id", $"value", $"tier")
-        .as[(Long, Double, String)].collect().toSet
-      assert(streamed == Set((1L, 5.0, "gold"), (2L, 7.0, "basic")))
-    } finally q.stop()
-  }
-
   test("foreachBatch: batchId-keyed overwrite makes a retried sink idempotent") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -566,25 +456,6 @@ class StreamingSpec extends AnyFunSuite {
     val rows = spark.read.option("basePath", out).parquet(s"$out/batch=*")
       .select($"id", $"value").as[(Long, Double)].collect().toSet
     assert(rows == Set((1L, 1.0), (2L, 2.0), (3L, 3.0)))
-  }
-
-  test("userRunningTotals: mapGroupsWithState accumulates across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamOps.userRunningTotals(mem.toDS()).writeStream
-      .format("memory").queryName("totals")
-      .outputMode(StreamOps.UserTotalsOutputMode).start()
-    try {
-      mem.addData(Ev(1L, 10.0, ts(0)), Ev(1L, 5.0, ts(1)), Ev(2L, 1.0, ts(2)))
-      q.processAllAvailable()
-      mem.addData(Ev(1L, 2.0, ts(3)))
-      q.processAllAvailable()
-      val finalByUser = spark.table("totals").as[UserAgg].collect()
-        .groupBy(_.user_id).map { case (u, rows) => u -> rows.maxBy(_.n) }
-      assert(finalByUser(1L) == UserAgg(1L, 3L, 17.0))
-      assert(finalByUser(2L) == UserAgg(2L, 1L, 1.0))
-    } finally q.stop()
   }
 
   test("weightedVerifyBatch: per-micro-batch union == one batch run (r14)") {

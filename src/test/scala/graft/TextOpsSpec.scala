@@ -105,43 +105,7 @@ class TextOpsSpec extends AnyFunSuite {
     assert(got == Seq("slow", "big"))
   }
 
-  test("filterByDictDf (broadcast scale path) == keepDictionary literal path") {
-    val docs = Tables.table(spark, TestSpark.Sf, "documents")
-      .select($"doc_id", TextOps.tokenize($"text").as("toks"))
-    val dictDf = Dictionaries.Adjectives.toDF("word")
-    val viaJoin = TextOps.filterByDictDf(docs, "doc_id", "toks", dictDf)
-      .select($"doc_id", $"toks").as[(Long, Seq[String])].collect().toMap
-    val viaLit = docs
-      .select($"doc_id", TextOps.keepDictionary($"toks", Dictionaries.Adjectives).as("toks"))
-      .as[(Long, Seq[String])].collect().toMap
-    assert(viaJoin == viaLit)
-  }
-
-  test("filterByDictDf: huge-dict route (no broadcast) is plan-distinct and result-identical") {
-    val docs = Tables.table(spark, TestSpark.Sf, "documents")
-      .select($"doc_id", TextOps.tokenize($"text").as("toks"))
-    val dictDf = Dictionaries.Adjectives.toDF("word")
-    // disable auto-broadcast so the plan shows filterByDictDf's OWN routing
-    // (a truly huge dict would fail the size estimate anyway; here it's tiny)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val small = TextOps.filterByDictDf(docs, "doc_id", "toks", dictDf)
-      val large = TextOps.filterByDictDf(docs, "doc_id", "toks", dictDf, maxBroadcast = 2L)
-      val pSmall = small.queryExecution.executedPlan.toString
-      val pLarge = large.queryExecution.executedPlan.toString
-      assert(pSmall.contains("BroadcastHashJoin") && pSmall.contains("LeftSemi"),
-        s"small dict must broadcast:\n$pSmall")
-      assert(!pLarge.contains("BroadcastHashJoin") && pLarge.contains("LeftSemi"),
-        s"over-threshold dict must NOT broadcast:\n$pLarge")
-      val a = small.select($"doc_id", $"toks").as[(Long, Seq[String])].collect().toMap
-      val b = large.select($"doc_id", $"toks").as[(Long, Seq[String])].collect().toMap
-      assert(a == b)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("chunkTokens: boundary sizes — exact fit, one over, short doc, empty doc") {
-    import org.apache.spark.sql.functions._
     val toks = (1 to 8).map(i => s"t$i")
     val got = Seq(
       (1L, toks),            // 8 tokens, size 4 overlap 1 → starts 1,4,7 → 3 chunks
@@ -160,9 +124,9 @@ class TextOpsSpec extends AnyFunSuite {
     assert(got(4L) == Seq.empty)
   }
 
-  test("packSequences: offsets are exclusive running sums; spans cover exactly the doc's tokens") {
+  test("packSequencesAtScale: offsets are exclusive running sums; spans cover exactly the doc's tokens") {
     val d = Seq((1L, 100), (2L, 200), (3L, 0), (4L, 300)).toDF("id", "n")
-    val got = TextOps.packSequences(d, "id", "n", budget = 256)
+    val got = TextOps.packSequencesAtScale(d, "id", "n", budget = 256)
       .select($"id", $"tok_offset", $"seq_first", $"seq_last")
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(got == Seq(
@@ -179,7 +143,14 @@ class TextOpsSpec extends AnyFunSuite {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select($"doc_id", $"tok_offset", $"seq_first", $"seq_last")
         .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val windowed = canon(TextOps.packSequences(d, "doc_id", "n_toks", budget = 256))
+    // the reference: one global window (exclusive running sum)
+    val w = org.apache.spark.sql.expressions.Window.orderBy($"doc_id")
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+    val windowed = canon(d
+      .withColumn("tok_offset", coalesce(sum($"n_toks").over(w), lit(0L)))
+      .withColumn("seq_first", expr("tok_offset div 256"))
+      .withColumn("seq_last", when($"n_toks" === 0, $"seq_first")
+        .otherwise(expr("(tok_offset + n_toks - 1) div 256"))))
     val atScale = canon(TextOps.packSequencesAtScale(d, "doc_id", "n_toks", budget = 256))
     assert(atScale == windowed)
     assert(windowed.nonEmpty)
@@ -296,20 +267,18 @@ class TextOpsSpec extends AnyFunSuite {
     assert(a != c, "a different salt must corrupt differently somewhere")
   }
 
-  test("hashingTf: mass-preserving, bucket-stable, both hash paths in range") {
+  test("hashingTf: mass-preserving, bucket-stable, buckets in range") {
     val docs = Seq(
       (1L, Seq("a", "b", "a")), (2L, Seq("b")), (3L, Seq.empty[String])
     ).toDF("id", "toks")
-    for (portable <- Seq(true, false)) {
-      val tf = Tfidf.hashingTf(docs, "id", "toks", m = 8, portable)
-        .as[(Long, Int, Long)].collect()
-      assert(tf.map(_._3).sum == 4, "Σtf must equal the corpus token count")
-      assert(tf.forall(r => r._2 >= 0 && r._2 < 8), "buckets within [0, m)")
-      assert(!tf.exists(_._1 == 3L), "empty doc has no buckets")
-      // same word -> same bucket: doc1's two 'a's landed in one cell
-      val d1 = tf.filter(_._1 == 1L)
-      assert(d1.map(_._3).sum == 3 && d1.length <= 2)
-    }
+    val tf = Tfidf.hashingTf(docs, "id", "toks", m = 8)
+      .as[(Long, Int, Long)].collect()
+    assert(tf.map(_._3).sum == 4, "Σtf must equal the corpus token count")
+    assert(tf.forall(r => r._2 >= 0 && r._2 < 8), "buckets within [0, m)")
+    assert(!tf.exists(_._1 == 3L), "empty doc has no buckets")
+    // same word -> same bucket: doc1's two 'a's landed in one cell
+    val d1 = tf.filter(_._1 == 1L)
+    assert(d1.map(_._3).sum == 3 && d1.length <= 2)
   }
 
   test("lengthOutliers: per-group interpolated band; only tails flagged") {
@@ -521,8 +490,8 @@ class TextOpsSpec extends AnyFunSuite {
     assert(psl("http://deep.sub.example.zz/x") == "example.zz")
     // longest match: co.jp (plain 2-label) vs jp implicit
     assert(psl("http://a.b.example.co.jp/x") == "example.co.jp")
-    // parsePsl shape sanity: the snapshot yields maxP = 3
-    assert(TextOps.parsePsl(TextOps.PslRules).maxP == 3)
+    // parsePsl shape sanity: a 3-label plain rule yields maxP = 3
+    assert(TextOps.parsePsl(Seq("*.ck", "!www.ck", "co.jp", "k12.ca.us")).maxP == 3)
   }
 
   test("urlApexPsl: full bundled PSL — 4/5-label rules, private section, IDN rules (r14)") {

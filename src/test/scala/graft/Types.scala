@@ -2,16 +2,14 @@ package graft
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** Typed `Dataset[T]` facade over the testdata tables — for callers who
-  * want compile-time field checks on pipeline code. The engine's
-  * operators stay `DataFrame`-shaped (schemas are dynamic at the
-  * library boundary, SURVEY §1.3); these encoders cover the fixed
-  * harness tables where a case class is the honest model.
+/** Typed `Dataset[T]` views of the testdata tables — TypedSpec's
+  * fixture for compile-time field checks next to the engine's
+  * `DataFrame`-shaped operators (schemas are dynamic at the library
+  * boundary, SURVEY §1.3).
   */
 object Types {
   final case class Doc(doc_id: Long, text: String, lang: String,
       source: String, n_chars: Long)
-  final case class Embedding(vec_id: Long, embedding: Seq[Float], label: Int)
   final case class Customer(c_custkey: Long, c_name: String, c_nationkey: Int,
       c_acctbal: Double, c_mktsegment: String)
   final case class Order(o_orderkey: Long, o_custkey: Long, o_orderstatus: String,
@@ -20,10 +18,6 @@ object Types {
   def docs(spark: SparkSession, sfDir: String): Dataset[Doc] = {
     import spark.implicits._
     Tables.table(spark, sfDir, "documents").as[Doc]
-  }
-  def embeddings(spark: SparkSession, sfDir: String): Dataset[Embedding] = {
-    import spark.implicits._
-    Tables.table(spark, sfDir, "embeddings").as[Embedding]
   }
   def customers(spark: SparkSession, sfDir: String): Dataset[Customer] = {
     import spark.implicits._
