@@ -102,9 +102,7 @@ private[graft] object QShared {
     // dedupClusters3 device below)
     val e = shingles3(s, dir)
     DfMemo.cached(toks, "dedupPairs3:k=3:thr=0.5") {
-      // e is a map-side explode of the persisted shingles3Arrays memo:
-      // a second pinned copy of its rows would buy nothing
-      Dedup.jaccardPairsPrefix(e, 0.5, materialize = false)
+      Dedup.jaccardPairsPrefix(e, 0.5)
     }
   }
 

@@ -676,17 +676,14 @@ object Multimodal {
       val hi = ((lit(i + 1) * L) / nb).cast("int")
       struct(lit(i).as("band"), col("ahash").substr(lo + 1, hi - lo).as("bs"))
     }: _*)
-    val b = grp.select(col("gid"), col("ahash"), L.as("len"),
+    val b = grp.select(col("gid").as("id"), col("ahash"), L.as("len"),
         explode(bands).as("c"))
-      .select(col("gid"), col("ahash"), col("len"),
+      .select(col("id"), col("ahash"), col("len"),
         col("c.band").as("band"), col("c.bs").as("bs"))
     val ham = size(filter(sequence(lit(1), length(col("ha"))),
       i => col("ha").substr(i, lit(1)) =!= col("hb").substr(i, lit(1))))
-    b.as("a").join(b.as("b"),
-        col("a.len") === col("b.len") &&
-          col("a.band") === col("b.band") && col("a.bs") === col("b.bs") &&
-          col("a.gid") < col("b.gid"))
-      .select(col("a.gid").as("gid"), col("b.gid").as("gid2"),
+    graft.ops.Dedup.bucketPairs(b, Seq("len", "band", "bs"))
+      .select(col("a.id").as("gid"), col("b.id").as("gid2"),
         col("a.ahash").as("ha"), col("b.ahash").as("hb"))
       .distinct()
       .withColumn("hamming", ham)

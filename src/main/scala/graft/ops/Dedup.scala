@@ -16,8 +16,10 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * Scale notes (100 TB north star):
   *  - exact dedup = one hash-partitioned groupBy on a 32-byte
   *    fingerprint — the cheapest possible full-corpus pass.
-  *  - exact Jaccard self-joins explode on hot shingles; it is the
-  *    small-data oracle. The scale paths are prefix filtering
+  *  - every pair kernel builds "pairs of ids sharing a bucket" with one
+  *    grouping pass ([[bucketPairs]]), never a self-join; exact
+  *    all-shingle pairs still explode on hot shingles. The scale paths
+  *    are prefix filtering
   *    ([[jaccardPairsPrefix]]: one per-document aggregate, candidates
   *    from the rare-first prefixes only, exact verify) and MinHash
   *    ([[minhashFromArrays]] — one narrow pass over per-doc hash
@@ -136,31 +138,31 @@ object Dedup {
       .distinct()
   }
 
-  /** Pair step shared by the Jaccard entry points: self-join the
-    * exploded hashes on (block,) h with id-only payload (8-24 bytes per
-    * shuffled row — the fan-out is Σ_h |docs_h|², so row width IS the
-    * cost), count intersections, join set sizes back onto the ~|pairs|
-    * aggregate. (Hash-collision risk ~|shingles|²/2⁶⁴ — negligible, and
-    * only perturbs one intersection count by 1.)
+  /** Every pair of rows sharing a bucket: groups `rows` (`id`, the
+    * `keys`, any payload columns) by the keys, and emits one row
+    * (a, b) per pair of rows with a.id < b.id, each side a struct of
+    * `id` and the payload. The rows are the multiset of the self-join
+    * `rows a JOIN rows b ON keys AND a.id < b.id`, duplicates included,
+    * but `rows` is planned once: a self-join plans its input on both
+    * sides, and an unpinned input is computed twice. Each bucket is
+    * one sorted array, and element i pairs with its suffix, so the
+    * largest intermediate value is one bucket, never an n(n−1)/2 pair
+    * array in a single row. Buckets of more than `maxBucket` rows are
+    * dropped: a key shared corpus-wide (boilerplate) makes the pair
+    * space itself the bottleneck.
     */
-  def jaccardPairsFromHashes(
-      e0: DataFrame, minJ: Double, blockCol: Option[String] = None,
-      materialize: Boolean = false): DataFrame = {
-    // the exploded frame is referenced three times (two join sides +
-    // sizes); when its lineage is expensive (k>1 shingling = window +
-    // distinct), localCheckpoint computes it once and reuses the blocks
-    val e = if (materialize) e0.localCheckpoint() else e0
-    val sizes = e.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val joinCond = blockCol.map(b => col(s"a.$b") === col(s"b.$b"))
-      .foldLeft(col("a.h") === col("b.h") && col("a.id") < col("b.id"))(_ && _)
-    e.as("a").join(e.as("b"), joinCond)
-      .groupBy(col("a.id").as("id1"), col("b.id").as("id2"))
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("sz", "s1"), "id1")
-      .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("sz", "s2"), "id2")
-      .withColumn("jaccard", col("inter") / (col("s1") + col("s2") - col("inter")))
-      .filter(col("jaccard") >= minJ)
-      .select(col("id1"), col("id2"), col("jaccard"))
+  private[graft] def bucketPairs(
+      rows: DataFrame, keys: Seq[String], maxBucket: Int = Int.MaxValue): DataFrame = {
+    val members = "id" +: rows.columns.filterNot(c => c == "id" || keys.contains(c)).toSeq
+    val n = size(col("__b"))
+    rows.filter(keys.map(col(_).isNotNull).reduce(_ && _))
+      .groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(struct(members.map(col): _*))).as("__b"))
+      .filter(n.between(2, maxBucket))
+      .select(col("__b"), posexplode(col("__b")).as(Seq("__i", "a")))
+      .select(col("a"),
+        explode(slice(col("__b"), col("__i") + lit(2), n - col("__i") - lit(1))).as("b"))
+      .filter(col("a.id") < col("b.id"))
   }
 
   /** Prefix-filtered EXACT Jaccard pairs (SSJoin/PPJoin-style prefix
@@ -168,31 +170,28 @@ object Dedup {
     * side x, so ordering each doc's tokens canonically (rarest-first by
     * global df, ties by hash) and indexing only the first
     * |x| − ⌈θ·|x|⌉ + 1 of them is guaranteed to surface every
-    * qualifying pair — at θ=0.9 the candidate-generating self-join
+    * qualifying pair — at θ=0.9 the candidate-generating pair step
     * shrinks to ~10% of the rows and the quadratic hot-token fan-out
     * collapses. Candidates are then verified with a full intersection
-    * count, so results are EXACT — identical to
-    * [[jaccardPairsFromHashes]] (parity-tested).
+    * count, so results are EXACT — identical to the all-shingles
+    * self-join (parity-tested).
     *
     * Shape: ONE aggregate per document builds its canonically sorted
     * element list `sort_array(collect_list(struct([block,] df, h)))`;
     * the size, the prefix (a slice) and the verify array all come from
     * that one row, so there is no per-document window, no separate
     * sizes aggregate or join, and no regroup inside the verify. The
-    * per-document frame is localCheckpointed: the candidate self-join
-    * reads it twice and the verify twice more. Sizes and verify arrays
-    * are per id even when an id spans several blocks; prefixes are per
+    * per-document frame is localCheckpointed: the candidate pairs read
+    * it once and the verify twice more. Sizes and verify arrays are per
+    * id even when an id spans several blocks; prefixes are per
     * (id, block).
     *
-    * Same input/output contract as [[jaccardPairsFromHashes]]. The
-    * input is localCheckpointed by default: it is read twice (df
-    * table, per-document aggregate) and its lineage is usually an
-    * expensive shingling.
+    * Input: the exploded distinct elements `e` (id[, block], h), read
+    * twice (df table, per-document aggregate). Output:
+    * (id1, id2, jaccard), id1 < id2.
     */
   def jaccardPairsPrefix(
-      e0: DataFrame, minJ: Double, blockCol: Option[String] = None,
-      materialize: Boolean = true): DataFrame = {
-    val e = if (materialize) e0.localCheckpoint() else e0
+      e: DataFrame, minJ: Double, blockCol: Option[String] = None): DataFrame = {
     val blockCols = blockCol.toSeq
     val dfreq = e.groupBy(col("h")).agg(count(lit(1)).as("__df"))
     // sorted by (block, df, h): one contiguous, rare-first run per block
@@ -219,9 +218,7 @@ object Dedup {
     }
     val pref = docs.select(col("id"), explode(prefix).as("__p"))
       .select(("id" +: (blockCols :+ "h").map(c => s"__p.$c")).map(col): _*)
-    val joinCond = blockCol.map(b => col(s"a.$b") === col(s"b.$b"))
-      .foldLeft(col("a.h") === col("b.h") && col("a.id") < col("b.id"))(_ && _)
-    val cand = pref.as("a").join(pref.as("b"), joinCond)
+    val cand = bucketPairs(pref, blockCols :+ "h")
       .select(col("a.id").as("id1"), col("b.id").as("id2"))
       .distinct()
     verifyArrays(cand, docs.select(col("id"), col("hs")), minJ)
@@ -508,35 +505,32 @@ object Dedup {
       .select(col("cid"), col("eid"), col("jaccard"))
   }
 
-  /** Self-join-free variant of [[jaccardPairsFromHashes]]: group ids
-    * per shingle bucket and emit ordered pairs by in-bucket
-    * combination. One aggregation + one explode replaces the self-join,
-    * and the expensive shingle subtree is evaluated twice (buckets,
-    * sizes) instead of three times. `maxBucket` drops pathological
-    * buckets exactly like [[lshCandidates]] — at 100 TB a shingle
-    * shared by 1e6 docs must be dropped or df-filtered either way, or
-    * the pair space itself is the bottleneck.
+  /** Shared-element counts (id1, id2, inter, s1, s2) of every pair of
+    * documents sharing ≥1 element of `e` (id, h) in a bucket of at most
+    * `maxBucket` documents ([[bucketPairs]]); s1, s2 are the set sizes.
     */
-  def jaccardPairsBucketed(
-      e: DataFrame, minJ: Double, maxBucket: Int = 1000): DataFrame = {
+  private def bucketIntersections(e: DataFrame, maxBucket: Int): DataFrame = {
     val sizes = e.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val n = size(col("ids"))
-    // Two-level explode: element i pairs with its suffix, so the largest
-    // intermediate value is one ≤ maxBucket-element array — never the
-    // full n(n−1)/2 pair array in a single row (an executor OOM at the
-    // old maxBucket=10000 default: ~5·10⁷ structs in one value).
-    val pairs = e.groupBy(col("h")).agg(sort_array(collect_list(col("id"))).as("ids"))
-      .filter(n.between(2, maxBucket))
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id1")))
-      .select(col("id1"),
-        explode(slice(col("ids"), col("i") + lit(2), n - col("i") - lit(1))).as("id2"))
-    pairs.groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("inter"))
+    bucketPairs(e.select(col("id"), col("h")), Seq("h"), maxBucket)
+      .groupBy(col("a.id").as("id1"), col("b.id").as("id2"))
+      .agg(count(lit(1)).as("inter"))
       .join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("sz", "s1"), "id1")
       .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("sz", "s2"), "id2")
+  }
+
+  /** Exact Jaccard pairs (id1, id2, jaccard ≥ minJ) from in-bucket
+    * pairs: one aggregation and one explode, no self-join, and the
+    * element subtree is read twice (buckets, sizes). `maxBucket` drops
+    * pathological buckets exactly like [[lshCandidates]]: at 100 TB a
+    * shingle shared by 1e6 docs must be dropped or df-filtered either
+    * way, or the pair space itself is the bottleneck.
+    */
+  def jaccardPairsBucketed(
+      e: DataFrame, minJ: Double, maxBucket: Int = 1000): DataFrame =
+    bucketIntersections(e, maxBucket)
       .withColumn("jaccard", col("inter") / (col("s1") + col("s2") - col("inter")))
       .filter(col("jaccard") >= minJ)
       .select(col("id1"), col("id2"), col("jaccard"))
-  }
 
   /** CONTAINMENT near-dup pairs (Broder's containment — the quote /
     * sub-document signal Jaccard misses): for pairs sharing ≥1 shingle,
@@ -544,28 +538,15 @@ object Dedup {
     * doc's shingle set lies inside the larger, kept at ≥ minC. A
     * 50-token quote embedded in a 5000-token article scores ≈1.0 here
     * but ≈0.01 Jaccard — this is the embedded-duplication detector.
-    * Pair-gen is the same bucketed in-bucket suffix-explode as
-    * [[jaccardPairsBucketed]] (hot buckets capped: the identical
-    * 100 TB argument — a corpus-wide boilerplate shingle must be
-    * dropped or the pair space itself is the bottleneck).
+    * Pair-gen and hot-bucket cap are [[jaccardPairsBucketed]]'s.
     * Output: (id1, id2, containment).
     */
   def containmentPairs(
-      e: DataFrame, minC: Double, maxBucket: Int = 1000): DataFrame = {
-    val sizes = e.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val n = size(col("ids"))
-    val pairs = e.groupBy(col("h")).agg(sort_array(collect_list(col("id"))).as("ids"))
-      .filter(n.between(2, maxBucket))
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id1")))
-      .select(col("id1"),
-        explode(slice(col("ids"), col("i") + lit(2), n - col("i") - lit(1))).as("id2"))
-    pairs.groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("inter"))
-      .join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("sz", "s1"), "id1")
-      .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("sz", "s2"), "id2")
+      e: DataFrame, minC: Double, maxBucket: Int = 1000): DataFrame =
+    bucketIntersections(e, maxBucket)
       .withColumn("containment", col("inter") / least(col("s1"), col("s2")))
       .filter(col("containment") >= minC)
       .select(col("id1"), col("id2"), col("containment"))
-  }
 
   /** Seeded universal-hash parameters for MinHash: (a, b) pairs mod a
     * Mersenne prime. Deterministic for a seed.
@@ -632,25 +613,11 @@ object Dedup {
       .select(col("id"),
         posexplode(graft.functions.BandHashes.band_hashes(col("sig"), bands))
           .as(Seq("band", "bh")))
-    // In-bucket suffix-pair explode (r17, the [[jaccardPairsBucketed]]
-    // device): the previous form window-counted bucket sizes and then
-    // SELF-JOINED the derivation on (band, bh) — the signature pipeline
-    // feeding `sigs` is an unmaterialized subtree, no ReusedExchange
-    // fires across the join's two sides (plan-checked), so the
-    // O(shingles·numHashes) signature work was planned and computed
-    // TWICE per run. One groupBy collects each bucket once (the size
-    // gate replaces the window — an id appears at most once per
-    // (band, bh), so group size == the old window count), pairs explode
-    // bucket-locally with the bounded suffix device, and the signatures
-    // are computed exactly once. Same pair set: sort_array + suffix
-    // slice emits each unordered in-bucket pair once with id1 < id2.
-    val n = size(col("ids"))
-    buckets.groupBy(col("band"), col("bh"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .filter(n.between(2, maxBucket))
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id1")))
-      .select(col("id1"),
-        explode(slice(col("ids"), col("i") + lit(2), n - col("i") - lit(1))).as("id2"))
+    // in-bucket pairs: each bucket is collected once, so the signature
+    // pipeline feeding `sigs` is computed once; an id appears at most
+    // once per (band, bh), so the bucket size is its id count
+    bucketPairs(buckets, Seq("band", "bh"), maxBucket)
+      .select(col("a.id").as("id1"), col("b.id").as("id2"))
       .distinct()
   }
 
@@ -683,17 +650,9 @@ object Dedup {
         concat_ws("_", transform(
           slice(col("sig"), b * rowsPerBand + lit(1), lit(rowsPerBand)),
           _.cast("string"))).as("bh")))
-    // localCheckpoint (r17): the self-join's two sides are the SAME
-    // unmaterialized derivation — unpinned, the md5 hashing + 16-min
-    // signature aggregate ran twice (no ReusedExchange fires across a
-    // self-join's sides). One bands×docs row frame, tiny for the
-    // ≤500-doc witnesses this portable path serves.
     val buckets = sigs.select(col("id"), explode(bandCol).as("b"))
       .select(col("id"), col("b.band").as("band"), col("b.bh").as("bh"))
-      .localCheckpoint()
-    buckets.as("a").join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.id") < col("b.id"))
+    bucketPairs(buckets, Seq("band", "bh"))
       .select(col("a.id").as("id1"), col("b.id").as("id2"))
       .distinct()
   }
@@ -1262,11 +1221,7 @@ object Dedup {
     val b = sigs.select(col("id"), col("sim_lo"), col("sim_hi"), explode(chunks).as("c"))
       .select(col("id"), col("sim_lo"), col("sim_hi"),
         col("c.chunk").as("chunk"), col("c.ch").as("ch"))
-      // localCheckpoint (r17): same doubled-lineage fix as simhashPairs
-      .localCheckpoint()
-    b.as("a").join(b.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.ch") === col("b.ch") &&
-          col("a.id") < col("b.id"))
+    bucketPairs(b, Seq("chunk", "ch"))
       .select(col("a.id").as("id1"), col("b.id").as("id2"),
         (bit_count(col("a.sim_lo").bitwiseXOR(col("b.sim_lo"))) +
           bit_count(col("a.sim_hi").bitwiseXOR(col("b.sim_hi")))).as("hamming"))
@@ -1284,13 +1239,7 @@ object Dedup {
         shiftright(col("simhash"), i * 16).bitwiseAND(lit(0xffffL)).as("ch"))): _*)
     val b = sigs.select(col("id"), col("simhash"), explode(chunks).as("c"))
       .select(col("id"), col("simhash"), col("c.chunk").as("chunk"), col("c.ch").as("ch"))
-      // localCheckpoint (r17): self-joined below — unpinned, the whole
-      // signature lineage (tokenize + per-bit majority aggregate) was
-      // planned and executed twice. 4 rows per doc, 4 narrow columns.
-      .localCheckpoint()
-    b.as("a").join(b.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.ch") === col("b.ch") &&
-          col("a.id") < col("b.id"))
+    bucketPairs(b, Seq("chunk", "ch"))
       .select(col("a.id").as("id1"), col("b.id").as("id2"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
       .distinct()

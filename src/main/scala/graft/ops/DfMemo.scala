@@ -68,8 +68,8 @@ private[graft] object DfMemo {
     * memoized derivation. Two kinds, both load-bearing:
     *
     *   - localCheckpoint blocks registered during the compute
-    *     (jaccardPairsPrefix's per-document frame, cosinePairsBlocked's
-    *     exploded postings): a lazily-localCheckpointed RDD's blocks are its
+    *     (jaccardPairsPrefix's per-document frame under dedupPairs3):
+    *     a lazily-localCheckpointed RDD's blocks are its
     *     ONLY copy once materialized — an external "release what this
     *     query pinned" sweep (graft.Bench's per-query cleanup) that
     *     unpersists them kills every cached frame built on top,

@@ -83,27 +83,11 @@ object KMeansOps {
 
   /** Per-cluster SSE = Σ dist² plus member count (ReducerKMean.java:45,
     * membership via count rather than the reference's collect_list —
-    * a list of 1e9 ids per cluster does not scale; [[members]] exposes
-    * the list form for parity).
+    * a list of 1e9 ids per cluster does not scale).
     */
   def sse(assigned: DataFrame): DataFrame =
     assigned.groupBy(col("cluster"))
       .agg(sum(col("dist") * col("dist")).as("sse"), count(lit(1)).as("n"))
-
-  /** Reference-parity membership lists (ReducerKMean.java:43-44);
-    * sort_array makes the nondeterministic collect order canonical.
-    */
-  def members(assigned: DataFrame, idCol: String): DataFrame =
-    assigned.groupBy(col("cluster"))
-      .agg(sort_array(collect_list(col(idCol))).as("member_ids"))
-
-  /** One whole Lloyd iteration from a driver-side centroid array;
-    * returns the assignment DataFrame.
-    */
-  def iterate(
-      points: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[(Long, Array[Double])]): DataFrame =
-    assign(points, idCol, vecCol, centroids)
 
   /** Per-cluster coordinate sums, member count and Σ dist² of `dim`-wide
     * vectors in one buffer: `[0, dim)` = Σ xᵢ, `[dim]` = n,
@@ -212,7 +196,7 @@ object KMeansOps {
       var history = Vector.empty[Map[Long, Double]]
       var lastAssign: DataFrame = null
       while (it < maxIter && !converged) {
-        val assigned = iterate(pts, idCol, vecCol, centroids)
+        val assigned = assign(pts, idCol, vecCol, centroids)
         val round = roundStats(assigned, vecCol, dim, scale)
         val stats = round.map { case (cid, c, _) => cid -> c }
         history :+= round.map { case (cid, _, e) => cid -> e }.toMap

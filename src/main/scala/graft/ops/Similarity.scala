@@ -75,11 +75,31 @@ object Similarity {
     */
   def cosinePairsBlocked(
       corpus: DataFrame, idCol: String, vecCol: String, minCos: Double,
-      blocks: Int = 16): DataFrame = {
-    val spark = corpus.sparkSession
+      blocks: Int = 16): DataFrame =
+    // InternalRow generator kernel (r18, guide §4.1 / VERDICT r17 #8):
+    // the former Dataset.flatMap deserialized every packed block row
+    // to external objects (DeserializeToObject; getSeq[Double] boxed
+    // each vector element once per partner block) and re-serialized
+    // the emitted tuples. Same nested loop, same sequential IEEE dot
+    // (bit-identical pairs) — minus the object boundary.
+    blockPairs(corpus, idCol, vecCol, blocks)
+      .select(graft.functions.BlockPairKernels.cos_block_pairs(
+        col("v1"), col("v2"), col("bi") === col("bj"), lit(minCos)))
+      // each unordered block pair occurs exactly once (i <= j), and
+      // same-block pairs are halved by idb > ida — no distinct needed
+
+  /** The packed block self-join both block-pair kernels run over:
+    * unit vectors hashed into `blocks` groups, each group packed into
+    * one row `vs` = list of (id, u), and every unordered block pair
+    * i ≤ j joined into one (bi, bj, v1, v2) row — one task per block
+    * pair.
+    */
+  private def blockPairs(
+      df: DataFrame, idCol: String, vecCol: String, blocks: Int): DataFrame = {
+    val spark = df.sparkSession
     import spark.implicits._
     val unit = withUnitVec(
-      corpus.select(col(idCol).cast("long").as("id"),
+      df.select(col(idCol).cast("long").as("id"),
         KMeansOps.asDouble(col(vecCol)).as("v")), "v", "u")
       .select(col("id"), col("u"))
     val packed = unit
@@ -88,19 +108,9 @@ object Similarity {
       .agg(collect_list(struct(col("id"), col("u"))).as("vs"))
     val bp = (for { i <- 0 until blocks; j <- i until blocks } yield (i, j))
       .toDF("bi", "bj")
-    // InternalRow generator kernel (r18, guide §4.1 / VERDICT r17 #8):
-    // the former Dataset.flatMap deserialized every packed block row
-    // to external objects (DeserializeToObject; getSeq[Double] boxed
-    // each vector element once per partner block) and re-serialized
-    // the emitted tuples. Same nested loop, same sequential IEEE dot
-    // (bit-identical pairs) — minus the object boundary.
     packed.select(col("b").as("bi"), col("vs").as("v1"))
       .join(broadcast(bp), "bi")
       .join(packed.select(col("b").as("bj"), col("vs").as("v2")), "bj")
-      .select(graft.functions.BlockPairKernels.cos_block_pairs(
-        col("v1"), col("v2"), col("bi") === col("bj"), lit(minCos)))
-      // each unordered block pair occurs exactly once (i <= j), and
-      // same-block pairs are halved by idb > ida — no distinct needed
   }
 
   /** Approximate all-pairs cosine ≥ minCos via random-hyperplane LSH
@@ -148,19 +158,10 @@ object Similarity {
       .localCheckpoint()
     val buckets = sigs.select(col("id"),
       posexplode(col("bhs")).as(Seq("band", "bh")))
-    // in-bucket suffix-pair explode (r17, the Dedup.lshCandidates /
-    // jaccardPairsBucketed device): the old window + self-join planned
-    // the bucket derivation twice and shuffled it twice; one groupBy
-    // collects each bucket once (group size == the old window count —
-    // an id appears at most once per (band, bh)), pairs explode
-    // bucket-locally, each unordered pair exactly once with id1 < id2.
-    val nIds = size(col("ids"))
-    val cand = buckets.groupBy(col("band"), col("bh"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .filter(nIds.between(2, maxBucket))
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id1")))
-      .select(col("id1"),
-        explode(slice(col("ids"), col("i") + lit(2), nIds - col("i") - lit(1))).as("id2"))
+    // in-bucket pairs (Dedup.bucketPairs): each bucket is collected
+    // once; an id appears at most once per (band, bh)
+    val cand = Dedup.bucketPairs(buckets, Seq("band", "bh"), maxBucket)
+      .select(col("a.id").as("id1"), col("b.id").as("id2"))
       .distinct()
     cand
       .join(unit.select(col("id").as("id1"), col("u").as("u1")), "id1")
@@ -409,30 +410,15 @@ object Similarity {
     */
   private def knnTopKBlocked(
       emb: DataFrame, idCol: String, vecCol: String, k: Int,
-      scale: Int, blocks: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val unit = withUnitVec(
-      emb.select(col(idCol).cast("long").as("id"),
-        KMeansOps.asDouble(col(vecCol)).as("v")), "v", "u")
-      .select(col("id"), col("u"))
-    val packed = unit
-      .withColumn("b", pmod(xxhash64(col("id")), lit(blocks.toLong)).cast("int"))
-      .groupBy(col("b"))
-      .agg(collect_list(struct(col("id"), col("u"))).as("vs"))
-    val bp = (for { i <- 0 until blocks; j <- i until blocks } yield (i, j))
-      .toDF("bi", "bj")
+      scale: Int, blocks: Int): DataFrame =
     // InternalRow generator kernel (r18, guide §4.1 / VERDICT r17 #8):
     // identical bounded sorted-insert top-k loop as the former
     // Dataset.flatMap (same rounding, same ordering, bit-identical
     // rows) — minus the DeserializeToObject/SerializeFromObject
     // boundary and the per-element boxing of every vector double.
-    packed.select(col("b").as("bi"), col("vs").as("v1"))
-      .join(broadcast(bp), "bi")
-      .join(packed.select(col("b").as("bj"), col("vs").as("v2")), "bj")
+    blockPairs(emb, idCol, vecCol, blocks)
       .select(graft.functions.BlockPairKernels.knn_block_topk(
         col("v1"), col("v2"), col("bi") === col("bj"), k, scale))
-  }
 
   /** Cell-routed APPROXIMATE kNN self-join — the scale path that
     * removes [[knnGraph]]'s Θ(n²) pair kernel from the graph substrate

@@ -14,9 +14,12 @@ import graft.ops._
   *   near-dup removal (shingle Jaccard ≥ threshold, drop the higher id
   *   of each verified pair) → survivors.
   *
-  * Near-dup candidates come from the exact Jaccard join at test scale;
-  * swap [[Dedup.jaccardPairsFromHashes]] for MinHash+LSH candidates +
-  * verification at corpus scale (identical pair contract).
+  * Near-dup pairs are exact: every shingle-sharing pair, from
+  * uncapped in-bucket pairs ([[Dedup.jaccardPairsBucketed]]). Word
+  * 3-shingles are near-unique, so buckets stay small; where hot
+  * shingles make that quadratic, swap in [[Dedup.jaccardPairsPrefix]]
+  * or MinHash+LSH candidates + [[Dedup.verifyJaccard]] (identical pair
+  * contract).
   */
 object Curation {
 
@@ -50,13 +53,12 @@ object Curation {
           .partitionBy(col("fp")).orderBy(col(idCol))))
       .filter(col("__rk") === 1)
       .drop("__rk")
-    // near-dup: drop the higher id of every qualifying pair. Direct
-    // self-join: k-shingles (k≥3) are near-unique so there is no
-    // hot-token fan-out to prefix-filter away; for unigram/hot-token
-    // inputs switch to Dedup.jaccardPairsPrefix (identical contract)
-    val pairs = Dedup.jaccardPairsFromHashes(
-      Dedup.shingleHashes(keptExact, idCol, "toks", cfg.shingleK),
-      cfg.nearDupJaccard, materialize = true)
+    // near-dup: drop the higher id of every qualifying pair. The
+    // shingles are pinned: the pair step reads them twice (buckets,
+    // sizes), and their lineage is the whole annotate + dedup funnel
+    val pairs = Dedup.jaccardPairsBucketed(
+      Dedup.shingleHashes(keptExact, idCol, "toks", cfg.shingleK).localCheckpoint(),
+      cfg.nearDupJaccard, maxBucket = Int.MaxValue)
     keptExact.join(pairs.select(col("id2").as(idCol)).distinct(),
         Seq(idCol), "left_anti")
       .select(col(idCol))

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops._
@@ -32,8 +31,7 @@ object Stages {
     */
   def stage1(
       spark: SparkSession, inputJsonl: String,
-      stopwords: Seq[String], dict: Seq[String],
-      parityIds: Boolean = false): DataFrame = {
+      stopwords: Seq[String], dict: Seq[String]): DataFrame = {
     val raw = spark.read.text(inputJsonl)
       // header guard (MapperExtractTransform.java:66) — applied to the raw
       // line, pre-parse, exactly as the reference
@@ -47,16 +45,11 @@ object Stages {
         .map(col(_).isNotNull).reduce(_ && _))
       .withColumn("adjectiveWord",
         TextOps.tokenizeFiltered(col("reviewText"), stopwords, dict))
-    // total order by asin + renumber (SURVEY §2.6 O1-O2). Default is the
-    // scale-safe path (range-repartition + per-partition offsets — no
-    // single-partition stage); parityIds=true keeps the reference's
-    // literal single-reducer window (ReducerExtractTransform.java:34-48)
-    // for bit-level plan parity. Both produce the identical id→asin map
-    // (PipelineSpec asserts it).
-    val withId =
-      if (parityIds)
-        parsed.withColumn("id", row_number().over(Window.orderBy("asin")).cast("long"))
-      else IdOps.sequentialIdsAtScale(parsed, Seq("asin"), "id")
+    // total order by asin + renumber (SURVEY §2.6 O1-O2), scale-safe:
+    // range-repartition + per-partition offsets, no single-partition
+    // stage. The id→asin map equals the reference's single-reducer
+    // window (ReducerExtractTransform.java:34-48); PipelineSpec asserts it.
+    val withId = IdOps.sequentialIdsAtScale(parsed, Seq("asin"), "id")
     withId.select(col("id"), col("reviewerID"), col("asin"), col("reviewerName"),
       col("adjectiveWord"), col("reviewText"))
   }

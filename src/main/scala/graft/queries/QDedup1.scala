@@ -71,17 +71,12 @@ private[graft] object QDedup1 {
         |FROM p WHERE CAST(inter AS DOUBLE) / (s1 + s2 - inter) >= 0.9
         |ORDER BY id1, id2""".stripMargin)),
 
-    Q("q_ngram3_jaccard",  // exact word-3-shingle Jaccard ≥ 0.5, unblocked.
-      // SMALL-DATA ORACLE WITNESS, deliberately the direct self-join: on
-      // this corpus 3-shingles are near-unique so there is no hot-token
-      // fan-out, and the unfiltered join is the cheapest exact plan. It is
-      // NOT the 100×-scale form — real crawl data has template headers
-      // shared by millions of docs; the gated scale twins are
-      // q_ngram3_jaccard_capped (bucket-capped) and the q_dedup_* trio
-      // (prefix-filtered), all three value-identical to this witness.
-      (s, dir) => Dedup.jaccardPairsFromHashes(
-          shingles3(s, dir), 0.5,  // shared memoized shingle substrate (r18)
-          materialize = false)
+    Q("q_ngram3_jaccard",  // exact word-3-shingle Jaccard ≥ 0.5, unblocked:
+      // the memoized prefix-filtered pair substrate the q_dedup_* trio
+      // clusters, rounded. The oracle writes the all-shingle self-join,
+      // so this entry grades the prefix filter's exactness; the
+      // bucket-capped twin is q_ngram3_jaccard_capped (same oracle).
+      (s, dir) => dedupPairs3(s, dir)
         .withColumn("jaccard", round(col("jaccard"), 6))
         .orderBy("id1", "id2"),
       Some(s"""WITH t AS ($SqlToks),
@@ -105,7 +100,7 @@ private[graft] object QDedup1 {
       // itself is the bottleneck), emit in-bucket pairs by suffix explode —
       // no self-join, no quadratic single-key shuffle fan-out. On the gate
       // corpora no 3-shingle bucket exceeds the cap, so the output is
-      // value-identical to the q_ngram3_jaccard witness (same oracle).
+      // value-identical to q_ngram3_jaccard (same oracle).
       (s, dir) => Dedup.jaccardPairsBucketed(
           shingles3(s, dir),  // shared memoized shingle substrate (r18);
           // both references (sizes + buckets) re-explode the persisted

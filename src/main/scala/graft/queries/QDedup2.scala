@@ -261,19 +261,17 @@ private[graft] object QDedup2 {
       // lexicographic tie-break (rounding BEFORE ordering keeps the
       // LIMIT boundary engine-independent). Scale: co-occurrence is
       // vocabulary-bounded, not corpus-bounded — real corpora cap to a
-      // top-V vocab first, and the per-doc self-join then emits ≤ V²/2
-      // rows per doc that collapse map-side into the ≤ V²/2-row global
-      // frame every later join runs on.
+      // top-V vocab first; each doc then emits ≤ V²/2 word pairs
+      // (Dedup.bucketPairs over the doc's words) that collapse into the
+      // ≤ V²/2-row global frame every later join runs on.
       (s, dir) => {
         val e = docsTokens(s, dir)
           .select(col("doc_id"), explode(array_distinct(col("toks"))).as("w"))
           .localCheckpoint()  // feeds pairs, dfs, and N
         val n = e.select(col("doc_id")).distinct().agg(count(lit(1)).as("n"))
         val dfreq = e.groupBy(col("w")).agg(count(lit(1)).as("df"))
-        val pairs = e.as("a")
-          .join(e.as("b"),
-            col("a.doc_id") === col("b.doc_id") && col("a.w") < col("b.w"))
-          .groupBy(col("a.w").as("w1"), col("b.w").as("w2"))
+        val pairs = Dedup.bucketPairs(e.select(col("doc_id"), col("w").as("id")), Seq("doc_id"))
+          .groupBy(col("a.id").as("w1"), col("b.id").as("w2"))
           .agg(count(lit(1)).as("c_ab"))
         pairs
           .join(dfreq.select(col("w").as("w1"), col("df").as("df1")), "w1")
@@ -860,9 +858,7 @@ private[graft] object QDedup2 {
         val fps = Dedup.winnowFingerprints(
             docsTokens(s, dir).filter(col("doc_id") < 500),
             "doc_id", "toks", k = 3, w = 4)
-          .localCheckpoint()
-        fps.as("a").join(fps.as("b"),
-            col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
+        Dedup.bucketPairs(fps, Seq("fp"))
           .groupBy(col("a.id").as("id1"), col("b.id").as("id2"))
           .agg(count(lit(1)).as("n_shared"))
           .filter(col("n_shared") >= 3)

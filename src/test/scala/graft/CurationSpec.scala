@@ -47,7 +47,7 @@ class CurationSpec extends AnyFunSuite {
     // exact: fingerprints unique among survivors
     assert(surAnn.select($"fp").distinct().count() == surAnn.count())
     // near-dup: no surviving pair at/above the threshold
-    val pairs = graft.ops.Dedup.jaccardPairsFromHashes(
+    val pairs = Oracles.jaccardPairsFromHashes(
       graft.ops.Dedup.shingleHashes(surAnn, "doc_id", "toks", cfg.shingleK),
       cfg.nearDupJaccard)
     assert(pairs.count() == 0, "surviving corpus must contain no near-dup pairs")

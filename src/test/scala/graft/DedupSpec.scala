@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +11,9 @@ class DedupSpec extends AnyFunSuite {
   import spark.implicits._
   // jobs of dedupClusters over a materialized pair frame
   val ClusterJobs = 2
+  // jobs of one q_jaccard_pairs / q_simhash_pairs run at TestSpark.Sf
+  val JaccardPairsJobs = 11
+  val SimhashPairsJobs = 8
 
   lazy val docs = Tables.table(spark, TestSpark.Sf, "documents")
     .select($"doc_id",
@@ -30,7 +34,53 @@ class DedupSpec extends AnyFunSuite {
       .as[(Long, Long, Double)].collect()
     assert(cont.toSeq == Seq((1L, 2L, 1.0)))
     // the same pair is below any useful Jaccard threshold
-    assert(Dedup.jaccardPairsFromHashes(e, 0.5).count() == 0)
+    assert(Oracles.jaccardPairsFromHashes(e, 0.5).count() == 0)
+  }
+
+  test("bucketPairs == the a.id < b.id self-join: duplicate ids, payload, empty frame, singleton and null-key buckets, cap boundary") {
+    def selfJoin(rows: DataFrame, keys: Seq[String]): DataFrame = {
+      val members = "id" +: rows.columns.filterNot(c => c == "id" || keys.contains(c)).toSeq
+      def side(t: String) = struct(members.map(c => col(s"$t.$c").as(c)): _*)
+      rows.as("x").join(rows.as("y"),
+          keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) && $"x.id" < $"y.id")
+        .select(side("x").as("a"), side("y").as("b"))
+    }
+    def bag(df: DataFrame) = df.select($"a", $"b").collect().map(_.toString).toSeq.sorted
+    val rows = Seq(
+        (1L, 0, "x", "p1"), (1L, 0, "x", "p1b"), (2L, 0, "x", "p2"), (3L, 0, "x", "p3"),
+        (2L, 1, "x", "q2"), (4L, 1, "x", "q4"),
+        (9L, 0, "y", "solo"),
+        (5L, 0, null, "n5"), (6L, 0, null, "n6"))
+      .toDF("id", "band", "bh", "p")
+    val keys = Seq("band", "bh")
+    // (0,x): (1,2)×2, (1,3)×2, (2,3); (1,x): (2,4); the singleton and
+    // the null-key bucket pair nothing
+    val got = Dedup.bucketPairs(rows, keys)
+    assert(got.count() == 6)
+    assert(bag(got) == bag(selfJoin(rows, keys)))
+    val noPayload = rows.select($"id", $"band", $"bh")
+    assert(bag(Dedup.bucketPairs(noPayload, keys)) == bag(selfJoin(noPayload, keys)))
+    val empty = rows.filter(lit(false))
+    assert(Dedup.bucketPairs(empty, keys).count() == 0)
+    assert(selfJoin(empty, keys).count() == 0)
+    // cap boundary: a bucket of exactly maxBucket rows is kept, one of
+    // maxBucket + 1 rows is dropped
+    val capped = Seq((1L, "A"), (2L, "A"), (3L, "A"),
+        (1L, "B"), (2L, "B"), (3L, "B"), (4L, "B"))
+      .toDF("id", "h")
+    assert(bag(Dedup.bucketPairs(capped, Seq("h"), maxBucket = 3))
+      == bag(selfJoin(capped.filter($"h" === "A"), Seq("h"))))
+    assert(bag(Dedup.bucketPairs(capped, Seq("h"), maxBucket = 4))
+      == bag(selfJoin(capped, Seq("h"))))
+    assert(Dedup.bucketPairs(capped, Seq("h"), maxBucket = 4).count() == 3 + 6)
+  }
+
+  test("q_jaccard_pairs and q_simhash_pairs run a pinned number of Spark jobs") {
+    def jobs(q: String) =
+      TestSpark.countJobs(SparkEntry.queries(q)(spark, TestSpark.Sf).collect())._2
+    val got = (jobs("q_jaccard_pairs"), jobs("q_simhash_pairs"))
+    assert(got == ((JaccardPairsJobs, SimhashPairsJobs)),
+      s"(q_jaccard_pairs, q_simhash_pairs) ran $got jobs")
   }
 
   test("tokenShingles: windows of 3, short docs shingle to nothing") {
@@ -64,11 +114,11 @@ class DedupSpec extends AnyFunSuite {
       // unigram, blocked by source
       val e1 = Dedup.shingleHashes(docsSrc, "doc_id", "toks", k = 1, Some("source"))
       assert(canon(Dedup.jaccardPairsPrefix(e1, theta, Some("source")))
-        == canon(Dedup.jaccardPairsFromHashes(e1, theta, Some("source"))), s"unigram theta=$theta")
+        == canon(Oracles.jaccardPairsFromHashes(e1, theta, Some("source"))), s"unigram theta=$theta")
       // 3-shingle, unblocked
       val e3 = Dedup.shingleHashes(docs, "doc_id", "sh", k = 1)
       assert(canon(Dedup.jaccardPairsPrefix(e3, theta))
-        == canon(Dedup.jaccardPairsFromHashes(e3, theta)), s"3gram theta=$theta")
+        == canon(Oracles.jaccardPairsFromHashes(e3, theta)), s"3gram theta=$theta")
     }
   }
 
@@ -111,14 +161,14 @@ class DedupSpec extends AnyFunSuite {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.withColumn("jaccard", round($"jaccard", 9))
         .as[(Long, Long, Double)].collect().toSet
-    val exact = canon(Dedup.jaccardPairsFromHashes(e, 0.7))
+    val exact = canon(Oracles.jaccardPairsFromHashes(e, 0.7))
     val sigs = Oracles.minhashSignatures(docs, "doc_id", "sh", numHashes = 128, seed = 42L)
     val cand = Dedup.lshCandidates(sigs, bands = 32)
     val verified = canon(Dedup.verifyJaccard(cand, e, 0.7))
     assert(verified.subsetOf(exact), "verify must never pass a non-qualifying pair")
     assert(exact.subsetOf(verified), "128-hash/32-band LSH should recall every 0.7-pair here")
     // composed funnel (candidates → verify → CC) == clusters over exact pairs
-    val exactCl = Dedup.dedupClusters(Dedup.jaccardPairsFromHashes(e, 0.7))
+    val exactCl = Dedup.dedupClusters(Oracles.jaccardPairsFromHashes(e, 0.7))
       .as[(Long, Long)].collect().toSet
     val funnelCl = Dedup.dedupClusters(Dedup.verifyJaccard(cand, e, 0.7))
       .as[(Long, Long)].collect().toSet
@@ -606,7 +656,7 @@ class DedupSpec extends AnyFunSuite {
   test("crossJaccardPairs ≡ the self-join pair set restricted to cross pairs, on the real corpus") {
     val e = Oracles.shingleHashesViaArrays(docs, "doc_id", "toks", k = 3)
       .localCheckpoint()
-    val all = Dedup.jaccardPairsFromHashes(e, 0.5, materialize = false)
+    val all = Oracles.jaccardPairsFromHashes(e, 0.5)
       .as[(Long, Long, Double)].collect()
       .flatMap { case (a, b, j) => Seq((a, b, j), (b, a, j)) }
       .filter { case (c, r, _) => c % 10 != 0 && r % 10 == 0 }

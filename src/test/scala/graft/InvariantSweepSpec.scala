@@ -30,7 +30,7 @@ class InvariantSweepSpec extends AnyFunSuite {
     for ((sf, cap) <- Sfs.zip(Seq(Long.MaxValue, Long.MaxValue, 1500L))) {
       val docs = docsTokens(sf, cap)
       val hashes = Dedup.shingleHashes(docs, "doc_id", "toks", k = 3).localCheckpoint()
-      val exact = Dedup.jaccardPairsFromHashes(hashes, 0.5)
+      val exact = Oracles.jaccardPairsFromHashes(hashes, 0.5)
         .select($"id1", $"id2").as[(Long, Long)].collect().toSet
       val cand = Dedup.lshCandidates(
           Dedup.minhashFromHashes(hashes, numHashes = 128, seed = 42L), bands = 32)
@@ -70,7 +70,7 @@ class InvariantSweepSpec extends AnyFunSuite {
     for ((sf, cap) <- Sfs.zip(Seq(Long.MaxValue, Long.MaxValue, 1500L))) {
       val docs = docsTokens(sf, cap)
       val hashes = Dedup.shingleHashes(docs, "doc_id", "toks", k = 3).localCheckpoint()
-      val exact = Dedup.jaccardPairsFromHashes(hashes, 0.5)
+      val exact = Oracles.jaccardPairsFromHashes(hashes, 0.5)
         .select($"id1", $"id2").as[(Long, Long)].collect().toSet
       val prod = Dedup.lshCandidates(
           Dedup.minhashFromHashes(hashes, numHashes = 128, seed = 42L), bands = 32)
@@ -215,7 +215,7 @@ class InvariantSweepSpec extends AnyFunSuite {
     // on real data at every SF
     for ((sf, cap) <- Sfs.zip(Seq(Long.MaxValue, Long.MaxValue, 1500L))) {
       val docs = docsTokens(sf, cap)
-      val truePairs = Dedup.jaccardPairsFromHashes(
+      val truePairs = Oracles.jaccardPairsFromHashes(
           Oracles.shingleHashesViaArrays(docs, "doc_id", "toks", k = 3), 0.5)
         .select($"id1", $"id2").as[(Long, Long)].collect()
       val fps = Dedup.winnowFingerprints(docs, "doc_id", "toks", k = 3, w = 4)

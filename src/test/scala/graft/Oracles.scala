@@ -21,8 +21,28 @@ object Oracles {
   def jaccardPairs(
       docs: DataFrame, idCol: String, shinglesCol: String,
       minJ: Double, blockCol: Option[String] = None): DataFrame =
-    Dedup.jaccardPairsFromHashes(
+    jaccardPairsFromHashes(
       Dedup.shingleHashes(docs, idCol, shinglesCol, k = 1, blockCol), minJ, blockCol)
+
+  /** Exact Jaccard pairs (id1, id2, jaccard ≥ minJ) from exploded
+    * distinct elements `e` (id[, block], h) by the plain self-join on
+    * (block,) h with a.id < b.id: intersections counted per pair, set
+    * sizes joined back.
+    */
+  def jaccardPairsFromHashes(
+      e: DataFrame, minJ: Double, blockCol: Option[String] = None): DataFrame = {
+    val sizes = e.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+    val joinCond = blockCol.map(b => col(s"a.$b") === col(s"b.$b"))
+      .foldLeft(col("a.h") === col("b.h") && col("a.id") < col("b.id"))(_ && _)
+    e.as("a").join(e.as("b"), joinCond)
+      .groupBy(col("a.id").as("id1"), col("b.id").as("id2"))
+      .agg(count(lit(1)).as("inter"))
+      .join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("sz", "s1"), "id1")
+      .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("sz", "s2"), "id2")
+      .withColumn("jaccard", col("inter") / (col("s1") + col("s2") - col("inter")))
+      .filter(col("jaccard") >= minJ)
+      .select(col("id1"), col("id2"), col("jaccard"))
+  }
 
   /** MinHash signatures (id, sig array<long> of length numHashes) over
     * a column of shingle strings, through the exploded

@@ -38,9 +38,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(toks("B004") == Seq("great", "great", "fast")) // dups kept
   }
 
-  test("stage1: scale-safe id path (default) == reference window path (parityIds)") {
+  test("stage1: scale-safe ids == the reference's single-window ids") {
     val atScale = s1.select($"id", $"asin").as[(Long, String)].collect().toMap
-    val parity = Stages.stage1(spark, jsonl, Stop, Dict, parityIds = true)
+    // the reference's single-reducer numbering (ReducerExtractTransform)
+    val parity = Oracles.sequentialIds(s1.drop("id"), Seq("asin"), "id")
       .select($"id", $"asin").as[(Long, String)].collect().toMap
     assert(atScale == parity)
   }

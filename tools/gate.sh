@@ -36,4 +36,12 @@ if grep -q "FAIL" "$OUT/check.log"; then
   echo "GATE REFUSED: oracle mismatches above" >&2
   exit 1
 fi
+# a query that drops out of oracle_sql.json lowers the pass count
+# without printing a FAIL line: hold the count to the ROADMAP floor
+MIN_PASS=229
+N_PASS=$(sed -n 's/^== \([0-9][0-9]*\) pass, [0-9][0-9]* fail, [0-9][0-9]* rows-only ==$/\1/p' "$OUT/check.log")
+if [ -z "$N_PASS" ] || [ "$N_PASS" -lt "$MIN_PASS" ]; then
+  echo "GATE REFUSED: ${N_PASS:-no} oracle passes, floor is $MIN_PASS" >&2
+  exit 1
+fi
 echo "== gate: all green — safe to commit =="
