@@ -153,8 +153,9 @@ private[graft] object QShared {
   private[graft] def fixedCentroidArr(s: SparkSession, dir: String): Array[(Long, Array[Double])] =
     embDouble(s, dir).filter(col("vec_id") < 8)
       .select(col("vec_id").cast("long"), col("v"))
-      .orderBy("vec_id").collect()
+      .collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1)
 
   /** Shared oracle CTE chain mirroring [[Similarity.knnSelfJoin]] with
     * the fixed vec_id<8 routing table at k=5/nprobe=5 — the cell-routed

@@ -1,17 +1,52 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import graft.ops.DfMemo
 
 /** Parquet table loader for the driver testdata layout
   * (`/root/testdata/sf{0.001,0.01,0.1}/<name>.parquet`, see TESTDATA.md).
+  *
+  * Each table's schema is resolved once per session. Every [[table]]
+  * call, the first included, returns
+  * `spark.read.schema(cached).parquet(path)`, so all frames of a table
+  * canonicalize to one plan (and key one [[ops.DfMemo]] entry), and no
+  * call but an entry's first starts the one-task Spark job that
+  * schema inference runs to read a parquet footer. An entry is keyed
+  * on (session identity, path) and holds the [[ops.DfMemo.stamp]] of
+  * the files under the path when it was inferred; it is re-inferred
+  * when that stamp changes — a file overwritten in place (new mtime or
+  * length), added or removed — so a table rewritten mid-JVM, even with
+  * a different schema, is seen on the next call. A different session
+  * (its own confs, e.g. `nanosAsLong`) never reuses another session's
+  * entry.
   */
 object Tables {
   val All: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** (session identity, path) → (file stamp, schema inferred under it) */
+  private val schemas = new ConcurrentHashMap[(Int, String), (String, StructType)]()
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val key = (System.identityHashCode(spark), path)
+    val stamp = DfMemo.stamp(Seq(path), spark.sparkContext.hadoopConfiguration)
+    val schema = Option(schemas.get(key)) match {
+      case Some((`stamp`, s)) => s
+      case _ =>
+        // a race infers twice and stores equal schemas; the stamp was
+        // taken first, so a rewrite during inference misses next call
+        val s = spark.read.parquet(path).schema
+        schemas.put(key, (stamp, s))
+        s
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** `events` normalized to expose BOTH a proper microsecond
     * TimestampType `ts` and a nanosecond-epoch LongType `ts_ns`,

@@ -112,19 +112,24 @@ private[graft] object DfMemo {
   private[graft] def stampedFiles(df: DataFrame): Option[String] = {
     val files = df.inputFiles
     if (files.isEmpty) None
-    else {
-      val conf = df.sparkSession.sparkContext.hadoopConfiguration
-      Some(files.sorted.map { f =>
-        val stamp =
-          try {
-            val path = new org.apache.hadoop.fs.Path(f)
-            val st = path.getFileSystem(conf).getFileStatus(path)
-            s"${st.getModificationTime}:${st.getLen}"
-          } catch { case _: java.io.IOException => "?" }
-        s"$f@$stamp"
-      }.mkString("\n"))
-    }
+    else Some(stamp(files.toSeq, df.sparkSession.sparkContext.hadoopConfiguration))
   }
+
+  /** The file stamp every graft cache keys on: one `file@mtime:len`
+    * line per file under `paths` (a directory stamps every file below
+    * it), sorted. Overwriting, adding or removing a file changes the
+    * stamp; an unstattable path stamps as `path@?`. */
+  private[graft] def stamp(
+      paths: Seq[String], conf: org.apache.hadoop.conf.Configuration): String =
+    paths.flatMap { f =>
+      val path = new org.apache.hadoop.fs.Path(f)
+      try {
+        val it = path.getFileSystem(conf).listFiles(path, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(st => s"${st.getPath}@${st.getModificationTime}:${st.getLen}")
+          .toSeq
+      } catch { case _: java.io.IOException => Seq(s"$f@?") }
+    }.sorted.mkString("\n")
 
   /** Return the memoized derivation of `input` for `tag`, computing and
     * persisting it on first use. `tag` must encode EVERY parameter the

@@ -738,7 +738,7 @@ object TextOps {
   def bpeEncode(docs: DataFrame, idCol: String, textCol: String,
                 iters: Int): DataFrame = {
     val merges = bpeLearn(docs, textCol, iters)
-      .orderBy("iter").collect()
+      .collect().sortBy(_.getInt(0))
       .map(r => (r.getString(1), r.getString(2)))
     var seqd = docs
       .select(col(idCol), explode(bpeWords(col(textCol))).as("w"))

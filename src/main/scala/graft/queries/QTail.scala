@@ -294,8 +294,9 @@ private[graft] object QTail {
       // id. Codebook = sorted vec_id<8 sample, queries = vec_id<4.
       (s, dir) => {
         val pts = embDouble(s, dir)
-        val codebook = pts.filter(col("vec_id") < 8).orderBy("vec_id")
+        val codebook = pts.filter(col("vec_id") < 8)
           .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+          .sortBy(_._1)
         Similarity.pqAdcTopK(pts, "vec_id", "v", m = 4, codebook,
             pts.filter(col("vec_id") < 4), "vec_id", "v", k = 5)
           .orderBy("qid", "rank")
@@ -333,8 +334,9 @@ private[graft] object QTail {
       // queries broadcast with their LUTs; only the top-5 window moves.
       (s, dir) => {
         val pts = embDouble(s, dir)
-        val first16 = pts.filter(col("vec_id") < 16).orderBy("vec_id")
+        val first16 = pts.filter(col("vec_id") < 16)
           .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+          .sortBy(_._1)
         val coarse = first16.filter(_._1 < 8)
         def d2(a: Array[Double], b: Array[Double]): Double = {
           var s0 = 0.0; var i = 0

@@ -12,8 +12,8 @@ class DedupSpec extends AnyFunSuite {
   // jobs of dedupClusters over a materialized pair frame
   val ClusterJobs = 2
   // jobs of one q_jaccard_pairs / q_simhash_pairs run at TestSpark.Sf
-  val JaccardPairsJobs = 11
-  val SimhashPairsJobs = 8
+  val JaccardPairsJobs = 10
+  val SimhashPairsJobs = 7
 
   lazy val docs = Tables.table(spark, TestSpark.Sf, "documents")
     .select($"doc_id",
@@ -78,6 +78,9 @@ class DedupSpec extends AnyFunSuite {
   test("q_jaccard_pairs and q_simhash_pairs run a pinned number of Spark jobs") {
     def jobs(q: String) =
       TestSpark.countJobs(SparkEntry.queries(q)(spark, TestSpark.Sf).collect())._2
+    // the session's first read of a table infers its schema in a job of
+    // its own; warm it so the pins do not depend on suite order
+    Tables.table(spark, TestSpark.Sf, "documents")
     val got = (jobs("q_jaccard_pairs"), jobs("q_simhash_pairs"))
     assert(got == ((JaccardPairsJobs, SimhashPairsJobs)),
       s"(q_jaccard_pairs, q_simhash_pairs) ran $got jobs")

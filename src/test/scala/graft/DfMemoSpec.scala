@@ -192,9 +192,9 @@ class DfMemoSpec extends AnyFunSuite {
     val ckpts = sc.getPersistentRDDs.filter { case (id, rdd) =>
       fresh(id) && org.apache.spark.rdd.GraftRddBridge.isLocallyCheckpointed(rdd)
     }
-    // no eager checkpoint of the input: 12 jobs (13 with it), and the
+    // no eager checkpoint of the input: 10 jobs (11 with it), and the
     // one pin is the prefix kernel's per-document aggregate
-    assert(jobs == 12, s"dedupPairs3 build ran $jobs jobs")
+    assert(jobs == 10, s"dedupPairs3 build ran $jobs jobs")
     assert(ckpts.size == 1, s"${ckpts.size} checkpoint pins from one dedupPairs3 build")
     assert(pairs.count() > 0)
     DfMemo.clear()
