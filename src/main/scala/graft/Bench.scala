@@ -123,8 +123,8 @@ object Bench {
     * the bench JSON so the medians merge can REJECT cross-SHA sample
     * mixing (VERDICT r12 #7 — the q_edit_pairs mid-round rewire left 6
     * passes measuring a dead plan; hand-maintained exclusion lists
-    * don't scale). Exec `git` when available, fall back to parsing
-    * .git/HEAD (then packed-refs), never throw.
+    * don't scale). Exec `git`; without a git binary the stamp is
+    * "unknown", never throw.
     */
   private[graft] def gitSha(): String = {
     val repo = Seq(sys.props.get("graft.repo.dir"), sys.props.get("user.dir"))
@@ -138,7 +138,7 @@ object Bench {
           val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
           if (p.waitFor() == 0) Some(out) else None
         } catch { case _: Exception => None }
-      val viaGit = exec("rev-parse", "HEAD").map { sha =>
+      exec("rev-parse", "HEAD").fold("unknown") { sha =>
         // dirty = MEASUREMENT-RELEVANT paths only: the driver's
         // PROGRESS.jsonl tracking file is permanently modified and kept
         // every r13 pass stamped -dirty despite a clean build; what can
@@ -151,31 +151,6 @@ object Bench {
           "--", "src", "build.sbt").exists(_.nonEmpty)
         if (dirty) s"$sha-dirty" else sha
       }
-      def viaFiles: Option[String] =
-        try {
-          val head = java.nio.file.Files.readString(
-            new java.io.File(d, ".git/HEAD").toPath).trim
-          if (!head.startsWith("ref: ")) Some(head)
-          else {
-            val ref = head.drop(5)
-            val refFile = new java.io.File(d, s".git/$ref")
-            if (refFile.exists)
-              Some(java.nio.file.Files.readString(refFile.toPath).trim)
-            else {
-              val packed = new java.io.File(d, ".git/packed-refs")
-              if (!packed.exists) None
-              else java.nio.file.Files.readAllLines(packed.toPath)
-                .toArray(Array.empty[String])
-                .find(_.endsWith(s" $ref")).map(_.split(' ').head)
-            }
-          }
-        } catch { case _: Exception => None }
-      // the file-parse fallback cannot see uncommitted changes — mark
-      // it so bench_median.py refuses the stamp by default exactly
-      // like "-dirty"/"unknown" (ADVICE r13: an unmarked fallback SHA
-      // would let a dirty tree masquerade as clean HEAD when the git
-      // binary is unavailable)
-      viaGit.orElse(viaFiles.map(_ + "-unverified")).getOrElse("unknown")
     }
   }
 

@@ -97,9 +97,6 @@ private[graft] object QShared {
     * kernel instead of re-running pair generation. */
   private[graft] def dedupPairs3(s: SparkSession, dir: String): DataFrame = {
     val toks = docsTokens(s, dir)
-    // resolve the shingle memo BEFORE entering the pairs memo (nested
-    // computeIfAbsent on one map risks CHM recursive-update — the
-    // dedupClusters3 device below)
     val e = shingles3(s, dir)
     DfMemo.cached(toks, "dedupPairs3:k=3:thr=0.5") {
       Dedup.jaccardPairsPrefix(e, 0.5)
@@ -114,9 +111,6 @@ private[graft] object QShared {
     * runs once per JVM instead of three times. */
   private[graft] def dedupClusters3(s: SparkSession, dir: String): DataFrame = {
     val toks = docsTokens(s, dir)
-    // resolve the pairs memo BEFORE entering the clusters memo — a
-    // computeIfAbsent nested inside another on the same map can hit
-    // ConcurrentHashMap's recursive-update IllegalStateException
     val pairs = dedupPairs3(s, dir)
     DfMemo.cached(toks, "dedupClusters3:k=3:thr=0.5") {
       Dedup.dedupClusters(pairs)

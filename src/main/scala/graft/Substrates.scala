@@ -15,9 +15,10 @@ import graft.ops.{Similarity, TextOps, Unigram}
   *
   * Each entry invokes the SAME function with the SAME parameters its
   * gated consumers use — the DfMemo key is (session, files, plan, tag),
-  * so parameter identity is what makes the pre-build hit. Calling the
+  * so parameter identity is what makes the pre-build hit (DfMemoSpec
+  * checks that one consumer per substrate adds no entry). Calling the
   * function is sufficient to materialize: DfMemo.cached persists and
-  * counts inside the memo miss.
+  * counts inside the memo miss, and topPBasis collects its basis.
   */
 object Substrates {
 
@@ -28,7 +29,7 @@ object Substrates {
     *     q_minhash_err
     *   - knn_graph: q_knn_graph, q_knn_approx_recall, q_knn_ndcg
     *   - cell_kernel: q_knn_approx, q_knn_approx_recall, q_knn_ndcg,
-    *     q_pagerank, q_label_prop, q_hits, q_textrank
+    *     q_pagerank, q_label_prop, q_hits
     *   - cell_kernel_labeled: q_hard_negatives — since r14 a cheap
     *     DERIVATION of cell_kernel (two label joins on the memoized
     *     edge list, not a second kNN build — VERDICT r13 #1), kept in
@@ -39,7 +40,7 @@ object Substrates {
     *   - eigenbasis: q_pca_top2, q_mahalanobis, q_whiten,
     *     q_curation_v4 (its mahalanobis screen; q_curation_emb is
     *     cosine-only and never hits the memo) — the driver-side
-    *     topPBasis memo at the gated
+    *     topPBasis DfMemo entry at the gated
     *     (p=2, iters=3) key (r17; previously first-consumer-pays, so
     *     whichever consumer ran first in budget order carried a
     *     ~2.5–3.5 s cold and ghost-tripped the cold-stall flag)

@@ -1110,7 +1110,7 @@ object Dedup {
 
   /** md5-derived Kirsch–Mitzenmacher base-hash pair for Bloom probes —
     * two 32-bit lanes of md5(gram), the same cross-engine-portable
-    * construction as [[simhashPortable]]'s hlo/hhi. An engine that can
+    * construction as [[simhashPortable]]'s md5 halves. An engine that can
     * md5 a string reproduces the entire filter bit-for-bit.
     */
   private def bloomHashCols(g: org.apache.spark.sql.Column) = (
@@ -1162,11 +1162,35 @@ object Dedup {
     * sum +cnt/−cnt by the bit of xxhash64(token); sign → bit. One
     * explode + count + one wide groupBy.
     */
-  def simhash64(docs: DataFrame, idCol: String, tokensCol: String): DataFrame = {
+  def simhash64(docs: DataFrame, idCol: String, tokensCol: String): DataFrame =
+    simhashBy(docs, idCol, tokensCol, xxhash64(_))
+
+  /** Cross-engine-verifiable twin of [[simhash64]]: the base token hash
+    * is md5-derived, `hhi << 32 | hlo` from the two 32-bit halves of the
+    * first 16 hex digits. Every step — per-bit ± cnt majority vote,
+    * sign → bit, [[simhashPairs]]' chunk blocking — is portable SQL, so
+    * a second engine reproduces the signatures and pair set bit-for-bit
+    * (q_simhash_md5; its oracle keeps the signature as two 32-bit words,
+    * since a full 64-bit value would overflow DuckDB's signed BIGINT on
+    * cast, and Hamming over the pair equals Hamming over the
+    * concatenation). This is the correctness WITNESS for the
+    * sig→chunk→pair pipeline; [[simhash64]] (xxhash64) is the scale path.
+    */
+  def simhashPortable(docs: DataFrame, idCol: String, tokensCol: String): DataFrame =
+    simhashBy(docs, idCol, tokensCol, { w =>
+      def half(from: Int) = conv(substring(md5(w), from, 8), 16, 10).cast("long")
+      shiftleft(half(9), 32).bitwiseOR(half(1))
+    })
+
+  /** The SimHash vote behind [[simhash64]]/[[simhashPortable]] under the
+    * 64-bit token hash `hash`. Output (id, simhash). */
+  private def simhashBy(
+      docs: DataFrame, idCol: String, tokensCol: String,
+      hash: Column => Column): DataFrame = {
     val counts = docs
       .select(col(idCol).as("id"), explode(col(tokensCol)).as("w"))
       .groupBy("id", "w").agg(count(lit(1)).as("cnt"))
-      .withColumn("h", xxhash64(col("w")))
+      .withColumn("h", hash(col("w")))
     val contribs = (0 until 64).map { i =>
       sum(when(shiftright(col("h"), i).bitwiseAND(lit(1L)) === 1L, col("cnt"))
         .otherwise(-col("cnt"))).as(s"c$i")
@@ -1175,58 +1199,6 @@ object Dedup {
       when(col(s"c$i") > 0, shiftleft(lit(1L), i)).otherwise(lit(0L)))
     counts.groupBy("id").agg(contribs.head, contribs.tail: _*)
       .select(col("id"), bits.reduce((a, b) => a.bitwiseOR(b)).as("simhash"))
-  }
-
-  /** Cross-engine-verifiable SimHash twin of [[simhash64]]: the base
-    * token hash is md5-derived (two 32-bit halves from the first 16 hex
-    * digits — a full 64-bit value would overflow DuckDB's signed BIGINT
-    * on cast, so the signature is kept as two 32-bit words `sim_lo` /
-    * `sim_hi`; Hamming over the pair equals Hamming over the
-    * concatenation). Every step — per-bit ± cnt majority vote, sign →
-    * bit, chunk blocking — is portable SQL, so a second engine
-    * reproduces the signatures and pair set bit-for-bit (q_simhash_md5).
-    * This is the correctness WITNESS for the sig→chunk→pair pipeline;
-    * [[simhash64]]+[[simhashPairs]] (xxhash64) is the scale path.
-    */
-  def simhashPortable(docs: DataFrame, idCol: String, tokensCol: String): DataFrame = {
-    val counts = docs
-      .select(col(idCol).as("id"), explode(col(tokensCol)).as("w"))
-      .groupBy("id", "w").agg(count(lit(1)).as("cnt"))
-      .withColumn("hlo", conv(substring(md5(col("w")), 1, 8), 16, 10).cast("long"))
-      .withColumn("hhi", conv(substring(md5(col("w")), 9, 8), 16, 10).cast("long"))
-    def contribs(h: String, tag: String) = (0 until 32).map { i =>
-      sum(when(shiftright(col(h), i).bitwiseAND(lit(1L)) === 1L, col("cnt"))
-        .otherwise(-col("cnt"))).as(s"$tag$i")
-    }
-    val cs = contribs("hlo", "l") ++ contribs("hhi", "u")
-    def word(tag: String) = (0 until 32)
-      .map(i => when(col(s"$tag$i") > 0, shiftleft(lit(1L), i)).otherwise(lit(0L)))
-      .reduce((a, b) => a.bitwiseOR(b))
-    counts.groupBy("id").agg(cs.head, cs.tail: _*)
-      .select(col("id"), word("l").as("sim_lo"), word("u").as("sim_hi"))
-  }
-
-  /** Pair step for [[simhashPortable]] signatures: 16-bit-chunk blocking
-    * over the 4 chunks of (sim_lo, sim_hi) — any pair within Hamming
-    * distance 3 of 64 bits shares ≥1 of the 4 chunks (pigeonhole) —
-    * then the exact bit_count(xor) distance check. Output
-    * (id1, id2, hamming), same contract as [[simhashPairs]].
-    */
-  def simhashPairsPortable(sigs: DataFrame, maxDist: Int = 3): DataFrame = {
-    val chunks = array(
-      struct(lit(0).as("chunk"), col("sim_lo").bitwiseAND(lit(0xffffL)).as("ch")),
-      struct(lit(1).as("chunk"), shiftright(col("sim_lo"), 16).bitwiseAND(lit(0xffffL)).as("ch")),
-      struct(lit(2).as("chunk"), col("sim_hi").bitwiseAND(lit(0xffffL)).as("ch")),
-      struct(lit(3).as("chunk"), shiftright(col("sim_hi"), 16).bitwiseAND(lit(0xffffL)).as("ch")))
-    val b = sigs.select(col("id"), col("sim_lo"), col("sim_hi"), explode(chunks).as("c"))
-      .select(col("id"), col("sim_lo"), col("sim_hi"),
-        col("c.chunk").as("chunk"), col("c.ch").as("ch"))
-    bucketPairs(b, Seq("chunk", "ch"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2"),
-        (bit_count(col("a.sim_lo").bitwiseXOR(col("b.sim_lo"))) +
-          bit_count(col("a.sim_hi").bitwiseXOR(col("b.sim_hi")))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
   }
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxDist, blocked on

@@ -2,89 +2,89 @@ package graft.ops
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.storage.StorageLevel
 
-/** Run-scoped memo for DERIVED DataFrames — the frame-valued sibling of
-  * [[Similarity.topPBasis]]'s `basisCache` (VERDICT r9 #7): several
-  * gated queries re-derive the IDENTICAL expensive substrate from the
-  * same parquet table in one JVM run —
+/** The run-scoped memo: a result DERIVED from a file-backed table is
+  * computed once per run and reused by every query that needs it. It
+  * holds three kinds of value in one map, under one key rule:
   *
-  *   - the cell-routed candidate kernel (`Similarity.cellMatches`):
-  *     q_knn_approx, q_knn_approx_recall, q_pagerank, q_label_prop
-  *     (and q_hard_negatives on its labeled variant),
-  *   - the exact Θ(n²) kNN graph (`Similarity.knnGraph`): q_knn_graph,
-  *     q_knn_approx_recall,
-  *   - the 3-shingle Jaccard≥0.5 near-dup cluster map
-  *     (`QShared.dedupClusters3`): q_dedup_clusters, q_dedup_canonical,
-  *     q_dedup_best.
+  *   - frames ([[cached]]), persisted `MEMORY_AND_DISK` and counted on
+  *     the miss: the cell-routed candidate kernel
+  *     (`Similarity.cellMatches`), the exact kNN graph
+  *     (`Similarity.knnGraph`), the 3-shingle near-dup pairs and
+  *     clusters (`QShared.dedupPairs3`/`dedupClusters3`), …;
+  *   - staged directories ([[cachedPath]]) the file-source streaming
+  *     twins read, written once under [[graft.Scratch]];
+  *   - driver-side values: the PCA eigenbasis of
+  *     `Similarity.topPBasis`.
   *
-  * The memo keys on (session identity, stamped backing files,
-  * canonicalized logical plan, caller tag) and stores the derived frame
-  * `persist(MEMORY_AND_DISK)` — materialized by the first action, free
-  * for every later consumer. The key discipline is `basisCache`'s,
-  * verbatim:
+  * The key is (session identity, stamp of the backing files, canonical
+  * logical plan, tag):
   *
-  *   - each backing file's (mtime, length) rides in the key, so an
-  *     in-place parquet overwrite mid-JVM MISSES instead of serving
+  *   - each backing file's (mtime, length) rides in the [[stamp]], so
+  *     an in-place parquet overwrite mid-JVM MISSES instead of serving
   *     stale rows; unstattable paths stamp as "?";
   *   - the canonical plan string means a filtered/derived view never
   *     aliases its source table;
-  *   - in-memory frames (spec fixtures) have no inputFiles → computed
-  *     fresh every call, no cross-test aliasing;
-  *   - the session identity component keeps a frame from leaking into
-  *     a different SparkSession, where its plan could not execute.
+  *   - the session identity keeps a frame from leaking into a different
+  *     SparkSession, where its plan could not execute;
+  *   - the tag names the derivation and encodes EVERY parameter it
+  *     depends on beyond the input (k, nprobe, thresholds, cell-table
+  *     contents, …): two calls with the same input and tag must be
+  *     interchangeable.
   *
-  * Scale: the memo holds ONE persisted frame per distinct substrate per
-  * run — at 100 TB that is the candidate/edge/cluster table a single
-  * query would materialize anyway, and MEMORY_AND_DISK spills rather
-  * than OOMs. This is a single-JVM device (driver-held map); on a
-  * multi-tenant cluster the same role is played by a materialized
-  * intermediate table.
+  * In-memory inputs (spec fixtures) have no backing files and so no
+  * identity: they bypass the memo and are computed fresh on every call.
+  *
+  * [[clear]] drops every entry of every kind, unpersisting the frames.
+  * The per-session table schemas of [[graft.Tables]] are deliberately
+  * NOT held here: benchmark passes clear the memo at their start, and
+  * re-inferring every table's schema would add one Spark job per table
+  * to each pass; their own stamp check already invalidates them.
+  *
+  * Scale: one value per distinct derivation per run; a frame is the
+  * table a single query would materialize anyway, and MEMORY_AND_DISK
+  * spills rather than OOMs. A single-JVM device: on a multi-tenant
+  * cluster a materialized intermediate table plays this role.
   */
 private[graft] object DfMemo {
 
-  /** One memo slot. The map stores cells, not frames: computeIfAbsent
+  /** One memo slot. The map stores cells, not values: computeIfAbsent
     * only CONSTRUCTS the (cheap, side-effect-free) cell inside the CHM
-    * bin lock; the Spark job that computes + materializes the frame
-    * runs through the cell's `lazy val`, OUTSIDE the map lock. That
-    * makes nested/concurrent cached() calls structurally safe — a
-    * substrate composed inside another substrate's compute resolves its
-    * own (different-key) cell without tripping ConcurrentHashMap's
-    * recursive-update IllegalStateException, and two threads racing the
-    * same key serialize on the cell's lazy-init monitor, not on a map
-    * bin. (Same-key re-entrance — a substrate derived from itself —
-    * would self-deadlock, but is definitionally impossible.)
+    * bin lock; the Spark jobs that compute the value run through the
+    * cell's `lazy val`, OUTSIDE the map lock. That makes nested and
+    * concurrent memo calls structurally safe — a substrate composed
+    * inside another substrate's compute resolves its own (different-key)
+    * cell without tripping ConcurrentHashMap's recursive-update
+    * IllegalStateException, and two threads racing the same key
+    * serialize on the cell's lazy-init monitor, not on a map bin.
+    * (Same-key re-entrance — a substrate derived from itself — would
+    * self-deadlock, but is definitionally impossible.)
     */
-  private final class Cell(compute: () => DataFrame) {
+  private final class Cell(compute: () => Any) {
     @volatile private[DfMemo] var built = false
-    lazy val df: DataFrame = { val d = compute(); built = true; d }
+    lazy val value: Any = { val v = compute(); built = true; v }
   }
 
   private val cache =
     new ConcurrentHashMap[(Int, String, String, String), Cell]()
 
   /** RDD-level pins created while computing AND materializing a
-    * memoized derivation. Two kinds, both load-bearing:
+    * memoized frame. Two kinds, both load-bearing:
     *
     *   - localCheckpoint blocks registered during the compute
     *     (jaccardPairsPrefix's per-document frame under dedupPairs3):
-    *     a lazily-localCheckpointed RDD's blocks are its
-    *     ONLY copy once materialized — an external "release what this
-    *     query pinned" sweep (graft.Bench's per-query cleanup) that
-    *     unpersists them kills every cached frame built on top,
-    *     permanently (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND);
-    *   - the memo frame's OWN cache buffer: Dataset.persist routes
-    *     through CachedRDDBuilder.buildBuffers(), which calls
-    *     RDD.persist on the buffer RDD at FIRST MATERIALIZATION — so
-    *     it DOES appear in `sc.getPersistentRDDs` (review r12: an
-    *     earlier version believed otherwise and only protected the
-    *     checkpoints; the sweep then silently evicted every memo
-    *     buffer after its first consumer, and non-checkpoint-backed
-    *     substrates like cellMatches recomputed per query — correct,
-    *     but the sharing this memo exists for was inert). cached()
-    *     therefore materializes eagerly INSIDE the snapshot window so
-    *     the buffer id lands in the protected delta. */
+    *     once materialized they are the ONLY copy, so an external
+    *     "release what this query pinned" sweep (graft.Bench's
+    *     per-query cleanup) that unpersists them kills every frame
+    *     built on top (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND);
+    *   - the memo frame's OWN cache buffer: Dataset.persist calls
+    *     RDD.persist on the buffer RDD at FIRST MATERIALIZATION, so it
+    *     appears in `sc.getPersistentRDDs` too, and a sweep that
+    *     evicts it makes every later consumer recompute (review r12).
+    *     cached() therefore materializes eagerly INSIDE the snapshot
+    *     window so the buffer id lands in the protected delta. */
   private val protectedIds =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
@@ -109,7 +109,7 @@ private[graft] object DfMemo {
 
   /** Stable stamp of a frame's backing files, or None for in-memory
     * frames (which must never be memoized — no files, no identity). */
-  private[graft] def stampedFiles(df: DataFrame): Option[String] = {
+  private def stampedFiles(df: DataFrame): Option[String] = {
     val files = df.inputFiles
     if (files.isEmpty) None
     else Some(stamp(files.toSeq, df.sparkSession.sparkContext.hadoopConfiguration))
@@ -131,107 +131,87 @@ private[graft] object DfMemo {
       } catch { case _: java.io.IOException => Seq(s"$f@?") }
     }.sorted.mkString("\n")
 
+  /** The memo itself: the value of `compute` for (`input`, `tag`) under
+    * the key rule above, computed on the first call and served to every
+    * later one. `compute` receives whether its value will be KEPT for
+    * the run — false for an in-memory input, which is computed fresh and
+    * never stored, so it must not pin anything. */
+  private[ops] def memo[V](input: DataFrame, tag: String)(compute: Boolean => V): V =
+    stampedFiles(input) match {
+      case None => compute(false)
+      case Some(fs) =>
+        val key = (System.identityHashCode(input.sparkSession), fs,
+          input.queryExecution.analyzed.canonicalized.toString, tag)
+        cache.computeIfAbsent(key, _ => new Cell(() => compute(true)))
+          .value.asInstanceOf[V]
+    }
+
   /** Return the memoized derivation of `input` for `tag`, computing and
-    * persisting it on first use. `tag` must encode EVERY parameter the
-    * derivation depends on beyond `input` itself (k, nprobe, thresholds,
-    * cell-table contents, …) — two calls with the same input and tag
-    * must be semantically interchangeable. */
+    * persisting it on first use. */
   def cached(input: DataFrame, tag: String)(compute: => DataFrame): DataFrame =
-    stampedFiles(input) match {
-      case None => compute
-      case Some(fs) =>
-        val key = (System.identityHashCode(input.sparkSession), fs,
-          input.queryExecution.analyzed.canonicalized.toString, tag)
-        cache.computeIfAbsent(key, { _ =>
-          new Cell(() => {
-            // snapshot the RDD-level pins around compute + FIRST
-            // materialization: checkpoint lineage registers during the
-            // compute, the frame's own cache buffer registers at first
-            // action (see protectedIds) — the count() pulls that
-            // registration inside the window, and costs nothing extra
-            // (the first consumer was about to materialize anyway).
-            // The delta protects EVERYTHING new — deliberately, after
-            // an r14 lesson: a lineage-reachability walk from
-            // df.queryExecution.toRdd cannot see broadcast-side
-            // subtrees (a BroadcastHashJoin's build side executes as
-            // its own RDD DAG, not an RDD dependency), so "unreachable
-            // = dead" released live checkpoint pins and every later
-            // consumer died with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
-            // The dead-intermediate problem (ADVICE r12 / VERDICT r13
-            // #6) is instead solved at the SOURCE: a derivation that
-            // loops releases each superseded round's checkpoint the
-            // moment it has been read (GraphOps' k-core peel), so dead
-            // blocks never reach this window at all. A stale pin here
-            // costs idle storage; a wrongly released one is data loss.
-            val sc = input.sparkSession.sparkContext
-            val before = sc.getPersistentRDDs.keySet
-            val df = compute.persist(StorageLevel.MEMORY_AND_DISK)
-            df.count()
-            sc.getPersistentRDDs.keysIterator
-              .filterNot(before).foreach(protectedIds.add(_))
-            df
-          })
-        }).df
+    memo(input, tag) { kept =>
+      if (!kept) compute
+      else {
+        // snapshot the RDD pins around compute + FIRST materialization:
+        // checkpoint lineage registers during the compute, the frame's
+        // own cache buffer at its first action (see protectedIds), and
+        // the count() pulls that inside the window at no extra cost
+        // (the first consumer was about to materialize anyway). The
+        // delta protects EVERYTHING new: a lineage walk from toRdd
+        // cannot see a BroadcastHashJoin's build side (its own RDD DAG),
+        // so "unreachable = dead" once released live checkpoint pins
+        // (r14). Looping derivations release superseded checkpoints at
+        // the source instead (GraphOps' k-core peel). A stale pin here
+        // costs idle storage; a wrongly released one is data loss.
+        val sc = input.sparkSession.sparkContext
+        val before = sc.getPersistentRDDs.keySet
+        val df = compute.persist(StorageLevel.MEMORY_AND_DISK)
+        df.count()
+        sc.getPersistentRDDs.keysIterator
+          .filterNot(before).foreach(protectedIds.add(_))
+        df
+      }
     }
 
-  /** Run-scoped memo for ON-DISK staging the file-source streaming
-    * twins need (r17 optimization round): each twin stages its input
-    * as a small parquet directory (4 files → 4 AvailableNow
-    * micro-batches) or materializes its model relations before the
-    * stream starts, and without a memo that staging re-ran on EVERY
-    * bench pass — so a "warm" sample measured input copying, not
-    * micro-batch execution. Keys exactly like [[cached]] (session
-    * identity, stamped backing files, canonical plan, tag), so a
-    * mid-JVM overwrite of the source parquet re-stages instead of
-    * serving stale files, and in-memory frames (spec fixtures) bypass
-    * the memo entirely — tests always stage fresh. The staged
-    * directory lives under [[graft.Scratch]] (per-JVM, deleted at
-    * exit): nothing persists across runs.
-    */
-  private val pathCache =
-    new ConcurrentHashMap[(Int, String, String, String), String]()
-
+  /** Run-scoped ON-DISK staging for the file-source streaming twins
+    * (r17 optimization round): each twin stages its input as a small
+    * parquet directory (4 files → 4 AvailableNow micro-batches) or
+    * materializes its model relations before the stream starts, and
+    * without the memo that staging re-ran on EVERY bench pass — so a
+    * "warm" sample measured input copying, not micro-batch execution.
+    * `write` fills a fresh [[graft.Scratch]] directory (per-JVM,
+    * deleted at exit): nothing persists across runs. */
   def cachedPath(input: DataFrame, tag: String)(write: String => Unit): String =
-    stampedFiles(input) match {
-      case None =>
-        val d = graft.Scratch.dir(tag)
-        write(d); d
-      case Some(fs) =>
-        val key = (System.identityHashCode(input.sparkSession), fs,
-          input.queryExecution.analyzed.canonicalized.toString, tag)
-        pathCache.computeIfAbsent(key, { _ =>
-          val d = graft.Scratch.dir(tag)
-          write(d); d
-        })
+    memo(input, tag) { _ =>
+      val d = graft.Scratch.dir(tag)
+      write(d); d
     }
 
-  /** Test/maintenance hook: unpersist and drop every memoized frame
-    * (e.g. after overwriting a parquet table in place mid-JVM). */
+  /** Test/maintenance hook: drop every memo entry, unpersisting the
+    * frames (e.g. after overwriting a parquet table in place mid-JVM). */
   private[graft] def clear(): Unit = {
     import scala.jdk.CollectionConverters._
+    // only MATERIALIZED cells — forcing a pending lazy val here would
+    // run its whole Spark job just to drop the result
+    val frames = cache.values.asScala.filter(_.built).map(_.value)
+      .collect { case d: Dataset[_] => d }
     // release the TRACKED pins too, not just the memo frames: the
     // protected delta also holds checkpoint-lineage RDDs (the pair kernels'
     // localCheckpoint blocks) that nothing else will ever unpersist —
     // clearing only the id SET would orphan them as permanently cached
     // dead blocks for the JVM lifetime (review r13)
     val ids = protectedIds.asScala.toSet
-    cache.values.asScala.filter(_.built)
-      .map(_.df.sparkSession.sparkContext).toSet[org.apache.spark.SparkContext]
+    frames.map(_.sparkSession.sparkContext).toSet[org.apache.spark.SparkContext]
       .foreach { sc =>
         try sc.getPersistentRDDs.foreach { case (id, rdd) =>
           if (ids(id)) rdd.unpersist(blocking = false)
         } catch { case _: IllegalStateException => () /* context stopped */ }
       }
-    cache.values.forEach { cell =>
-      // only touch MATERIALIZED cells — forcing a pending lazy val here
-      // would run its whole Spark job just to unpersist the result
-      if (cell.built) {
-        try cell.df.unpersist()
-        catch { case _: IllegalStateException => () /* session stopped */ }
-      }
+    frames.foreach { d =>
+      try d.unpersist()
+      catch { case _: IllegalStateException => () /* session stopped */ }
     }
     cache.clear()
-    pathCache.clear()
     protectedIds.clear()
   }
 

@@ -378,9 +378,9 @@ object Similarity {
   def knnGraph(
       emb: DataFrame, idCol: String, vecCol: String, k: Int,
       scale: Int = 4, blocks: Int = 8): DataFrame =
-    // run-scoped memo (the basisCache device, frame-valued): the exact
-    // graph is the recall baseline q_knn_approx_recall re-derives after
-    // q_knn_graph already built it — one Θ(n²) kernel per run, not two
+    // run-scoped memo: the exact graph is the recall baseline
+    // q_knn_approx_recall re-derives after q_knn_graph already built
+    // it — one Θ(n²) kernel per run, not two
     DfMemo.cached(emb, s"knnGraph:$idCol:$vecCol:$k:$scale:$blocks") {
       // per-id BOUNDED top-k inside each block-pair task (r17, guide
       // §2.3 "aggregate before you shuffle"): the old form emitted ALL
@@ -480,8 +480,8 @@ object Similarity {
     require(cells.map(_._1).toSeq == cells.map(_._1).sorted.toSeq,
       "cells must be sorted by id (positional ties = id ties)")
     require(nprobe >= 1 && nprobe <= cells.length)
-    // run-scoped memo (the basisCache device, frame-valued): five gated
-    // queries route the same corpus against the same cell table —
+    // run-scoped memo: five gated queries route the same corpus
+    // against the same cell table —
     // q_knn_approx/q_knn_approx_recall/q_pagerank/q_label_prop share the
     // unlabeled kernel, q_hard_negatives its labeled derivation. The
     // full cell-table CONTENT rides in the tag: two different centroid
@@ -491,12 +491,6 @@ object Similarity {
     // C=1000, d=64 — microseconds, never shipped to executors).
     val cellTag = cells.map { case (c, v) => s"$c=${v.mkString(",")}" }
       .mkString(";")
-    // the memo holds the CANONICAL half (a < b, one row per unordered
-    // edge) and the mirror is an explode over the cached frame (r17):
-    // caching the mirrored set materialized 2× the rows into the
-    // in-memory relation for data the mirror derives in one map-side
-    // generator — half the cache build, half the cache footprint, and
-    // every consumer still reads the identical symmetric edge list
     // the memo holds the MIRRORED edge list (the r16 read contract —
     // consumers window/group it directly, so a post-memo explode
     // taxed every consumer ~0.3 s/action when tried); the build-side
@@ -535,24 +529,8 @@ object Similarity {
   private def cellMatchesCompute(
       emb: DataFrame, idCol: String, vecCol: String,
       cells: Array[(Long, Array[Double])], nprobe: Int, scale: Int): DataFrame = {
-    // zero-norm rows are excluded from routing entirely (ADVICE r10):
-    // withUnitVec would pass the zero vector through and Spark scores
-    // cos = 0 where the SQL mirror computes dp/(0·nrm) = NULL — a
-    // latent parity split. The oracles carry the matching WHERE nrm > 0.
-    val pts = emb.select(
-        col(idCol).as("id"), KMeansOps.asDouble(col(vecCol)).as("v"))
-      .filter(l2norm(col("v")) > 0)
-    // same euclid arithmetic as KMeansOps.assign/ivfTopK routing — the
-    // oracle-proven distance form; struct sort = ORDER BY dist, cid
-    val cellDists = array(cells.map { case (cid, cv) =>
-      struct(KMeansOps.euclid(col("v"), typedlit(cv.toSeq)).as("d"),
-        lit(cid).as("c"))
-    }: _*)
     val routed = withUnitVec(
-      pts.withColumn("pc",
-        transform(slice(sort_array(cellDists), 1, nprobe),
-          p => p.getField("c"))),
-      "v", "u")
+      routeToCells(emb, vecCol, cells, nprobe, col(idCol).as("id")), "v", "u")
     val home = routed.select(col("id").as("nbr"),
       element_at(col("pc"), 1).as("cell"), col("u").as("cu"),
       col("pc").as("npc"))
@@ -573,7 +551,7 @@ object Similarity {
     // (nprobe-element array_contains), no exchange, no aggregate.
     // cos is direction-independent bitwise (same index order,
     // commutative multiply). The mirror back to both directions is
-    // the caller's post-memo explode.
+    // the caller's explode, before the memo persists the frame.
     probes.join(home, Seq("cell"))
       .filter(col("qid") =!= col("nbr"))
       .filter(col("qid") < col("nbr") ||
@@ -593,6 +571,29 @@ object Similarity {
       .repartition(col("a"), col("b"))
   }
 
+  /** The nprobe cell routing of [[cellMatches]] and [[cellLoad]]:
+    * `carry` columns plus the vector as double `v` and `pc`, the ids of
+    * its `nprobe` nearest cells, nearest first. Zero-norm rows are
+    * excluded from routing entirely (ADVICE r10): withUnitVec would
+    * pass the zero vector through and Spark scores cos = 0 where the
+    * SQL mirror computes dp/(0·nrm) = NULL — a latent parity split. The
+    * oracles carry the matching WHERE nrm > 0. Same euclid arithmetic
+    * as KMeansOps.assign/ivfTopK routing — the oracle-proven distance
+    * form; struct sort = ORDER BY dist, cid.
+    */
+  private def routeToCells(
+      emb: DataFrame, vecCol: String, cells: Array[(Long, Array[Double])],
+      nprobe: Int, carry: Column*): DataFrame = {
+    val cellDists = array(cells.map { case (cid, cv) =>
+      struct(KMeansOps.euclid(col("v"), typedlit(cv.toSeq)).as("d"),
+        lit(cid).as("c"))
+    }: _*)
+    emb.select(carry :+ KMeansOps.asDouble(col(vecCol)).as("v"): _*)
+      .filter(l2norm(col("v")) > 0)
+      .withColumn("pc",
+        transform(slice(sort_array(cellDists), 1, nprobe), p => p.getField("c")))
+  }
+
   /** Per-cell ROUTING LOAD of the [[knnSelfJoin]]/[[hardNegatives]]
     * candidate kernel — the skew report that prices the router before
     * a 100 TB run: `n_home` = vectors homed in the cell, `n_probe` =
@@ -603,27 +604,18 @@ object Similarity {
     * with share ≫ 1/C is the hot bucket the scaladocs keep pointing
     * at — raise C or pre-split BEFORE the join, not after it OOMs.
     *
-    * Same routing arithmetic as [[knnSelfJoin]] (raw euclid struct
-    * sort, zero-norm rows excluded): the report describes the join
-    * that actually runs. Scale: one map-side routing projection, one
-    * C-row groupBy — the report costs one narrow shuffle at any
-    * corpus size; the driver fill of never-probed cells is C rows
-    * (k-row-scalar family).
+    * Same routing as [[knnSelfJoin]] (one [[routeToCells]] helper, so
+    * the report describes the join that actually runs). Scale: one
+    * map-side routing projection, one C-row groupBy — the report costs
+    * one narrow shuffle at any corpus size; the driver fill of
+    * never-probed cells is C rows (k-row-scalar family).
     */
   def cellLoad(
       emb: DataFrame, vecCol: String,
       cells: Array[(Long, Array[Double])], nprobe: Int): DataFrame = {
     require(cells.nonEmpty && nprobe >= 1 && nprobe <= cells.length)
     val spark = emb.sparkSession
-    val pts = emb.select(KMeansOps.asDouble(col(vecCol)).as("v"))
-      .filter(l2norm(col("v")) > 0)
-    val cellDists = array(cells.map { case (cid, cv) =>
-      struct(KMeansOps.euclid(col("v"), typedlit(cv.toSeq)).as("d"),
-        lit(cid).as("c"))
-    }: _*)
-    val probed = pts
-      .withColumn("pc",
-        transform(slice(sort_array(cellDists), 1, nprobe), p => p.getField("c")))
+    val probed = routeToCells(emb, vecCol, cells, nprobe)
       .select(posexplode(col("pc")).as(Seq("pos", "cell")))
     val got = probed.groupBy("cell")
       .agg(sum(when(col("pos") === 0, 1L).otherwise(0L)).as("n_home"),
@@ -674,7 +666,7 @@ object Similarity {
     * retrieval tier: word `w` packs dims 32w..32w+31 as bits
     * (bit i = 1 iff x > 0, strictly — zeros quantize to 0 on any
     * engine), 32-bit words so every value stays positive in a signed
-    * 64-bit lane (the [[graft.ops.Dedup.simhashPortable]] device —
+    * 64-bit lane (the q_simhash_md5 oracle's device —
     * DuckDB rebuilds words with `1::BIGINT << (i % 32)` sums and
     * compares bit_count(xor) exactly). d=4096 compresses 128× to 128
     * words. One map-side projection of ⌈d/32⌉ fused 32-term bit-OR
@@ -1274,32 +1266,12 @@ object Similarity {
       pinU: Boolean = true):
       (Int, Map[Int, Double], Seq[(Double, Array[Double])]) = {
     require(p >= 1, "need at least one component")
-    // Run-scoped memo (VERDICT r9 #7): q_pca_top2/q_whiten/q_mahalanobis
+    // run-scoped memo (VERDICT r9 #7): q_pca_top2/q_whiten/q_mahalanobis
     // each re-derive the identical (d, μ, basis) from the same table —
-    // two corpus aggregations apiece. Key = backing files + canonical
-    // plan string, so a filtered/derived view never aliases its source
-    // and a re-read of the same parquet HITS. In-memory frames (specs)
-    // have no inputFiles → computed fresh, no cross-test aliasing.
-    // each file's (mtime, length) rides in the key (ADVICE r10): an
-    // in-place parquet overwrite that reuses paths mid-JVM then
-    // MISSES instead of serving the stale basis. Unstattable paths
-    // key as "?" — a refresh that changes nothing observable keys
-    // identically, which is the best any cache can promise. The
-    // stamping device is shared with the frame-valued [[DfMemo]].
-    DfMemo.stampedFiles(emb) match {
-      case None => computeTopPBasis(emb, vecCol, p, iters, pinU)
-      case Some(stamped) =>
-        val key = (stamped,
-          emb.queryExecution.analyzed.canonicalized.toString,
-          vecCol, p, iters, pinU)
-        basisCache.computeIfAbsent(key,
-          _ => computeTopPBasis(emb, vecCol, p, iters, pinU))
-    }
+    // two corpus aggregations apiece
+    DfMemo.memo(emb, s"topPBasis:$vecCol:$p:$iters:$pinU")(
+      _ => computeTopPBasis(emb, vecCol, p, iters, pinU))
   }
-
-  private val basisCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, Int, Int, Boolean),
-    (Int, Map[Int, Double], Seq[(Double, Array[Double])])]()
 
   private def computeTopPBasis(
       emb: DataFrame, vecCol: String, p: Int, iters: Int, pinU: Boolean):

@@ -1075,7 +1075,7 @@ private[graft] object QDedup2 {
       // LSH witness: md5 costs ~10× the engine hash BY DESIGN and witness
       // value doesn't grow with corpus size — q_simhash_pairs is the scale
       // twin (recall-tied in InvariantSweepSpec).
-      (s, dir) => Dedup.simhashPairsPortable(
+      (s, dir) => Dedup.simhashPairs(
           Dedup.simhashPortable(
             docsTokens(s, dir).filter(col("doc_id") < 500), "doc_id", "toks"),
           maxDist = 3)

@@ -280,7 +280,7 @@ private[graft] object QEmbed {
       // production d): bit i of word w = 1 iff dim 32w+i is strictly
       // positive. 32-bit words keep every value positive in a signed
       // BIGINT lane so DuckDB rebuilds them with shift sums bit-for-bit
-      // (the simhashPortable device). One map-side projection of fused
+      // (the q_simhash_md5 oracle's device). One map-side projection of fused
       // bit-OR expressions, zero shuffle. Gated in LONG form (id, w,
       // word) — value hashes can't compare array cells.
       (s, dir) => Similarity.signBits(

@@ -923,7 +923,7 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs(Dedup.simhashPairs(
       Dedup.simhash64(fix, "doc_id", "toks"))) == expected,
       "xxhash64 simhash pair set")
-    assert(pairs(Dedup.simhashPairsPortable(
+    assert(pairs(Dedup.simhashPairs(
       Dedup.simhashPortable(fix, "doc_id", "toks"))) == expected,
       "md5 simhash pair set")
   }

@@ -5,10 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{DfMemo, Similarity}
 
-/** Behavior of the run-scoped derived-frame memo (round 12): the
-  * frame-valued sibling of the PCA basisCache. The contract under test
-  * is the cache-key discipline — file-backed inputs memoize, in-memory
-  * fixtures never do, and distinct tags/plans never alias.
+/** Behavior of the run-scoped memo (round 12): one map holds the
+  * derived frames, the staged paths and the PCA basis. The contract
+  * under test is the cache-key discipline — file-backed inputs memoize,
+  * in-memory fixtures never do, distinct tags/plans never alias — and
+  * that clear() drops every kind of entry.
   */
 class DfMemoSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -77,6 +78,35 @@ class DfMemoSpec extends AnyFunSuite {
     DfMemo.clear()
     val p4 = stage()
     assert(writes == 2 && p4 != p1, "clear() must force a re-stage")
+    DfMemo.clear()
+  }
+
+  test("clear() drops the PCA basis: the next topPBasis call recomputes, a repeat hits") {
+    Similarity.topPBasis(emb, "embedding", p = 2, iters = 3)
+    DfMemo.clear()
+    val (cold, coldJobs) = TestSpark.countJobs(
+      Similarity.topPBasis(emb, "embedding", p = 2, iters = 3))
+    assert(coldJobs > 0, "after clear() the basis must be rebuilt")
+    assert(DfMemo.size == 1, "the basis is an entry of the one memo map")
+    val (warm, warmJobs) = TestSpark.countJobs(
+      Similarity.topPBasis(emb, "embedding", p = 2, iters = 3))
+    assert(warmJobs == 0, s"a repeat call ran $warmJobs jobs")
+    assert(warm eq cold)
+    DfMemo.clear()
+  }
+
+  test("each substrate's listed consumer hits its pre-build: no new memo entry") {
+    // Substrates.all repeats each consumer's parameters; a drift between
+    // the two would make the consumer build a second entry
+    DfMemo.clear()
+    Substrates.all.foreach { case (_, build) => build(spark, TestSpark.Sf).count() }
+    val n = DfMemo.size
+    Seq("q_minhash_pairs", "q_edit_pairs", "q_dedup_clusters", "q_knn_graph",
+        "q_knn_approx", "q_hard_negatives", "q_bpe_learn", "q_lang_clf",
+        "q_unigram_learn", "q_pca_top2").foreach { q =>
+      SparkEntry.queries(q)(spark, TestSpark.Sf).count()
+      assert(DfMemo.size == n, s"$q added a memo entry")
+    }
     DfMemo.clear()
   }
 

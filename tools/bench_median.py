@@ -36,8 +36,7 @@ def main(paths):
     if len(set(shas.values())) > 1:
         problems.append("cross-SHA inputs: %s" % json.dumps(shas))
     dirty = [p for p, s in shas.items()
-             if s.endswith("-dirty") or s.endswith("-unverified")
-             or s == "unknown"]
+             if s.endswith("-dirty") or s == "unknown"]
     if dirty:
         problems.append("dirty/unstamped inputs: %s" % ", ".join(dirty))
     if problems and not allow_mixed:
