@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.ops._
 
@@ -44,25 +45,48 @@ private[graft] object QShared {
       .select(col("word"), col("df"), col("idf"))
   }
 
-
-
-  /** Run-scoped staged 4-file parquet copy of `documents` — the file
-    * source behind the multi-micro-batch streaming twins
-    * (q_stream_wsample, q_stream_countmin, q_stream_lang_clf): each
-    * needs the corpus as exactly 4 files so maxFilesPerTrigger=1
-    * yields 4 real micro-batches. The copy is IDENTICAL for all three
-    * (same repartition(4) of the same table), so one staging write
-    * serves every consumer and every bench pass; per-query state/
-    * checkpoint/output dirs stay per-invocation — only the immutable
-    * source files are shared ([[ops.DfMemo.cachedPath]] semantics:
-    * keyed on the stamped backing files, per-JVM Scratch lifetime).
+  /** A `readStream` over table `table`'s files, read with the schema
+    * [[Tables.table]] already resolved — the file source of every
+    * streaming twin. FileStreamSource lists a DIRECTORY, so with
+    * `files = 1` a single-file table is byte-copied into one and a
+    * directory table is read in place; with `files > 1` the table is
+    * rewritten as `repartition(files)` and read with
+    * maxFilesPerTrigger=1, so the stream runs `files` real
+    * micro-batches. A staged copy is written once per run
+    * ([[ops.DfMemo.cachedPath]]: keyed on the table's file stamp, so a
+    * table rewritten in place is staged again) and shared by every twin
+    * and every bench pass. Only the immutable source is shared: sinks,
+    * state and checkpoints stay per invocation ([[runToEnd]]).
     */
-  private[graft] def streamDocSrc4(s: SparkSession, dir: String): String = {
-    val docs = Tables.table(s, dir, "documents")
-    DfMemo.cachedPath(docs, "stream-doc-src4") { d =>
-      docs.repartition(4).write.mode("overwrite").parquet(d)
-    }
+  private[graft] def tableStream(
+      s: SparkSession, dir: String, table: String, files: Int = 1): DataFrame = {
+    val t = Tables.table(s, dir, table)
+    val src = new java.io.File(s"$dir/$table.parquet")
+    val srcDir =
+      if (files == 1 && src.isDirectory) src.toString
+      else DfMemo.cachedPath(t, s"stream-src-$files") { d =>
+        if (files == 1)
+          java.nio.file.Files.copy(src.toPath,
+            new java.io.File(d, src.getName).toPath): Unit
+        else t.repartition(files).write.mode("overwrite").parquet(d)
+      }
+    val r = s.readStream.schema(t.schema)
+    (if (files == 1) r else r.option("maxFilesPerTrigger", 1L)).parquet(srcDir)
   }
+
+  /** Runs a streaming write to the end of its source: a fresh
+    * [[Scratch]] checkpoint dir and the AvailableNow trigger, started
+    * and awaited. The checkpoint is per invocation on purpose: a fresh
+    * one makes each pass reprocess the whole source, so every run
+    * exercises the full protocol under test (state, sink commits,
+    * watermark and timeout semantics) — a reused checkpoint would see
+    * no new files and run nothing.
+    */
+  private[graft] def runToEnd[T](writer: DataStreamWriter[T]): Unit =
+    writer.option("checkpointLocation", Scratch.dir("stream-cp"))
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
 
   /** The per-doc distinct word-3-shingle hash ARRAY (id, hs) —
     * run-scoped [[ops.DfMemo]] memo (r18 optimization round, guide

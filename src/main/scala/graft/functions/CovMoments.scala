@@ -3,20 +3,18 @@ package graft.functions
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Single-pass covariance moment accumulator — the LARGE-d route of
+/** Single-pass covariance moment accumulator behind
   * [[graft.ops.Similarity.embedCovariance]].
   *
-  * The small-d form expands every input row map-side into a
-  * (d²+d)-element array before aggregating; per-ROW memory is O(d²),
-  * which is fine at d=64 (4 160 doubles) and fatal at production
-  * embedding widths (d=4096 → 16.8M doubles per row). This Aggregator
-  * keeps O(d²) memory per PARTITION instead: one flat buffer of
-  * d(d+1)/2 upper-triangle product sums + d coordinate sums + a count,
-  * accumulated with tight primitive loops (no per-row allocation, no
-  * explode). Partial aggregation reduces each partition to ONE buffer
-  * row before the exchange, so shuffle volume is
-  * partitions × (d(d+1)/2 + d + 1) doubles — half the explode path's,
-  * since symmetry is exploited.
+  * Expanding every input row map-side into its d² outer-product cells
+  * costs O(d²) memory per ROW: fine at d=64 (4 160 doubles), fatal at
+  * production embedding widths (d=4096 → 16.8M doubles per row). This
+  * Aggregator keeps O(d²) memory per PARTITION instead: one flat buffer
+  * of d(d+1)/2 upper-triangle product sums + d coordinate sums + a
+  * count, accumulated with tight primitive loops (no per-row
+  * allocation, no explode). Partial aggregation reduces each partition
+  * to ONE buffer row before the exchange, so shuffle volume is
+  * partitions × (d(d+1)/2 + d + 1) doubles, symmetry exploited.
   *
   * Buffer layout (flat `Array[Double]`, row-major upper triangle):
   * `[0, tri)` = Σ xᵢxⱼ for i ≤ j at `i·d − i(i−1)/2 + (j − i)`;

@@ -14,8 +14,10 @@ import org.apache.spark.storage.StorageLevel
   *     (`Similarity.cellMatches`), the exact kNN graph
   *     (`Similarity.knnGraph`), the 3-shingle near-dup pairs and
   *     clusters (`QShared.dedupPairs3`/`dedupClusters3`), …;
-  *   - staged directories ([[cachedPath]]) the file-source streaming
-  *     twins read, written once under [[graft.Scratch]];
+  *   - staged directories ([[cachedPath]]), written once under
+  *     [[graft.Scratch]]: the stream sources of `QShared.tableStream`
+  *     (a single-file table's byte copy, a table's `repartition(4)`
+  *     copy) and q_stream_lang_clf's model relations;
   *   - driver-side values: the PCA eigenbasis of
   *     `Similarity.topPBasis`.
   *
@@ -173,14 +175,13 @@ private[graft] object DfMemo {
       }
     }
 
-  /** Run-scoped ON-DISK staging for the file-source streaming twins
-    * (r17 optimization round): each twin stages its input as a small
-    * parquet directory (4 files → 4 AvailableNow micro-batches) or
-    * materializes its model relations before the stream starts, and
-    * without the memo that staging re-ran on EVERY bench pass — so a
-    * "warm" sample measured input copying, not micro-batch execution.
-    * `write` fills a fresh [[graft.Scratch]] directory (per-JVM,
-    * deleted at exit): nothing persists across runs. */
+  /** Run-scoped ON-DISK staging for the file-source streaming twins:
+    * a twin's source directory (`QShared.tableStream`) or model
+    * relations are written before the stream starts, and without the
+    * memo that staging re-ran on EVERY bench pass — so a "warm" sample
+    * measured input copying, not micro-batch execution. `write` fills
+    * a fresh [[graft.Scratch]] directory (per-JVM, deleted at exit):
+    * nothing persists across runs. */
   def cachedPath(input: DataFrame, tag: String)(write: String => Unit): String =
     memo(input, tag) { _ =>
       val d = graft.Scratch.dir(tag)

@@ -16,6 +16,18 @@ import org.apache.spark.sql.types.LongType
   */
 object IdOps {
 
+  /** The keyed hash `md5(salt || "_" || key)` behind every engine-
+    * portable sample and shuffle here: a pure function of the key, so
+    * any engine (the DuckDB oracles included) reproduces it. */
+  private def keyedHash(keyCol: String, salt: String): Column =
+    md5(concat_ws("_", lit(salt), col(keyCol).cast("string")))
+
+  /** The keep predicate of the rate samplers: the first two hex digits
+    * of [[keyedHash]] sort below the 2-digit threshold `thr` ("zz"
+    * keeps every row). */
+  private def hashKeep(keyCol: String, salt: String, thr: Column): Column =
+    substring(keyedHash(keyCol, salt), 1, 2) < thr
+
   /** 1..N dense ids in `orderCols` order — the reference semantics —
     * without the reference's single-reducer stage (a global window
     * would funnel the table through one task): range-repartition +
@@ -79,7 +91,7 @@ object IdOps {
       df: DataFrame, keyCol: String, k: Int, salt: String = "",
       indexCol: String = "idx"): DataFrame = {
     val w = Window.orderBy(col("__h"), col(keyCol))
-    df.withColumn("__h", md5(concat_ws("_", lit(salt), col(keyCol).cast("string"))))
+    df.withColumn("__h", keyedHash(keyCol, salt))
       .orderBy(col("__h"), col(keyCol)).limit(k)
       .withColumn(indexCol, row_number().over(w) - lit(1))
       .drop("__h")
@@ -134,8 +146,7 @@ object IdOps {
   def esKeyed(
       df: DataFrame, keyCol: String, weightCol: String,
       salt: String = ""): DataFrame = {
-    val u = (conv(substring(md5(concat_ws("_", lit(salt),
-        col(keyCol).cast("string"))), 1, 8), 16, 10).cast("long")
+    val u = (conv(substring(keyedHash(keyCol, salt), 1, 8), 16, 10).cast("long")
         + lit(0.5)) / lit(4294967296.0)
     df.filter(col(weightCol) > 0)
       .withColumn("es_key",
@@ -158,7 +169,7 @@ object IdOps {
   def shuffleDeterministic(
       df: DataFrame, keyCol: String, salt: String = "", posCol: String = "pos"): DataFrame =
     sequentialIdsAtScale(
-      df.withColumn("__h", md5(concat_ws("_", lit(salt), col(keyCol).cast("string")))),
+      df.withColumn("__h", keyedHash(keyCol, salt)),
       Seq("__h", keyCol), posCol)
       .drop("__h")
 
@@ -184,8 +195,7 @@ object IdOps {
     val thr = rates.foldLeft(hex(defaultRate)) { case (acc, (k, r)) =>
       when(col(stratumCol) === k, hex(r)).otherwise(acc)
     }
-    df.filter(
-      substring(md5(concat_ws("_", lit(salt), col(keyCol).cast("string"))), 1, 2) < thr)
+    df.filter(hashKeep(keyCol, salt, thr))
   }
 
   /** Temperature-based mixture resampling (the domain-rebalancing step
@@ -221,8 +231,7 @@ object IdOps {
             floor(col("__rate") * 256 + lit(1e-9)).cast("int"))))
       .select(col(stratumCol), col("__thr"))
     df.join(broadcast(rates), Seq(stratumCol))
-      .filter(substring(
-        md5(concat_ws("_", lit(salt), col(keyCol).cast("string"))), 1, 2) < col("__thr"))
+      .filter(hashKeep(keyCol, salt, col("__thr")))
       .drop("__thr")
   }
 
@@ -288,8 +297,7 @@ object IdOps {
           .otherwise(format_string("%02x", bumped.cast("int"))))
       .select(col(stratumCol), col("__thr"))
     df.join(broadcast(rates), Seq(stratumCol))
-      .filter(substring(
-        md5(concat_ws("_", lit(salt), col(keyCol).cast("string"))), 1, 2) < col("__thr"))
+      .filter(hashKeep(keyCol, salt, col("__thr")))
       .drop("__thr")
   }
 }

@@ -1027,86 +1027,34 @@ object Similarity {
     * screens, and embedding-drift monitoring. cov(i,j) =
     * E[xᵢxⱼ] − E[xᵢ]E[xⱼ] over all rows.
     *
-    * Scale — two routes behind a d-threshold (default 8, lowered from
-    * 128 in r17: the explode route's nested `transform` lambdas are
-    * INTERPRETED HOFs, so at the corpus's d=64 every row paid d²+d
-    * per-element interpreter dispatches plus a (d²+d)·n-row explode
-    * before the partial agg — measured 2.2 s warm vs 0.4 s on the
-    * moments route at sf0.1, same 6-dp cells, parity-tested in
-    * SimilaritySpec):
+    * Scale: a typed [[graft.functions.CovMoments]] Aggregator
+    * accumulates one flat upper-triangle buffer per partition (tight
+    * primitive loops, zero per-row allocation); per-row memory is
+    * O(d), per-partition O(d²), and shuffle volume is partitions ×
+    * (d(d+1)/2 + d + 1), independent of the corpus size. The collected
+    * buffer (one row, same k-row-scalar family as the PCA collect that
+    * consumes this matrix) is re-broadcast and the (i,j,cov) grid is
+    * emitted by a map over `spark.range(d²)` — no corpus re-read.
     *
-    * SMALL d (d ≤ `largeDThreshold`): each row expands MAP-SIDE to one
-    * (d²+d)-element array — its outer products followed by the vector
-    * itself (`flatten(transform × transform)`, no self-join)
-    * — and a single posexplode + groupBy(idx) folds the whole corpus
-    * into d²+d sum cells; map-side partial aggregation reduces every
-    * input partition to ≤ d²+d rows BEFORE the exchange, so shuffle
-    * volume is partitions × (d²+d) regardless of corpus size. The
-    * d-row mean table then broadcast-joins back twice to center the
-    * raw moments. Everything stays whole-plan distributed — the route
-    * for tiny d where a typed-aggregator buffer is overkill.
-    *
-    * LARGE d (d > `largeDThreshold`): a typed
-    * [[graft.functions.CovMoments]] Aggregator accumulates one flat
-    * upper-triangle buffer per partition (tight primitive loops, zero
-    * per-row allocation); per-row memory is O(d), per-partition O(d²),
-    * and shuffle volume is partitions × (d(d+1)/2 + d + 1) — half the
-    * explode path's, via symmetry. The collected buffer (one row,
-    * same k-row-scalar family as the PCA collect that consumes this
-    * matrix) is re-broadcast and the (i,j,cov) grid is emitted by a
-    * map over `spark.range(d²)` — no corpus re-read.
-    *
-    * Both routes round to `scale` then `+0.0` (signed-zero canon), so
-    * they agree cell-for-cell at the oracle precision. The dimension
-    * probe is a min/max-size aggregate so ragged input fails fast on
-    * BOTH routes (a 1-row peek chose the route nondeterministically).
+    * Cells round to `scale` then `+0.0` (signed-zero canon). The
+    * dimension probe is a min/max-size aggregate, so ragged input fails
+    * fast; an input with no non-empty vector yields an empty frame.
     */
-  def embedCovariance(emb: DataFrame, vecCol: String, scale: Int = 6,
-      largeDThreshold: Int = 8): DataFrame = {
+  def embedCovariance(emb: DataFrame, vecCol: String, scale: Int = 6): DataFrame = {
+    val spark = emb.sparkSession
+    import spark.implicits._
     val v = emb.select(KMeansOps.asDouble(col(vecCol)).as("v"))
       .filter(size(col("v")) > 0)
-    // uniform-dimension probe (ADVICE r9): a one-row peek routes
-    // nondeterministically on ragged input and the two routes disagree
-    // in failure mode — a min/max aggregate fails fast on both
     val probe = v.agg(min(size(col("v"))).as("dmin"),
       max(size(col("v"))).as("dmax")).collect()(0)
-    val d = if (probe.isNullAt(0)) 0 else probe.getInt(0)
-    require(probe.isNullAt(1) || probe.getInt(1) == d,
+    if (probe.isNullAt(0)) return Seq.empty[(Int, Int, Double)].toDF("i", "j", "cov")
+    val d = probe.getInt(0)
+    require(probe.getInt(1) == d,
       s"embedCovariance: ragged vector lengths ($d..${probe.getInt(1)})")
-    if (d > largeDThreshold) return covByMoments(v, d, scale)
-    val sums = v.select(posexplode(concat(
-        flatten(transform(col("v"), x => transform(col("v"), y => x * y))),
-        col("v"))).as(Seq("idx", "x")))
-      .groupBy(col("idx")).agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-    val mu = sums.filter(col("idx") >= d * d)
-      .select((col("idx") - d * d).cast("int").as("i"), (col("s") / col("n")).as("mu"))
-    sums.filter(col("idx") < d * d)
-      .select((col("idx") / d).cast("int").as("i"),
-        pmod(col("idx"), lit(d)).cast("int").as("j"), col("s"), col("n"))
-      .join(broadcast(mu.select(col("i"), col("mu").as("mui"))), Seq("i"))
-      .join(broadcast(mu.select(col("i").as("j"), col("mu").as("muj"))), Seq("j"))
-      .select(col("i"), col("j"),
-        // + 0.0 canonicalizes IEEE signed zero: round(-1e-9, 6) is -0.0,
-        // and the driver's value hash distinguishes ±0.0 (r8 red row)
-        (round(col("s") / col("n") - col("mui") * col("muj"), scale) +
-          lit(0.0)).as("cov"))
-  }
-
-  /** Large-d covariance route (see [[embedCovariance]]): single-pass
-    * [[graft.functions.CovMoments]] fold → one buffer row collected →
-    * (i,j,cov) grid emitted distributedly from `range(d²)` against the
-    * re-broadcast buffer. Rounding applied as a Column op so both
-    * routes share the exact round/±0.0 semantics.
-    */
-  private def covByMoments(v: DataFrame, d: Int, scale: Int): DataFrame = {
-    val spark = v.sparkSession
-    import spark.implicits._
-    val buf = v.select(col("v")).as[Array[Double]]
+    val buf = v.as[Array[Double]]
       .select(new graft.functions.CovMoments(d).toColumn)
       .collect()(0)
     val tri = d * (d + 1) / 2
-    val n = buf(tri + d)
-    require(n > 0, "empty embedding table")
     val bc = spark.sparkContext.broadcast(buf)
     spark.range(d.toLong * d).map { idx =>
       val b = bc.value
@@ -1116,6 +1064,8 @@ object Similarity {
       (i, j, s / nn - (b(tri + i) / nn) * (b(tri + j) / nn))
     }.toDF("i", "j", "cov")
       .select(col("i"), col("j"),
+        // + 0.0 canonicalizes IEEE signed zero: round(-1e-9, 6) is -0.0,
+        // and the driver's value hash distinguishes ±0.0 (r8 red row)
         (round(col("cov"), scale) + lit(0.0)).as("cov"))
   }
 

@@ -171,28 +171,14 @@ private[graft] object QCorpus {
       // State: 25 rows per version, constant in stream length.
       (s, dir) => {
         val state = Scratch.dir("stream-ws-state")
-        val cp = Scratch.dir("stream-ws-cp")
-        // staged once per JVM and shared with the other 4-batch twins
-        // (r17): state/checkpoint dirs above stay per-invocation
-        val srcDir = QShared.streamDocSrc4(s, dir)
-        val schema = Tables.table(s, dir, "documents").schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        stream.select(col("doc_id"), col("n_chars"))
+        runToEnd(tableStream(s, dir, "documents", files = 4)
+          .select(col("doc_id"), col("n_chars"))
           .writeStream
           .foreachBatch { (b: DataFrame, bid: Long) =>
             graft.streaming.StreamOps.weightedSampleBatch(
               b, "doc_id", "n_chars", k = 25, state, bid, salt = "ws")
-          }
-          .option("checkpointLocation", cp)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        val statePath = new org.apache.hadoop.fs.Path(state)
-        val stateFs = statePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val lastBid =
-          graft.streaming.StreamOps.listVersions(stateFs, statePath).max
-        s.read.parquet(s"$state/v_$lastBid")
+          })
+        graft.streaming.StreamOps.latestVersion(s, state)
           .select(col("doc_id"), col("n_chars"),
             round(col("es_key"), 6).as("es_key"))
           .orderBy("doc_id")
@@ -598,31 +584,13 @@ private[graft] object QCorpus {
       // the static corpus.
       (s, dir) => {
         val state = Scratch.dir("stream-cm-state")
-        val cp = Scratch.dir("stream-cm-cp")
-        // staged once per JVM and shared with the other 4-batch twins
-        // (r17): state/checkpoint dirs above stay per-invocation
-        val srcDir = QShared.streamDocSrc4(s, dir)
-        val schema = Tables.table(s, dir, "documents").schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        val toks = stream.select(
-          TextOps.tokenizeFiltered(col("text"), Stop, Nil).as("toks"))
-        toks.writeStream
+        runToEnd(tableStream(s, dir, "documents", files = 4)
+          .select(TextOps.tokenizeFiltered(col("text"), Stop, Nil).as("toks"))
+          .writeStream
           .foreachBatch { (b: DataFrame, bid: Long) =>
             graft.streaming.StreamOps.countMinBatch(b, "toks", state, bid)
-          }
-          .option("checkpointLocation", cp)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        // list versions through the path's own FileSystem — the same
-        // contract countMinBatch holds for writing them (a
-        // java.io.File listing is driver-local-only; review r17)
-        val statePath = new org.apache.hadoop.fs.Path(state)
-        val stateFs = statePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val lastBid =
-          graft.streaming.StreamOps.listVersions(stateFs, statePath).max
-        val sk = s.read.parquet(s"$state/v_$lastBid")
+          })
+        val sk = graft.streaming.StreamOps.latestVersion(s, state)
         val toksB = docsTokens(s, dir).select(explode(col("toks")).as("w"))
         val exact = toksB.groupBy("w").agg(count(lit(1)).as("exact_cnt"))
         val top = exact.orderBy(col("exact_cnt").desc, col("w")).limit(20)
@@ -772,7 +740,7 @@ private[graft] object QCorpus {
       // foreachBatch kernel with the SAME 1e-9 fixed-point integer
       // accumulation, so stream scores are bit-identical to batch and
       // the q_nb_quality ORACLE grades the stream sink directly.
-      // FileStreamSource → parquet sink (AvailableNow), read back.
+      // File stream source → per-batch parquet sink, read back.
       (s, dir) => {
         val lab = Tables.table(s, dir, "documents")
           .select(col("doc_id"), TextOps.tokenize(col("text")).as("toks"))
@@ -788,22 +756,9 @@ private[graft] object QCorpus {
         val model = s.read.parquet(modelDir)
         val prior = s.read.parquet(priorDir)
         val out = Scratch.dir("stream-nb-out")
-        val cp = Scratch.dir("stream-nb-cp")
-        val schema = Tables.table(s, dir, "documents").schema
-        val src = new java.io.File(s"$dir/documents.parquet")
-        val streamDir =
-          if (src.isDirectory) src.toString
-          else {
-            val d = new java.io.File(Scratch.dir("stream-nb-src"))
-            java.nio.file.Files.copy(src.toPath,
-              new java.io.File(d, "documents.parquet").toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            d.toString
-          }
-        val stream = s.readStream.schema(schema).parquet(streamDir)
-        val toks = stream.select(col("doc_id"),
+        val toks = tableStream(s, dir, "documents").select(col("doc_id"),
           TextOps.tokenize(col("text")).as("toks"))
-        toks.writeStream
+        runToEnd(toks.writeStream
           .foreachBatch { (b: DataFrame, bid: Long) =>
             // idempotent per-batch sink: foreachBatch is at-least-once,
             // so a retried/restarted batch must not append a second
@@ -813,11 +768,7 @@ private[graft] object QCorpus {
             graft.streaming.StreamOps
               .nbScoreBatch(b, "doc_id", "toks", model, prior)
               .write.mode("overwrite").parquet(s"$out/batch_$bid")
-          }
-          .option("checkpointLocation", cp)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
+          })
         s.read.parquet(s"$out/batch_*")
           .select(col("doc_id"), round(col("nb_logit"), 6).as("nb_logit"))
           .orderBy("doc_id")

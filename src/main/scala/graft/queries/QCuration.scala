@@ -501,28 +501,16 @@ private[graft] object QCuration {
       // dropped batch hash-mismatches; the final table also proves the
       // bootstrap path (batch 0 creates manifest-v1 on an empty dir).
       (s, dir) => {
-        val cp = Scratch.dir("stream-snap-cp")
         val tab = Scratch.dir("stream-snap-tab") + "/docs"
-        val docs = Tables.table(s, dir, "documents")
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-        // the 4-file source copy is staged once per JVM (r17); the
-        // snapshot TABLE, its manifests and the checkpoint dir above
-        // stay per-invocation — the ingest-commit protocol under test
-        // runs in full every time
-        val srcDir = graft.ops.DfMemo.cachedPath(docs, "stream-snap-src") { d =>
-          docs.repartition(4).write.mode("overwrite").parquet(d)
-        }
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        stream.writeStream
+        val cols = Seq(col("doc_id"), col("lang"), col("n_chars"))
+        val docs = Tables.table(s, dir, "documents").select(cols: _*)
+        runToEnd(tableStream(s, dir, "documents", files = 4)
+          .select(cols: _*)
+          .writeStream
           .foreachBatch { (b: DataFrame, bid: Long) =>
             Sinks.appendSnapshotBatch(b, tab, "q_stream_snapshot", bid,
               statsCols = Seq("doc_id")): Unit
-          }
-          .option("checkpointLocation", cp)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
+          })
         // simulated offset-commit crash: replay the newest batch id
         val (fs, tp) = (new org.apache.hadoop.fs.Path(tab)
           .getFileSystem(s.sparkContext.hadoopConfiguration),

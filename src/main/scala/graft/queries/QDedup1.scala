@@ -1105,24 +1105,9 @@ private[graft] object QDedup1 {
           .write.mode("overwrite").parquet(modelDir)
         val model = s.read.parquet(modelDir)
         val out = Scratch.dir("stream-score-out")
-        val cp = Scratch.dir("stream-score-cp")
-        val schema = Tables.table(s, dir, "documents").schema
-        // FileStreamSource lists a DIRECTORY; the testdata table may be a
-        // single parquet file — stage it into scratch when it is
-        val src = new java.io.File(s"$dir/documents.parquet")
-        val streamDir =
-          if (src.isDirectory) src.toString
-          else {
-            val d = new java.io.File(Scratch.dir("stream-score-src"))
-            java.nio.file.Files.copy(src.toPath,
-              new java.io.File(d, "documents.parquet").toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            d.toString
-          }
-        val stream = s.readStream.schema(schema).parquet(streamDir)
-        val toks = stream.select(col("doc_id"),
+        val toks = tableStream(s, dir, "documents").select(col("doc_id"),
           TextOps.tokenizeFiltered(col("text"), Stop, Nil).as("toks"))
-        toks.writeStream
+        runToEnd(toks.writeStream
           .foreachBatch { (b: DataFrame, bid: Long) =>
             // idempotent per-batch sink: foreachBatch is at-least-once,
             // so a retried batch overwrites its own directory instead
@@ -1130,11 +1115,7 @@ private[graft] object QDedup1 {
             graft.streaming.StreamOps
               .lmScoreBatch(b, "doc_id", "toks", model)
               .write.mode("overwrite").parquet(s"$out/batch_$bid")
-          }
-          .option("checkpointLocation", cp)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
+          })
         s.read.parquet(s"$out/batch_*")
           .select(col("doc_id"), round(col("xent"), 6).as("xent"))
           .orderBy("doc_id")
@@ -1371,26 +1352,10 @@ private[graft] object QDedup1 {
       // SELECT DISTINCT oracles a stateful streaming query end-to-end.
       (s, dir) => {
         val out = Scratch.dir("stream-dedup-out")
-        val cp = Scratch.dir("stream-dedup-cp")
-        val schema = Tables.table(s, dir, "documents").schema
-        val src = new java.io.File(s"$dir/documents.parquet")
-        val streamDir =
-          if (src.isDirectory) src.toString
-          else {
-            val d = new java.io.File(Scratch.dir("stream-dedup-src"))
-            java.nio.file.Files.copy(src.toPath,
-              new java.io.File(d, "documents.parquet").toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            d.toString
-          }
-        s.readStream.schema(schema).parquet(streamDir)
+        runToEnd(tableStream(s, dir, "documents")
           .select(md5(col("text")).as("h"))
           .dropDuplicates("h")
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", cp)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
+          .writeStream.format("parquet").option("path", out))
         s.read.parquet(out).select(col("h")).orderBy("h")
       },
       Some("SELECT DISTINCT md5(text) AS h FROM documents ORDER BY h")),
@@ -1406,18 +1371,6 @@ private[graft] object QDedup1 {
       // oracle covers join + dedup semantics end-to-end.
       (s, dir) => {
         val out = Scratch.dir("stream-decon-out")
-        val cp = Scratch.dir("stream-decon-cp")
-        val schema = Tables.table(s, dir, "documents").schema
-        val src = new java.io.File(s"$dir/documents.parquet")
-        val streamDir =
-          if (src.isDirectory) src.toString
-          else {
-            val d = new java.io.File(Scratch.dir("stream-decon-src"))
-            java.nio.file.Files.copy(src.toPath,
-              new java.io.File(d, "documents.parquet").toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            d.toString
-          }
         // static side: checkpoint the gram ARRAYS before exploding —
         // Catalyst re-evaluates unaliased array-builders ~7× through
         // explode (the shingleHashes lesson; measured 7.2 s → 0.6 s here)
@@ -1431,7 +1384,7 @@ private[graft] object QDedup1 {
         // explosion crosses an ENCODER boundary (typed flatMap) — the
         // tokenize/shingle work runs exactly once per document
         import s.implicits._
-        val stream = s.readStream.schema(schema).parquet(streamDir)
+        val stream = tableStream(s, dir, "documents")
           .filter(col("doc_id") % 7 =!= 0)
           .select(col("doc_id"),
             TextOps.tokenizeFiltered(col("text"), Stop, Nil).as("toks"))
@@ -1440,12 +1393,9 @@ private[graft] object QDedup1 {
             if (toks.length < 5) Iterator.empty
             else toks.sliding(5).map(w => (id, w.mkString(" ")))
           }.toDF("doc_id", "g")
-        graft.streaming.StreamOps.contaminatedGrams(stream, "doc_id", "g", bench)
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", cp)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
+        runToEnd(graft.streaming.StreamOps
+          .contaminatedGrams(stream, "doc_id", "g", bench)
+          .writeStream.format("parquet").option("path", out))
         // explicit schema: a zero-contamination run leaves the sink with
         // no data files, and schema inference would throw on the read-back
         s.read.schema(org.apache.spark.sql.types.StructType(Seq(
@@ -1480,18 +1430,6 @@ private[graft] object QDedup1 {
       // end-to-end through a real foreachBatch parquet sink.
       (s, dir) => {
         val out = Scratch.dir("stream-wverify-out")
-        val cp = Scratch.dir("stream-wverify-cp")
-        val schema = Tables.table(s, dir, "documents").schema
-        val src = new java.io.File(s"$dir/documents.parquet")
-        val streamDir =
-          if (src.isDirectory) src.toString
-          else {
-            val d = new java.io.File(Scratch.dir("stream-wverify-src"))
-            java.nio.file.Files.copy(src.toPath,
-              new java.io.File(d, "documents.parquet").toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            d.toString
-          }
         val toks = docsTokens(s, dir)
         val idf = vocabIdf(toks).select(col("word").as("tok"), col("idf"))
           .localCheckpoint()
@@ -1503,7 +1441,7 @@ private[graft] object QDedup1 {
         val refSh = refToks.select(col("id"), explode(array_distinct(
             Dedup.tokenShingles(col("toks"), 5))).as("sh"))
           .localCheckpoint()
-        s.readStream.schema(schema).parquet(streamDir)
+        runToEnd(tableStream(s, dir, "documents")
           .filter(col("doc_id") % 7 =!= 0)
           .select(col("doc_id").as("id"),
             TextOps.tokenizeFiltered(col("text"), Stop, Nil).as("toks"))
@@ -1515,11 +1453,7 @@ private[graft] object QDedup1 {
                 .weightedVerifyBatch(b, refW, refSh, idf, k = 5, minJw = 0.1)
                 .write.mode("append").parquet(out)
               ()
-          }
-          .option("checkpointLocation", cp)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
+          })
         // explicit schema: a zero-match run leaves no data files and
         // inference would throw on the read-back
         s.read.schema(org.apache.spark.sql.types.StructType(Seq(
@@ -1578,31 +1512,15 @@ private[graft] object QDedup1 {
       // not just a stateless pass-through.
       (s, dir) => {
         val out = Scratch.dir("stream-window-out")
-        val cp = Scratch.dir("stream-window-cp")
-        val src = new java.io.File(s"$dir/events.parquet")
-        val streamDir =
-          if (src.isDirectory) src.toString
-          else {
-            val d = new java.io.File(Scratch.dir("stream-window-src"))
-            java.nio.file.Files.copy(src.toPath,
-              new java.io.File(d, "events.parquet").toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            d.toString
-          }
-        val schema = s.read.parquet(streamDir).schema
-        val stream = s.readStream.schema(schema).parquet(streamDir)
+        val stream = tableStream(s, dir, "events")
           // same NTZ-wall-clock → UTC-instant adaptation as Tables.events
           // (sessions pin spark.sql.session.timeZone=UTC); watermarks
           // need a TimestampType event-time column
           .select(col("ts").cast(org.apache.spark.sql.types.TimestampType).as("ts"),
             col("event_type"), col("value"))
-        graft.streaming.StreamOps.hourlyCounts(stream)
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", cp)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
+        runToEnd(graft.streaming.StreamOps.hourlyCounts(stream)
+          .writeStream.format("parquet").option("path", out)
+          .outputMode("append"))
         s.read.parquet(out).orderBy("hour_epoch", "event_type")
       },
       Some("""WITH wm AS (SELECT max(ts) - INTERVAL 2 HOUR AS w FROM events)

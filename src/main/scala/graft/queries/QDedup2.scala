@@ -337,30 +337,14 @@ private[graft] object QDedup2 {
       (s, dir) => {
         import s.implicits._
         val out = Scratch.dir("stream-session-out")
-        val cp = Scratch.dir("stream-session-cp")
-        val src = new java.io.File(s"$dir/events.parquet")
-        val streamDir =
-          if (src.isDirectory) src.toString
-          else {
-            val d = new java.io.File(Scratch.dir("stream-session-src"))
-            java.nio.file.Files.copy(src.toPath,
-              new java.io.File(d, "events.parquet").toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            d.toString
-          }
-        val schema = s.read.parquet(streamDir).schema
-        val stream = s.readStream.schema(schema).parquet(streamDir)
+        val stream = tableStream(s, dir, "events")
           .select(col("user_id"),
             col("ts").cast(org.apache.spark.sql.types.TimestampType).as("ts"))
           .as[graft.streaming.StreamOps.SEv]
-        graft.streaming.StreamOps
+        runToEnd(graft.streaming.StreamOps
           .sessionizeStream(stream, gapMs = 1800L * 1000, watermarkDelay = "10 seconds")
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", cp)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
+          .writeStream.format("parquet").option("path", out)
+          .outputMode("append"))
         s.read.parquet(out)
           .select(col("user_id"),
             expr("start_ms div 1000").as("start_s"),
@@ -402,34 +386,18 @@ private[graft] object QDedup2 {
       // state drops nothing it shouldn't.
       (s, dir) => {
         val out = Scratch.dir("stream-join-out")
-        val cp = Scratch.dir("stream-join-cp")
-        val src = new java.io.File(s"$dir/events.parquet")
-        val streamDir =
-          if (src.isDirectory) src.toString
-          else {
-            val d = new java.io.File(Scratch.dir("stream-join-src"))
-            java.nio.file.Files.copy(src.toPath,
-              new java.io.File(d, "events.parquet").toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            d.toString
-          }
-        val schema = s.read.parquet(streamDir).schema
         def side(tpe: String, p: String) =
-          s.readStream.schema(schema).parquet(streamDir)
+          tableStream(s, dir, "events")
             .filter(col("event_type") === tpe)
             .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_uid"),
               col("ts").cast(org.apache.spark.sql.types.TimestampType).as(s"${p}_ts"))
-        graft.streaming.StreamOps.streamIntervalJoin(
+        runToEnd(graft.streaming.StreamOps.streamIntervalJoin(
             side("error", "l"), side("signup", "r"),
             "l_uid", "r_uid", "l_ts", "r_ts", lagSeconds = 3600)
           .select(col("l_id").as("error_id"), col("r_id").as("signup_id"),
             col("l_uid").as("user_id"))
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", cp)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
+          .writeStream.format("parquet").option("path", out)
+          .outputMode("append"))
         s.read.parquet(out).orderBy("error_id", "signup_id")
       },
       Some("""SELECT e.event_id AS error_id, s.event_id AS signup_id,

@@ -522,12 +522,12 @@ private[graft] object QEmbed {
         |FROM bb CROSS JOIN wt""".stripMargin)),
 
     Q("q_embed_cov",  // population covariance matrix of the embedding
-      // table as (i, j, cov) — the PCA/whitening/Mahalanobis input. Each
-      // row expands map-side to ONE d²+d array (outer products ++ the
-      // vector); a single posexplode+groupBy(idx) folds the corpus into
-      // d²+d cells with map-side partial agg, so the exchange carries
-      // partitions×(d²+d) rows no matter the corpus size; the d-row mean
-      // table broadcast-joins back twice to center the raw moments.
+      // table as (i, j, cov) — the PCA/whitening/Mahalanobis input. A
+      // typed CovMoments aggregator folds each partition into one
+      // upper-triangle moment buffer, so the exchange carries
+      // partitions × (d(d+1)/2 + d + 1) doubles no matter the corpus
+      // size; the collected buffer is broadcast and the d² grid emitted
+      // from range(d²), centered and rounded per cell.
       (s, dir) => Similarity.embedCovariance(
           Tables.table(s, dir, "embeddings"), "embedding")
         .orderBy("i", "j"),

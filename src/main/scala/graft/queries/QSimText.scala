@@ -891,13 +891,7 @@ private[graft] object QSimText {
         val (wideM0, cps) = TextStats.nbModelWide(modelR, priorR)
         val wideM = wideM0.localCheckpoint()
         val out = Scratch.dir("stream-lang-out")
-        val cp = Scratch.dir("stream-lang-cp")
-        // staged once per JVM and shared with the other 4-batch twins
-        val srcDir = QShared.streamDocSrc4(s, dir)
-        val schema = Tables.table(s, dir, "documents").schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        langClfProject(stream)
+        runToEnd(langClfProject(tableStream(s, dir, "documents", files = 4))
           .writeStream
           .foreachBatch { (b: DataFrame, bid: Long) =>
             // persist: the classify kernel and the boot-label join both
@@ -909,11 +903,7 @@ private[graft] object QSimText {
               .join(bb.select(col("doc_id"), col("boot")), Seq("doc_id"))
               .write.mode("overwrite").parquet(s"$out/batch_$bid")
             finally { bb.unpersist(): Unit }
-          }
-          .option("checkpointLocation", cp)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
+          })
         s.read.parquet(s"$out/batch_*")
           .select(col("doc_id"), col("boot"), col("lang_pred"), col("logit"))
           .orderBy("doc_id")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -291,6 +291,16 @@ object StreamOps {
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("v_")).map(_.drop(2).toLong)
+
+  /** The newest `v_<bid>` version under `dir` — the final running state
+    * of a versioned-state stream ([[countMinBatch]],
+    * [[weightedSampleBatch]]) once it ran to the end. Listed through
+    * the path's own FileSystem, the contract the writers hold. */
+  def latestVersion(spark: SparkSession, dir: String): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    spark.read.parquet(s"$dir/v_${listVersions(fs, path).max}")
+  }
 
   /** tf·idf term-weight vectors (id, tok, w) for [[weightedVerifyBatch]]:
     * per-doc term counts times the STATIC idf side-input, idf rounded

@@ -130,6 +130,33 @@ object Oracles {
     (lambda, if (flip) v.map(-_) else v)
   }
 
+  /** Population covariance (i, j, cov) of an embedding column by a
+    * whole-plan explode, independent of `Similarity.embedCovariance`'s
+    * CovMoments fold: each row expands to its d² outer-product cells
+    * followed by the vector itself, one posexplode + groupBy(idx) sums
+    * them, and the d-row mean table joins back twice to center the raw
+    * moments. Cells round to `scale` then `+0.0`, as the library does.
+    */
+  def covByExplode(emb: DataFrame, vecCol: String, scale: Int = 6): DataFrame = {
+    val v = emb.select(KMeansOps.asDouble(col(vecCol)).as("v"))
+      .filter(size(col("v")) > 0)
+    val d = v.select(size(col("v"))).head().getInt(0)
+    val sums = v.select(posexplode(concat(
+        flatten(transform(col("v"), x => transform(col("v"), y => x * y))),
+        col("v"))).as(Seq("idx", "x")))
+      .groupBy(col("idx")).agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
+    val mu = sums.filter(col("idx") >= d * d)
+      .select((col("idx") - d * d).cast("int").as("i"), (col("s") / col("n")).as("mu"))
+    sums.filter(col("idx") < d * d)
+      .select((col("idx") / d).cast("int").as("i"),
+        pmod(col("idx"), lit(d)).cast("int").as("j"), col("s"), col("n"))
+      .join(broadcast(mu.select(col("i"), col("mu").as("mui"))), Seq("i"))
+      .join(broadcast(mu.select(col("i").as("j"), col("mu").as("muj"))), Seq("j"))
+      .select(col("i"), col("j"),
+        (round(col("s") / col("n") - col("mui") * col("muj"), scale) +
+          lit(0.0)).as("cov"))
+  }
+
   /** Deterministic synthetic MJPEG AVIs in [[Multimodal.MediaSchema]]:
     * the geometry and gradients of `Multimodal.syntheticAvi`, but each
     * frame is a real ImageIO JPEG ('MJPG' handler, '00dc' chunks). JPEG

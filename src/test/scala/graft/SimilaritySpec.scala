@@ -447,21 +447,29 @@ class SimilaritySpec extends AnyFunSuite {
     (0 until 64).foreach(i => assert(real((i, i)) >= 0.0, "diagonal = variance ≥ 0"))
   }
 
-  test("embedCovariance large-d route: parity with explode path at d=64; closed form at d=256") {
-    // parity: the DEFAULT route at the corpus's d=64 is CovMoments
-    // since r17 (threshold 128 → 8); force the explode route back via
-    // a large threshold and compare cell-for-cell at the oracle
-    // precision (both round to 6 dp — one rounding-boundary ulp is the
-    // only admissible difference)
-    val small = Similarity.embedCovariance(emb, "embedding", largeDThreshold = 1000)
-      .as[(Int, Int, Double)].collect().map { case (i, j, c) => (i, j) -> c }.toMap
-    val large = Similarity.embedCovariance(emb, "embedding")
-      .as[(Int, Int, Double)].collect().map { case (i, j, c) => (i, j) -> c }.toMap
-    assert(large.size == small.size && small.size == 64 * 64)
-    small.foreach { case (k, c) =>
-      assert(math.abs(large(k) - c) <= 1.0000001e-6, s"cell $k: ${large(k)} vs $c") }
+  test("embedCovariance: an input with no non-empty vector yields an empty frame") {
+    val empty = Seq.empty[(Long, Seq[Float])].toDF("id", "v")
+    val blank = Seq((1L, Seq.empty[Float])).toDF("id", "v")
+    Seq(empty, blank).foreach { in =>
+      val cov = Similarity.embedCovariance(in, "v")
+      assert(cov.columns.toSeq == Seq("i", "j", "cov"))
+      assert(cov.count() == 0L)
+    }
+  }
 
-    // d=256 — a width the explode path would materialize 65 792 doubles
+  test("embedCovariance: parity with an explode oracle at d=64; closed form at d=256") {
+    // the CovMoments fold against an independent whole-plan explode,
+    // cell-for-cell at the oracle precision (both round to 6 dp — one
+    // rounding-boundary ulp is the only admissible difference)
+    val ref = Oracles.covByExplode(emb, "embedding")
+      .as[(Int, Int, Double)].collect().map { case (i, j, c) => (i, j) -> c }.toMap
+    val got64 = Similarity.embedCovariance(emb, "embedding")
+      .as[(Int, Int, Double)].collect().map { case (i, j, c) => (i, j) -> c }.toMap
+    assert(got64.size == ref.size && ref.size == 64 * 64)
+    ref.foreach { case (k, c) =>
+      assert(math.abs(got64(k) - c) <= 1.0000001e-6, s"cell $k: ${got64(k)} vs $c") }
+
+    // d=256 — a width the explode oracle would materialize 65 792 doubles
     // PER ROW for; deterministic synthetic data, closed-form expected
     val d = 256
     val n = 40

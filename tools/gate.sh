@@ -23,7 +23,7 @@ TEST_LOG=out/gate-test.log
 sbt -batch -Dsbt.log.noformat=true "Test/compile" test | tee "$TEST_LOG"
 # a spec that stops being discovered lowers the count without failing
 # anything: hold the passing test count to a committed floor
-MIN_TESTS=320
+MIN_TESTS=324
 N_TESTS=$(sed -n 's/.*Tests: succeeded \([0-9][0-9]*\), .*/\1/p' "$TEST_LOG" | tail -1)
 if [ -z "$N_TESTS" ] || [ "$N_TESTS" -lt "$MIN_TESTS" ]; then
   echo "GATE REFUSED: ${N_TESTS:-no} passing tests, floor is $MIN_TESTS" >&2
